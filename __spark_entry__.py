@@ -653,68 +653,67 @@ def _prepared(name: str, fn: Callable[[SparkSession, str], DataFrame]):
 
 
 # The driver's correctness gate reads the FIRST 50 entries of
-# queries(). Round-15 rotation (same rule as r14; tests/test_claims.py
+# queries(). Round-16 rotation (same rule as r14/r15; tests/test_claims.py
 # fails if any registered entry's latest driver CORRECTNESS row falls
 # more than 2 rounds behind without a window slot): lead with the 41
-# entries last driver-checked in round 12 — the full staleness
-# frontier — then fill the 9 remaining slots from the round-13
-# frontier with the rows this optimization round touches (the zonal
-# family rides the fixture-bucket layout change, the q8 IVF probe and
-# the hybrid-RRF pair are r15 verdict items #7/#9). Displaced entries
-# (all r13/r14-driver-green) keep SF1/SF10 selfcheck coverage.
+# entries last driver-checked in round 13 — the full staleness
+# frontier — then the 6 zonal rows whose plans the mask-first layer
+# join rewrote, then 3 entries of the round-14 frontier. Displaced
+# entries (all r14/r15-driver-green) keep SF1/SF10 selfcheck coverage.
 _GATE_WINDOW: list[str] = [
-    # -- the 41 entries last driver-checked in round 12
-    "aggregate_variants",
-    "approx_distinct",
-    "array_functions_showcase",
-    "asof_join_events_orders",
-    "correlated_subquery",
-    "cross_join_dims",
-    "cube_order_counts",
-    "curation_url_canonicalize",
-    "datetime_functions_showcase",
-    "dedup_incremental_append",
-    "dedup_simhash_neardup",
-    "grouping_sets_revenue",
-    "interval_join_events",
-    "json_extract_events",
-    "mapshed_suite",
-    "multimodal_decode_stub",
-    "multimodal_frame_sample",
-    "pandas_udf_showcase",
-    "pivot_event_counts",
-    "raster_grouped_count_nodata",
-    "rollup_revenue",
-    "sampling_corpus_mix_bpe",
-    "sampling_decontaminated_mix_disk",
-    "scalar_functions_showcase",
-    "search_bm25_disk_topk",
-    "search_bm25_index_append",
-    "search_bm25_index_compact",
-    "semi_anti_customers",
-    "set_ops_customers",
-    "similarity_ann_ivf_append",
-    "similarity_cosine_neardup",
-    "stream_index_append",
-    "string_agg_ordered",
-    "text_bpe_token_counts",
-    "text_fingerprints",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_token_counts",
-    "top_customers_by_revenue",
-    "window_running_total",
-    "windows_showcase",
-    # -- round-13 frontier rows touched by this round's changes
+    # -- the 41 entries last driver-checked in round 13
+    "raster_average",
+    "raster_grouped_sum",
+    "udtf_word_positions",
+    "graph_pagerank",
+    "lib_contamination_check",
+    "lib_cosine_neardup_wide",
+    "lib_repetition_scores",
+    "lib_semantic_dedup_pairs",
+    "text_unigram_surprisal",
+    "text_bigram_surprisal",
+    "embedding_quantize_int8",
+    "similarity_cosine_topk_pandas",
+    "sampling_corpus_mix",
+    "text_quality_percentile_filter",
+    "text_chunk_documents",
+    "semantic_dedup_components",
+    "pipeline_curate_corpus",
+    "dedup_neardup_components",
+    "sampling_deterministic_split",
+    "sampling_stratified_sample",
+    "sampling_pack_token_batches",
+    "sampling_epoch_shuffle",
+    "table_profile",
+    "text_pii_redact",
+    "text_normalize",
+    "search_bm25_topk",
+    "search_bm25_indexed_topk",
+    "cdc_changelog_merge",
+    "sessionize_events",
+    "dedup_incremental_batch",
+    "text_duplicate_spans",
+    "text_classifier_score",
+    "retention_cohorts",
+    "funnel_conversion",
+    "basket_pair_affinities",
+    "curation_domain_rate_cap",
+    "dedup_bloom_probe",
+    "cdc_scd2_history",
+    "skew_join_salted",
+    "maintenance_zorder",
+    "source_zonemap_prune",
+    # -- zonal rows rebuilt on the mask-first layer join
     "raster_grouped_count",
+    "raster_grouped_count_nodata",
     "raster_grouped_count_many",
     "raster_grouped_average",
     "raster_lines_join",
-    "raster_summary",
     "multi_operation",
-    "similarity_ann_ivf_q8_topk",
-    "search_hybrid_rrf_topk",
-    "search_hybrid_rrf_ivf_topk",
+    # -- round-14 frontier
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
 ]
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mmw_geoprocessing_spark.operators.zonal import PIXEL_KEY, join_layers
+from mmw_geoprocessing_spark.operators.zonal import PIXEL_KEY, mask_join
 from mmw_geoprocessing_spark.sources import fixtures as fx
 
 # template -> (kind, group rasters, target)
@@ -102,7 +102,7 @@ def template_df(
 
     def _shape(df: DataFrame, key_sql: str | None = None) -> DataFrame:
         # selectExpr: one parsed projection per template (plan-
-        # construction hot path, see zonal.join_layers note)
+        # construction hot path)
         return df.selectExpr(
             f"'{label}' AS op_label",
             "aoi_id",
@@ -112,8 +112,7 @@ def template_df(
 
     if kind == "grouped_count":
         return _shape(
-            join_layers(layers)
-            .join(masks, on=PIXEL_KEY, how="inner")
+            mask_join(masks, layers)
             .groupBy("aoi_id", *vals)
             .agg(F.count(F.lit(1)).cast("double").alias("value"))
         )
@@ -131,16 +130,15 @@ def template_df(
         lp_keys = ["aoi_id", *PIXEL_KEY] if "aoi_id" in lp.columns else list(PIXEL_KEY)
         aoi_line_pixels = masks.join(lp, on=lp_keys, how="left_semi")
         return _shape(
-            join_layers(layers)
-            .join(aoi_line_pixels, on=PIXEL_KEY, how="inner")
+            mask_join(aoi_line_pixels, layers)
             .groupBy("aoi_id", *vals)
             .agg(F.count(F.lit(1)).cast("double").alias("value"))
         )
-    tgt = fx.raster_df(spark, target).withColumnRenamed("value", "_t")
+    tgt = fx.raster_df(spark, target)
     if kind == "average":
         # inner join: target-absent tiles are never visited (O3 key set)
         return _shape(
-            masks.join(tgt, on=PIXEL_KEY, how="inner")
+            masks.join(tgt.withColumnRenamed("value", "_t"), on=PIXEL_KEY, how="inner")
             .groupBy("aoi_id")
             .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value")),
             key_sql="'List(0)'",
@@ -148,24 +146,14 @@ def template_df(
     if kind == "grouped_sum":
         # O8 contract: group-layer key set, target left-joined
         return _shape(
-            join_layers(layers)
-            .join(masks, on=PIXEL_KEY, how="inner")
-            .join(tgt, on=PIXEL_KEY, how="left")
+            mask_join(masks, layers, tgt)
             .groupBy("aoi_id", *vals)
             .agg(F.sum(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value"))
         )
-    # grouped_average: union key set (target FULL OUTER + NODATA re-fill,
+    # grouped_average: union key set (the target's presence counts,
     # zonal.raster_grouped_average / reference joinCollectionLayers)
-    from mmw_geoprocessing_spark.functions.nodata import NODATA_INT
-
-    uni = join_layers(layers).join(tgt, on=PIXEL_KEY, how="full")
-    refill = [
-        F.coalesce(F.col(f"v{i}"), F.lit(NODATA_INT)).alias(f"v{i}")
-        for i in range(1, len(rasters) + 1)
-    ]
     return _shape(
-        uni.select(*PIXEL_KEY, *refill, "_t")
-        .join(masks, on=PIXEL_KEY, how="inner")
+        mask_join(masks, layers, tgt, target_in_key_set=True)
         .groupBy("aoi_id", *vals)
         .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value"))
     )

@@ -2,7 +2,10 @@
 
 Every operator is one instance of the reference's single plan shape
 (SURVEY.md §0): scan → N-way full-outer layer join on pixel key →
-polygon-mask join → hash aggregate grouped by the value tuple.
+polygon-mask join → hash aggregate grouped by the value tuple. The
+operators evaluate it mask first, as the reference does (it crops every
+layer to the AOI before joining them, Utils.scala:34-41,221-232): see
+``mask_join``.
 
 Inputs are *pixel tables*: ``(key_col INT, key_row INT, cell_col INT,
 cell_row INT, value INT|DOUBLE)`` — the long-form equivalent of the
@@ -11,10 +14,13 @@ are ``(key_col, key_row, cell_col, cell_row)`` pixel sets, the output of
 rasterizing an AOI polygon (Geoprocessing.scala:356).
 
 Scale design (100 TB):
-- Layer joins are equi-joins on 4 int columns; with layers stored
-  partitioned/bucketed by ``(key_col, key_row)`` Catalyst plans them as
-  co-partitioned sort-merge joins with no extra shuffle, and AOI bbox
-  predicates prune partitions at the scan.
+- The plan starts from the AOI mask: each layer is LEFT-joined onto the
+  mask rows (``mask_join``), so the join never materializes a layer
+  beyond the AOI. The joins are equi-joins on the 4 pixel-key columns;
+  with mask and layers bucketed on that key, Catalyst plans them as
+  co-partitioned sort-merge joins (merge-hinted) that keep the mask's
+  partitioning — the only Exchange is the one feeding the final
+  aggregate. AOI bbox predicates prune partitions at the scan.
 - Aggregation output is tiny (a few hundred value tuples), so partial
   (map-side) aggregation collapses nearly all rows before the single
   cheap shuffle; AQE coalesces the post-shuffle partitions.
@@ -44,10 +50,12 @@ def join_layers(layers: Sequence[DataFrame]) -> DataFrame:
 
     Returns columns ``key_col,key_row,cell_col,cell_row,v1..vN`` (vi INT,
     NODATA-filled).
+
+    This whole-layer form is the reference the tests compare against;
+    the operators build on ``mask_join``. Its coalesced keys lose the
+    layers' bucket partitioning, so a mask joined to it re-shuffles the
+    whole joined layer.
     """
-    # selectExpr strings: one parsed call per projection instead of
-    # per-Column py4j round-trips (the N-way join is the hot shared
-    # builder — mapshed constructs it 5x per fresh suite plan)
     out = layers[0].selectExpr(*PIXEL_KEY, "value AS v1")
     for i, layer in enumerate(layers[1:], start=2):
         out = out.join(
@@ -57,6 +65,61 @@ def join_layers(layers: Sequence[DataFrame]) -> DataFrame:
         )
     fills = [f"coalesce(v{i}, {NODATA_INT}) AS v{i}" for i in range(1, len(layers) + 1)]
     return out.selectExpr(*PIXEL_KEY, *fills)
+
+
+def mask_join(
+    mask: DataFrame,
+    layers: Sequence[DataFrame],
+    target: DataFrame | None = None,
+    target_in_key_set: bool = False,
+) -> DataFrame:
+    """The layer join restricted to the pixels of ``mask``, built from the
+    mask outward: ``join_layers(layers)`` inner-joined to the mask gives
+    the same rows.
+
+    Each layer is LEFT-joined onto the mask rows (``value AS v{i}`` plus a
+    ``true`` presence flag); a row is kept when any key-set layer has the
+    pixel, and missing values are filled with NODATA. Presence is the
+    flag, not ``value IS NOT NULL``: NODATA pixels are stored as NULL
+    values and still count.
+
+    ``target`` is LEFT-joined the same way and returned unfilled as
+    ``_t``. With ``target_in_key_set`` its presence also keeps a row (the
+    reference joins ``targetLayer +: rasterLayers``); without it the key
+    set is the group layers' alone.
+
+    Every join is merge-hinted: mask and layers are bucketed on the pixel
+    key, so each is a sort-merge join that needs no Exchange and keeps
+    the mask's partitioning (the planner would otherwise broadcast-build
+    each layer per fresh plan, a shape that cannot exist at 100 TB).
+
+    Returns ``[aoi_id,] key_col, key_row, cell_col, cell_row, v1..vN[, _t]``
+    — ``aoi_id`` when the mask carries one.
+    """
+    extra = ["aoi_id"] if "aoi_id" in mask.columns else []
+    out = mask.select(*extra, *PIXEL_KEY)
+    flags = []
+    for i, layer in enumerate(layers, start=1):
+        out = out.join(
+            layer.selectExpr(*PIXEL_KEY, f"value AS v{i}", f"true AS _p{i}").hint("merge"),
+            on=PIXEL_KEY,
+            how="left",
+        )
+        flags.append(f"_p{i}")
+    tail = []
+    if target is not None:
+        out = out.join(
+            target.selectExpr(*PIXEL_KEY, "value AS _t", "true AS _pt").hint("merge"),
+            on=PIXEL_KEY,
+            how="left",
+        )
+        if target_in_key_set:
+            flags.append("_pt")
+        tail = ["_t"]
+    fills = [f"coalesce(v{i}, {NODATA_INT}) AS v{i}" for i in range(1, len(layers) + 1)]
+    return out.where(" OR ".join(f"{f} IS NOT NULL" for f in flags)).selectExpr(
+        *extra, *PIXEL_KEY, *fills, *tail
+    )
 
 
 def _value_cols(n: int) -> list[F.Column]:
@@ -70,13 +133,8 @@ def raster_grouped_count(layers: Sequence[DataFrame], mask: DataFrame) -> DataFr
     Output: ``(list_key STRING, cnt BIGINT)``.
     """
     vals = _value_cols(len(layers))
-    # merge hint (optimization r14): the mask fixture is bucketed on
-    # the pixel key, so the hinted join is a zero-exchange sort-merge;
-    # the planner's broadcast pick pays a per-fresh-plan collect+build
-    # of the mask (measured 0.95 s -> 0.64 s median at sf0.1 bucketed)
     return (
-        join_layers(layers)
-        .join(mask.select(*PIXEL_KEY).hint("merge"), on=PIXEL_KEY, how="inner")
+        mask_join(mask.select(*PIXEL_KEY), layers)
         .groupBy(*vals)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(list_key(*vals).alias("list_key"), "cnt")
@@ -92,21 +150,8 @@ def raster_grouped_count_many(layers: Sequence[DataFrame], mask_many: DataFrame)
     Output: ``(aoi_id STRING, list_key STRING, cnt BIGINT)``.
     """
     vals = _value_cols(len(layers))
-    # merge hint (optimization r14): the many-AOI mask is the UNION of
-    # all AOIs (~1 M rows at sf0.1) — the planner's broadcast choice
-    # collects+ships it per fresh plan (measured 2.66 s vs 1.40 s
-    # median at sf0.1) and cannot exist at 100 TB; the mask fixture is
-    # bucketed on the pixel key, so the merge join is zero-exchange.
-    # The single-AOI operators keep the broadcast: one rasterized AOI
-    # is bounded (the reference ships it to every executor the same
-    # way) and measured a wash locally.
     return (
-        join_layers(layers)
-        .join(
-            mask_many.select("aoi_id", *PIXEL_KEY).hint("merge"),
-            on=PIXEL_KEY,
-            how="inner",
-        )
+        mask_join(mask_many.select("aoi_id", *PIXEL_KEY), layers)
         .groupBy(F.col("aoi_id"), *vals)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("aoi_id", list_key(*vals).alias("list_key"), "cnt")
@@ -144,23 +189,15 @@ def raster_grouped_average(
     (joinCollectionLayers, Utils.scala:221-232), so the pixel universe is
     the UNION of target and group keys — a target pixel on a tile the
     group layers miss is still counted, under an all-NODATA group tuple.
-    Hence the FULL OUTER target join with a NODATA re-fill.
+    Hence the target's presence counts towards the key set.
 
     Output: ``(list_key STRING, avg_value DOUBLE)``.
     """
     vals = _value_cols(len(layers))
-    uni = join_layers(layers).join(
-        target.withColumnRenamed("value", "_target"), on=PIXEL_KEY, how="full"
-    )
-    refill = [
-        F.coalesce(F.col(f"v{i}"), F.lit(NODATA_INT)).alias(f"v{i}")
-        for i in range(1, len(layers) + 1)
-    ]
     return (
-        uni.select(*PIXEL_KEY, *refill, "_target")
-        .join(mask.select(*PIXEL_KEY), on=PIXEL_KEY, how="inner")
+        mask_join(mask.select(*PIXEL_KEY), layers, target, target_in_key_set=True)
         .groupBy(*vals)
-        .agg(F.avg(F.coalesce(F.col("_target"), F.lit(0.0))).alias("avg_value"))
+        .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("avg_value"))
         .select(list_key(*vals).alias("list_key"), "avg_value")
     )
 
@@ -181,20 +218,10 @@ def raster_grouped_sum(
     Output: ``(list_key STRING, sum_value DOUBLE)``.
     """
     vals = _value_cols(len(layers))
-    # merge hints (optimization r14): both the mask and the target are
-    # bucketed on the pixel key -> the whole chain is zero-exchange
-    # sort-merge (measured 1.22 s -> 0.85 s median at sf0.1 bucketed;
-    # the unhinted plan broadcast-built both sides per fresh plan)
     return (
-        join_layers(layers)
-        .join(mask.select(*PIXEL_KEY).hint("merge"), on=PIXEL_KEY, how="inner")
-        .join(
-            target.withColumnRenamed("value", "_target").hint("merge"),
-            on=PIXEL_KEY,
-            how="left",
-        )
+        mask_join(mask.select(*PIXEL_KEY), layers, target)
         .groupBy(*vals)
-        .agg(F.sum(F.coalesce(F.col("_target"), F.lit(0.0))).alias("sum_value"))
+        .agg(F.sum(F.coalesce(F.col("_t"), F.lit(0.0))).alias("sum_value"))
         .select(list_key(*vals).alias("list_key"), "sum_value")
     )
 
@@ -208,29 +235,22 @@ def raster_lines_join(
     196-198); a pixel crossed by 5 lines counts once (:225-227).
 
     Distinctness needs NO explicit dropDuplicates (the r5 10-exchange
-    regression): both clips are LEFT SEMI joins — the joined layers have
-    one row per pixel (full outer of unique-keyed layers), so a semi
-    join against the (duplicated) AOI-clipped line pixels matches each
-    pixel at most once, and the semi join's build-side hash table dedups
-    for free. Two joins + one aggregate; the per-pixel dedup exchange
-    and its double HashAggregate disappear from the plan.
+    regression): the AOI clip is ``mask LEFT SEMI line_pixels`` — the
+    mask has one row per pixel, so the semi join against the
+    (duplicated) line pixels keeps each touched pixel exactly once. The
+    mask must stay on the left: with the line pixels on the left, a
+    pixel crossed by k lines would be counted k times. The clipped mask
+    then feeds ``mask_join``; line pixels are bucketed on the pixel key
+    like the mask, so the merge-hinted semi join needs no Exchange.
 
     Output: ``(list_key STRING, cnt BIGINT)``.
     """
     vals = _value_cols(len(layers))
-    # merge hints (optimization r14): line pixels and mask are both
-    # bucketed on the pixel key -> both semi joins are zero-exchange
-    # sort-merge (measured 1.48 s -> 0.91 s median at sf0.1 bucketed;
-    # the unhinted plan broadcast-built each semi-join build side per
-    # fresh plan)
-    line_in_aoi = line_pixels.select(*PIXEL_KEY).join(
-        mask.select(*PIXEL_KEY).hint("merge"),
-        on=PIXEL_KEY,
-        how="left_semi",  # clip to AOI
+    on_lines = mask.select(*PIXEL_KEY).join(
+        line_pixels.select(*PIXEL_KEY).hint("merge"), on=PIXEL_KEY, how="left_semi"
     )
     return (
-        join_layers(layers)
-        .join(line_in_aoi.hint("merge"), on=PIXEL_KEY, how="left_semi")
+        mask_join(on_lines, layers)
         .groupBy(*vals)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(list_key(*vals).alias("list_key"), "cnt")

@@ -398,8 +398,9 @@ def read_layers_for_aoi(
     layout: GridLayout | None = None,
 ) -> list[DataFrame]:
     """The reference's ``cropRastersToAOI`` (Utils.scala:34-41): one
-    bbox-pruned scan per requested layer, ready for ``zonal.join_layers``.
-    Duplicate ids are read once (U3, Geoprocessing.scala:28-29)."""
+    bbox-pruned scan per requested layer, ready to be LEFT-joined onto
+    the AOI mask by ``zonal.mask_join``. Duplicate ids are read once (U3,
+    Geoprocessing.scala:28-29)."""
     key_bounds = key_bounds_for_polys(polys, layout) if polys else None
     seen: dict[str, DataFrame] = {}
     for lid in layer_ids:

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in, not whichever copy is installed
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 

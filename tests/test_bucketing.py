@@ -132,6 +132,59 @@ def test_bucketed_fixture_reattaches_from_disk(spark, tables, monkeypatch):
         fx.clear_fixture_cache()
 
 
+def _only_exchange_feeds_final_aggregate(plan: str) -> bool:
+    """The physical plan has exactly one Exchange, and it sits between
+    the final and the partial HashAggregate."""
+    lines = plan.splitlines()
+    hits = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    return (
+        len(hits) == 1
+        and 0 < hits[0] < len(lines) - 1
+        and "HashAggregate" in lines[hits[0] - 1]
+        and "HashAggregate" in lines[hits[0] + 1]
+    )
+
+
+def _grouped_plans(spark):
+    from mmw_geoprocessing_spark.operators import mapshed, zonal
+
+    nlcd, soil, gwn = (fx.raster_df(spark, r) for r in ("nlcd", "soil", "gwn"))
+    slope, awc = fx.raster_df(spark, "slope"), fx.raster_df(spark, "awc")
+    mask = fx.mask_df(spark, "huc8_01")
+    masks = fx.mask_all_df(spark).where(F.col("aoi_id").isin("huc8_01", "huc12_01"))
+    return {
+        "grouped_count_2": zonal.raster_grouped_count([nlcd, soil], mask),
+        "grouped_count_3": zonal.raster_grouped_count([nlcd, soil, gwn], mask),
+        "grouped_average": zonal.raster_grouped_average([nlcd], slope, mask),
+        "grouped_sum": zonal.raster_grouped_sum([nlcd], awc, mask),
+        "lines_join": zonal.raster_lines_join(
+            [nlcd, soil], fx.line_pixels_df(spark), mask
+        ),
+        "template_grouped_count": mapshed.template_df(
+            spark, "nlcd_soil", "grouped_count", ["nlcd", "soil"], None, masks
+        ),
+    }
+
+
+def test_mask_first_operators_shuffle_only_into_final_aggregate(spark, tables, monkeypatch):
+    """Over bucketed fixtures the mask-first join chain (mask LEFT JOIN
+    each layer, merge-hinted) keeps the mask's bucket partitioning: the
+    only Exchange of each grouped plan is the one feeding the final
+    HashAggregate. A whole-layer full-outer join re-shuffles its
+    coalesced keys before the mask join and fails this."""
+    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_FIXTURES", "1")
+    fx.clear_fixture_cache()
+    try:
+        for name, df in _grouped_plans(spark).items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Bucketed: true" in plan, (name, plan[:3000])
+            assert _only_exchange_feeds_final_aggregate(plan), (name, plan[:3000])
+            assert df.count() > 0, name
+    finally:
+        monkeypatch.delenv("SPARK_GRAFT_BUCKETED_FIXTURES", raising=False)
+        fx.clear_fixture_cache()
+
+
 # ------------------------------------------------ TPC-H bucketed joins
 # (round 10 final: the BASELINE.md TPC-H table's recorded follow-up,
 # exercised — bucketing orders/lineitem on orderkey removes the join

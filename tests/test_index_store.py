@@ -17,7 +17,7 @@ import sys
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 STORE = "/tmp/spark_graft_index_store"
 
@@ -111,7 +111,7 @@ def test_fingerprint_tracks_source_identity(tmp_path):
 
 _FRESH_PROC = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from mmw_geoprocessing_spark.session import get_spark
 from mmw_geoprocessing_spark.operators import search
 
@@ -139,7 +139,7 @@ def test_fresh_process_serves_from_disk_without_rebuild(spark, tables):
     before = _success_mtimes()
     assert before, "in-session call should have built the indexes"
     proc = subprocess.run(
-        [sys.executable, "-c", _FRESH_PROC % SF_DIR],
+        [sys.executable, "-c", _FRESH_PROC % (REPO_ROOT, SF_DIR)],
         capture_output=True,
         text=True,
         timeout=300,
@@ -825,7 +825,7 @@ def test_partitioned_index_compacts_per_cell(spark):
 
 _APPEND_PROC = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from mmw_geoprocessing_spark.session import get_spark
 from mmw_geoprocessing_spark.sources import index_store as ixs
 name, fp, tag, lo = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
@@ -853,7 +853,7 @@ def test_concurrent_append_processes_are_exactly_once(spark):
 
     def launch(tag, lo):
         return subprocess.Popen(
-            [sys.executable, "-c", _APPEND_PROC, name, fp, tag, str(lo)],
+            [sys.executable, "-c", _APPEND_PROC % REPO_ROOT, name, fp, tag, str(lo)],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,

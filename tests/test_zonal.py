@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mmw_geoprocessing_spark.functions.nodata import NODATA_INT
@@ -294,3 +295,136 @@ def test_mapshed_suite_rejects_sweep_only_aois(spark, tables):
 
     with pytest.raises(ValueError, match="not present in mask_all"):
         mapshed.mapshed_suite(spark, [mapshed.MAPSHED_AOIS[0], fx.SWEEP_ONLY_AOIS[0]])
+
+
+def test_null_valued_layer_rows_count_as_nodata(spark, tables):
+    """A layer row whose value is NULL (a stored NODATA pixel) is present:
+    it counts under the NODATA key. A ``value IS NOT NULL`` presence test
+    would drop it."""
+    gwn = fx.raster_df(spark, "gwn")
+    mask = fx.mask_df(spark, "huc8_01")
+    rows = {r["list_key"]: r["cnt"] for r in zonal.raster_grouped_count([gwn], mask).collect()}
+    null_rows = (
+        gwn.where(F.col("value").isNull())
+        .join(mask, on=zonal.PIXEL_KEY, how="left_semi")
+        .count()
+    )
+    assert null_rows > 0
+    assert rows[f"List({NODATA_INT})"] == null_rows
+
+
+# ------------------------------------------------ mask-first == reference
+# Every grouped operator and mapshed template kind, against the
+# whole-layer reference form: ``join_layers`` (full outer), then the mask.
+
+
+def _ref_masked(layers, mask):
+    return zonal.join_layers(layers).join(mask, on=zonal.PIXEL_KEY, how="inner")
+
+
+def _ref_union_with_target(layers, target):
+    refill = [
+        F.coalesce(F.col(f"v{i}"), F.lit(NODATA_INT)).alias(f"v{i}")
+        for i in range(1, len(layers) + 1)
+    ]
+    return (
+        zonal.join_layers(layers)
+        .join(target.withColumnRenamed("value", "_t"), on=zonal.PIXEL_KEY, how="full")
+        .select(*zonal.PIXEL_KEY, *refill, "_t")
+    )
+
+
+def _grouped(df, n, agg, keys=()):
+    from mmw_geoprocessing_spark.functions.nodata import list_key
+
+    vals = [F.col(f"v{i}") for i in range(1, n + 1)]
+    return df.groupBy(*keys, *vals).agg(F.expr(agg).alias("value")).select(
+        *keys, list_key(*vals).alias("list_key"), F.col("value").cast("double")
+    )
+
+
+_CNT = "count(1)"
+_T_SUM = "sum(coalesce(_t, 0.0D))"
+_T_AVG = "avg(coalesce(_t, 0.0D))"
+
+
+def _operator_pair(spark, kind, rasters, target_id, aoi):
+    """(mask-first answer, reference answer) for one operator kind."""
+    from mmw_geoprocessing_spark.operators import mapshed
+
+    layers = [fx.raster_df(spark, r) for r in rasters]
+    target = fx.raster_df(spark, target_id)
+    mask = fx.mask_df(spark, aoi).select(*zonal.PIXEL_KEY)
+    lines = fx.line_pixels_df(spark).select(*zonal.PIXEL_KEY)
+    masks = fx.mask_all_df(spark).where(F.col("aoi_id") == aoi)
+    n = len(layers)
+    if kind == "grouped_count":
+        return zonal.raster_grouped_count(layers, mask), _grouped(
+            _ref_masked(layers, mask), n, _CNT
+        )
+    if kind == "grouped_count_many":
+        return zonal.raster_grouped_count_many(layers, masks), _grouped(
+            _ref_masked(layers, masks), n, _CNT, ["aoi_id"]
+        )
+    if kind == "grouped_average":
+        ref = _ref_union_with_target(layers, target).join(mask, on=zonal.PIXEL_KEY)
+        return zonal.raster_grouped_average(layers, target, mask), _grouped(ref, n, _T_AVG)
+    if kind == "grouped_sum":
+        ref = _ref_masked(layers, mask).join(
+            target.withColumnRenamed("value", "_t"), on=zonal.PIXEL_KEY, how="left"
+        )
+        return zonal.raster_grouped_sum(layers, target, mask), _grouped(ref, n, _T_SUM)
+    if kind == "lines_join":
+        clipped = lines.join(mask, on=zonal.PIXEL_KEY, how="left_semi")
+        ref = zonal.join_layers(layers).join(clipped, on=zonal.PIXEL_KEY, how="left_semi")
+        return zonal.raster_lines_join(layers, lines, mask), _grouped(ref, n, _CNT)
+
+    # mapshed.template_df kinds, aoi_id in the grouping key
+    tmpl_kind = kind.removeprefix("template_")
+    got = mapshed.template_df(
+        spark, "t", tmpl_kind, list(rasters), target_id, masks
+    ).drop("op_label")
+    if tmpl_kind == "grouped_count":
+        ref = _grouped(_ref_masked(layers, masks), n, _CNT, ["aoi_id"])
+    elif tmpl_kind == "lines_join":
+        clipped = masks.join(lines, on=zonal.PIXEL_KEY, how="left_semi")
+        ref = _grouped(_ref_masked(layers, clipped), n, _CNT, ["aoi_id"])
+    elif tmpl_kind == "grouped_sum":
+        ref = _ref_masked(layers, masks).join(
+            target.withColumnRenamed("value", "_t"), on=zonal.PIXEL_KEY, how="left"
+        )
+        ref = _grouped(ref, n, _T_SUM, ["aoi_id"])
+    else:
+        ref = _ref_union_with_target(layers, target).join(masks, on=zonal.PIXEL_KEY)
+        ref = _grouped(ref, n, _T_AVG, ["aoi_id"])
+    return got, ref
+
+
+def _answer(df):
+    return {tuple(r[:-1]): float(r[-1]) for r in df.collect()}
+
+
+@pytest.mark.parametrize("aoi", ["huc8_01", "huc12_03", "huc12_empty"])
+@pytest.mark.parametrize(
+    "rasters,target_id",
+    [(("gwn",), "slope"), (("nlcd", "gwn", "soil"), "awc"), (("nlcd",), "gwn")],
+    ids=["gwn-slope", "nlcd_gwn_soil-awc", "nlcd-gwn"],
+)
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "grouped_count", "grouped_count_many", "grouped_average", "grouped_sum",
+        "lines_join", "template_grouped_count", "template_lines_join",
+        "template_grouped_sum", "template_grouped_average",
+    ],
+)
+def test_mask_first_equals_whole_layer_join(spark, tables, kind, rasters, target_id, aoi):
+    """Mask-first operators return the answers of the full-outer
+    ``join_layers``-then-mask form, over layers with missing tiles (gwn
+    lacks every 4th tile column; as a target it narrows the key set) and
+    over a HUC-8, a HUC-12 and an AOI no line touches."""
+    got, ref = _operator_pair(spark, kind, rasters, target_id, aoi)
+    want = _answer(ref)
+    assert _answer(got) == pytest.approx(want, rel=1e-12)
+    if kind not in ("lines_join", "template_lines_join") or aoi != "huc12_empty":
+        assert want, "the reference answer is non-empty"
