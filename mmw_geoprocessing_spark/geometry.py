@@ -7,9 +7,11 @@ shapely/pyproj, so:
 - GeoJSON parsing/validation is pure-python (json);
 - PixelIsPoint rasterization (cell-center containment, the reference
   default, Utils.scala:109-118) is an exact, vectorized numpy
-  ray-casting test inside an Arrow-batched ``mapInPandas`` — the
-  executor-side kernel the reference runs via GeoTrellis'
-  ``Rasterizer.foreachCellByMultiPolygon`` (Geoprocessing.scala:356);
+  ray-casting test run on the driver over bounded chunks of candidate
+  cells, its hits handed to Spark as a local relation — as the
+  reference rasterizes in its service process via GeoTrellis'
+  ``Rasterizer.foreachCellByMultiPolygon`` (Geoprocessing.scala:356).
+  Building a GeoJSON mask therefore launches no Spark job;
 - ``buffer(0)`` regularization is pure-python: a self-crossing
   (invalid) ring is detected by ``ring_is_simple`` and filled by the
   NONZERO-WINDING rule instead of even-odd — our pinned repair
@@ -46,11 +48,9 @@ from __future__ import annotations
 
 import json
 import math
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mmw_geoprocessing_spark.errors import MissingVectorCRSError, UnknownCRSError
 from mmw_geoprocessing_spark.plans.model import VALID_CRS
@@ -228,165 +228,172 @@ def rasterize_polygons(
 
     Overlapping polygons rasterize as their union (per-polygon even-odd
     OR'd across polygons, reference Utils.scala:70-73); ring coords are
-    converted to grid units driver-side so the kernel is layout-free.
+    converted to grid units first so the kernel is layout-free.
+
+    The kernel runs on the driver over chunks of at most
+    ``_CANDIDATE_CHUNK`` candidate cells, and the hits become a local
+    relation (``LocalTableScan``): building the mask launches no Spark
+    job, as the reference rasterizes in its own service process.
     """
-    if not polys:
-        return spark.range(0).selectExpr(
-            "CAST(0 AS INT) key_col", "CAST(0 AS INT) key_row",
-            "CAST(0 AS INT) cell_col", "CAST(0 AS INT) cell_row"
-        ).limit(0)
+    import numpy as np
+    import pandas as pd
 
     T = layout.tile_size
+    hits: list[tuple] = []
     # per-polygon ring groups, in grid units (cells are unit squares)
     poly_rings = [
         [[layout.to_grid(x, y) for x, y in ring] for ring in poly] for poly in polys
     ]
-
-    x0, y0, x1, y1 = bbox(poly_rings)
-    kc0, kc1 = int(math.floor(x0 / T)), int(math.floor(x1 / T))
-    kr0, kr1 = int(math.floor(y0 / T)), int(math.floor(y1 / T))
-
-    # clip the candidate tile range to the layer extent (see
-    # GridLayout.extent_keys) — the analogue of partition pruning on
-    # the layer scan side
-    if layout.extent_keys is not None:
-        ekc0, ekr0, ekc1, ekr1 = layout.extent_keys
-        kc0, kc1 = max(kc0, ekc0), min(kc1, ekc1)
-        kr0, kr1 = max(kr0, ekr0), min(kr1, ekr1)
-        if kc0 > kc1 or kr0 > kr1:
-            return spark.range(0).selectExpr(
-                "CAST(0 AS INT) key_col", "CAST(0 AS INT) key_row",
-                "CAST(0 AS INT) cell_col", "CAST(0 AS INT) cell_row"
-            ).limit(0)
-
-    # candidate cells: bbox-pruned cartesian of tile/cell coordinates —
-    # the analogue of the reference's tile-level Intersects pushdown
-    cand = (
-        spark.range(kc0, kc1 + 1).selectExpr("CAST(id AS INT) AS key_col")
-        .crossJoin(spark.range(kr0, kr1 + 1).selectExpr("CAST(id AS INT) AS key_row"))
-        .crossJoin(spark.range(T).selectExpr("CAST(id AS INT) AS cell_col"))
-        .crossJoin(spark.range(T).selectExpr("CAST(id AS INT) AS cell_row"))
+    if poly_rings:
+        x0, y0, x1, y1 = bbox(poly_rings)
+        kc0, kc1 = int(math.floor(x0 / T)), int(math.floor(x1 / T))
+        kr0, kr1 = int(math.floor(y0 / T)), int(math.floor(y1 / T))
+        # clip the candidate tile range to the layer extent (see
+        # GridLayout.extent_keys) — the analogue of partition pruning on
+        # the layer scan side
+        if layout.extent_keys is not None:
+            ekc0, ekr0, ekc1, ekr1 = layout.extent_keys
+            kc0, kc1 = max(kc0, ekc0), min(kc1, ekc1)
+            kr0, kr1 = max(kr0, ekr0), min(kr1, ekr1)
+        n_rows = kr1 - kr0 + 1
+        total = max(kc1 - kc0 + 1, 0) * max(n_rows, 0) * T * T
+        # winding-repair flags: an invalid (self-crossing) ring fills by
+        # the NONZERO-WINDING rule — OUR pinned repair convention
+        # (test-pinned on the bowtie), matching GEOS buffer(0) for
+        # positively-wound regions (bowtie -> both lobes, winding ±1;
+        # doubly-wound ring -> filled once, winding ±2). GEOS itself is
+        # orientation- and version-dependent for negatively-wound lobes,
+        # so this is a convention, not pointwise buffer(0) equality.
+        # Valid rings keep even-odd.
+        poly_simple = _poly_simple_flags(poly_rings) if total else []
+        # candidate cells: the bbox-pruned cartesian of tile and cell
+        # coordinates (the analogue of the reference's tile-level
+        # Intersects pushdown), enumerated by flat index one chunk at a
+        # time so memory stays bounded whatever the AOI's size
+        for start in range(0, total, _CANDIDATE_CHUNK):
+            idx = np.arange(start, min(start + _CANDIDATE_CHUNK, total), dtype=np.int64)
+            tile, cell = np.divmod(idx, T * T)
+            kc, kr = np.divmod(tile, n_rows)
+            cand = (kc + kc0, kr + kr0, cell // T, cell % T)
+            cx = (cand[0] * T + cand[2] + 0.5).astype(np.float64)
+            cy = (cand[1] * T + cand[3] + 0.5).astype(np.float64)
+            mask = _cells_in_polys(cx, cy, poly_rings, poly_simple, pixel_is_area)
+            if mask.any():
+                hits.append(tuple(c[mask].astype(np.int32) for c in cand))
+    cols = [np.concatenate(c) for c in zip(*hits)] if hits else [np.empty(0, np.int32)] * 4
+    return spark.createDataFrame(
+        pd.DataFrame(dict(zip(("key_col", "key_row", "cell_col", "cell_row"), cols))),
+        "key_col int, key_row int, cell_col int, cell_row int",
     )
+
+
+# candidate cells per kernel call: bounds the kernel's per-candidate
+# temporaries to a few MB whatever the AOI's bounding box
+_CANDIDATE_CHUNK = 1 << 16
+
+
+def _cells_in_polys(cx, cy, poly_rings, poly_simple, pixel_is_area: bool):
+    """The rasterization kernel: which candidate cells, given by their
+    centers ``(cx, cy)`` in grid units, the union of ``poly_rings``
+    covers — at the center (PixelIsPoint) or anywhere in the closed cell
+    square (PixelIsArea)."""
+    import numpy as np
 
     all_rings = [ring for poly in poly_rings for ring in poly]
-    # winding-repair flags: an invalid (self-crossing) ring fills by the
-    # NONZERO-WINDING rule — OUR pinned repair convention (test-pinned
-    # on the bowtie), matching GEOS buffer(0) for positively-wound
-    # regions (bowtie -> both lobes, winding ±1; doubly-wound ring ->
-    # filled once, winding ±2). GEOS itself is orientation- and
-    # version-dependent for negatively-wound lobes, so this is a
-    # convention, not pointwise buffer(0) equality. Valid rings keep
-    # even-odd.
-    poly_simple = [[ring_is_simple(ring) for ring in poly] for poly in poly_rings]
 
-    def contains_batch(batches: Iterator) -> Iterator:
-        import numpy as np
+    def inside_one(px, py, rings, simple_flags):
+        """Containment for ONE polygon: XOR across rings of the
+        per-ring fill (even-odd for simple rings, nonzero
+        winding for self-crossing rings — the buffer(0) repair)."""
+        acc = np.zeros(len(px), dtype=bool)
+        for ring, simple in zip(rings, simple_flags):
+            r = np.asarray(ring, dtype=np.float64)
+            xs, ys = r[:, 0], r[:, 1]
+            xj, yj = np.roll(xs, 1), np.roll(ys, 1)  # edge: j -> i
+            if simple:
+                ring_fill = np.zeros(len(px), dtype=bool)
+                for i in range(len(xs)):
+                    cond = (ys[i] > py) != (yj[i] > py)
+                    denom = yj[i] - ys[i]
+                    if denom == 0:
+                        continue
+                    xint = xs[i] + (py - ys[i]) / denom * (xj[i] - xs[i])
+                    ring_fill ^= cond & (px < xint)
+            else:
+                wn = np.zeros(len(px), dtype=np.int64)
+                for i in range(len(xs)):
+                    denom = yj[i] - ys[i]
+                    if denom == 0:
+                        continue
+                    xint = xs[i] + (py - ys[i]) / denom * (xj[i] - xs[i])
+                    left = px < xint
+                    up = (ys[i] <= py) & (yj[i] > py)
+                    down = (yj[i] <= py) & (ys[i] > py)
+                    wn += np.where(up & left, 1, 0) - np.where(down & left, 1, 0)
+                ring_fill = wn != 0
+            acc ^= ring_fill
+        return acc
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cx = (pdf.key_col.values * T + pdf.cell_col.values + 0.5).astype(np.float64)
-            cy = (pdf.key_row.values * T + pdf.cell_row.values + 0.5).astype(np.float64)
+    def inside(px, py):
+        """Union across polygons: per-polygon fill, OR."""
+        res = np.zeros(len(px), dtype=bool)
+        for rings, flags in zip(poly_rings, poly_simple):
+            res |= inside_one(px, py, rings, flags)
+        return res
 
-            def inside_one(px, py, rings, simple_flags):
-                """Containment for ONE polygon: XOR across rings of the
-                per-ring fill (even-odd for simple rings, nonzero
-                winding for self-crossing rings — the buffer(0) repair)."""
-                acc = np.zeros(len(px), dtype=bool)
-                for ring, simple in zip(rings, simple_flags):
-                    r = np.asarray(ring, dtype=np.float64)
-                    xs, ys = r[:, 0], r[:, 1]
-                    xj, yj = np.roll(xs, 1), np.roll(ys, 1)  # edge: j -> i
-                    if simple:
-                        ring_fill = np.zeros(len(px), dtype=bool)
-                        for i in range(len(xs)):
-                            cond = (ys[i] > py) != (yj[i] > py)
-                            denom = yj[i] - ys[i]
-                            if denom == 0:
-                                continue
-                            xint = xs[i] + (py - ys[i]) / denom * (xj[i] - xs[i])
-                            ring_fill ^= cond & (px < xint)
-                    else:
-                        wn = np.zeros(len(px), dtype=np.int64)
-                        for i in range(len(xs)):
-                            denom = yj[i] - ys[i]
-                            if denom == 0:
-                                continue
-                            xint = xs[i] + (py - ys[i]) / denom * (xj[i] - xs[i])
-                            left = px < xint
-                            up = (ys[i] <= py) & (yj[i] > py)
-                            down = (yj[i] <= py) & (ys[i] > py)
-                            wn += np.where(up & left, 1, 0) - np.where(down & left, 1, 0)
-                        ring_fill = wn != 0
-                    acc ^= ring_fill
-                return acc
+    mask = inside(cx, cy)
+    if pixel_is_area:
+        # (a) any cell corner inside the polygon
+        for dx, dy in ((-0.5, -0.5), (-0.5, 0.5), (0.5, -0.5), (0.5, 0.5)):
+            mask |= inside(cx + dx, cy + dy)
+        # (b) any polygon vertex inside the cell square
+        x0, y0 = cx - 0.5, cy - 0.5
+        for ring in all_rings:
+            r = np.asarray(ring, dtype=np.float64)
+            for vx, vy in r:
+                mask |= (
+                    (vx >= x0) & (vx <= x0 + 1) & (vy >= y0) & (vy <= y0 + 1)
+                )
+        # (c) any polygon edge crossing any cell edge
+        def seg_cross(p1x, p1y, p2x, p2y, q1x, q1y, q2x, q2y):
+            def orient(ax, ay, bx, by, px, py):
+                return np.sign((bx - ax) * (py - ay) - (by - ay) * (px - ax))
 
-            def inside(px, py):
-                """Union across polygons: per-polygon fill, OR."""
-                res = np.zeros(len(px), dtype=bool)
-                for rings, flags in zip(poly_rings, poly_simple):
-                    res |= inside_one(px, py, rings, flags)
-                return res
+            o1 = orient(p1x, p1y, p2x, p2y, q1x, q1y)
+            o2 = orient(p1x, p1y, p2x, p2y, q2x, q2y)
+            o3 = orient(q1x, q1y, q2x, q2y, p1x, p1y)
+            o4 = orient(q1x, q1y, q2x, q2y, p2x, p2y)
+            crosses = (o1 * o2 <= 0) & (o3 * o4 <= 0)
+            # the sign test alone accepts collinear-but-disjoint
+            # segments (all orients 0): require interval overlap
+            collinear = (o1 == 0) & (o2 == 0) & (o3 == 0) & (o4 == 0)
+            overlap = (
+                (np.minimum(p1x, p2x) <= np.maximum(q1x, q2x))
+                & (np.maximum(p1x, p2x) >= np.minimum(q1x, q2x))
+                & (np.minimum(p1y, p2y) <= np.maximum(q1y, q2y))
+                & (np.maximum(p1y, p2y) >= np.minimum(q1y, q2y))
+            )
+            return np.where(collinear, overlap, crosses)
 
-            mask = inside(cx, cy)
-            if pixel_is_area:
-                # (a) any cell corner inside the polygon
-                for dx, dy in ((-0.5, -0.5), (-0.5, 0.5), (0.5, -0.5), (0.5, 0.5)):
-                    mask |= inside(cx + dx, cy + dy)
-                # (b) any polygon vertex inside the cell square
-                x0, y0 = cx - 0.5, cy - 0.5
-                for ring in all_rings:
-                    r = np.asarray(ring, dtype=np.float64)
-                    for vx, vy in r:
-                        mask |= (
-                            (vx >= x0) & (vx <= x0 + 1) & (vy >= y0) & (vy <= y0 + 1)
-                        )
-                # (c) any polygon edge crossing any cell edge
-                def seg_cross(p1x, p1y, p2x, p2y, q1x, q1y, q2x, q2y):
-                    def orient(ax, ay, bx, by, px, py):
-                        return np.sign((bx - ax) * (py - ay) - (by - ay) * (px - ax))
-
-                    o1 = orient(p1x, p1y, p2x, p2y, q1x, q1y)
-                    o2 = orient(p1x, p1y, p2x, p2y, q2x, q2y)
-                    o3 = orient(q1x, q1y, q2x, q2y, p1x, p1y)
-                    o4 = orient(q1x, q1y, q2x, q2y, p2x, p2y)
-                    crosses = (o1 * o2 <= 0) & (o3 * o4 <= 0)
-                    # the sign test alone accepts collinear-but-disjoint
-                    # segments (all orients 0): require interval overlap
-                    collinear = (o1 == 0) & (o2 == 0) & (o3 == 0) & (o4 == 0)
-                    overlap = (
-                        (np.minimum(p1x, p2x) <= np.maximum(q1x, q2x))
-                        & (np.maximum(p1x, p2x) >= np.minimum(q1x, q2x))
-                        & (np.minimum(p1y, p2y) <= np.maximum(q1y, q2y))
-                        & (np.maximum(p1y, p2y) >= np.minimum(q1y, q2y))
+        cell_edges = [
+            (x0, y0, x0 + 1, y0),
+            (x0 + 1, y0, x0 + 1, y0 + 1),
+            (x0 + 1, y0 + 1, x0, y0 + 1),
+            (x0, y0 + 1, x0, y0),
+        ]
+        for ring in all_rings:
+            r = np.asarray(ring, dtype=np.float64)
+            for (ax, ay), (bx, by) in zip(r, np.roll(r, -1, axis=0)):
+                for (e1x, e1y, e2x, e2y) in cell_edges:
+                    todo = ~mask
+                    if not todo.any():
+                        break
+                    mask |= seg_cross(
+                        np.full_like(cx, ax), np.full_like(cy, ay),
+                        np.full_like(cx, bx), np.full_like(cy, by),
+                        e1x, e1y, e2x, e2y,
                     )
-                    return np.where(collinear, overlap, crosses)
-
-                cell_edges = [
-                    (x0, y0, x0 + 1, y0),
-                    (x0 + 1, y0, x0 + 1, y0 + 1),
-                    (x0 + 1, y0 + 1, x0, y0 + 1),
-                    (x0, y0 + 1, x0, y0),
-                ]
-                for ring in all_rings:
-                    r = np.asarray(ring, dtype=np.float64)
-                    for (ax, ay), (bx, by) in zip(r, np.roll(r, -1, axis=0)):
-                        for (e1x, e1y, e2x, e2y) in cell_edges:
-                            todo = ~mask
-                            if not todo.any():
-                                break
-                            mask |= seg_cross(
-                                np.full_like(cx, ax), np.full_like(cy, ay),
-                                np.full_like(cx, bx), np.full_like(cy, by),
-                                e1x, e1y, e2x, e2y,
-                            )
-            out = pdf[mask]
-            if len(out):
-                yield out
-
-    return cand.mapInPandas(
-        contains_batch, "key_col int, key_row int, cell_col int, cell_row int"
-    )
+    return mask
 
 
 def _poly_simple_flags(polys) -> list[list[bool]]:

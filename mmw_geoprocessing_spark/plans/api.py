@@ -187,20 +187,27 @@ def _layers(spark: SparkSession, input_data: InputData, raster_ids: list[str]):
     # diverge): when a layer carries a _layout.json sidecar, its stored
     # grid must equal the request's resolved layout — the mask is
     # rasterized in the request frame, and a zoom/layer mismatch would
-    # join mismatched pixel keys and return silently wrong results.
+    # join mismatched pixel keys and return silently wrong results. The
+    # same sidecar read gives the layer's value type, which lets the
+    # read declare its schema instead of inferring it in a Spark job.
     req_layout = layout if layout is not None else _layout(input_data)
+    value_types: dict[str, str | None] = {}
     for rid in dict.fromkeys(raster_ids):
         try:
-            stored, _zoom = catalog.read_layer_layout(root, rid)
+            meta = catalog.read_layer_meta(root, rid)
+            value_types[rid] = meta.get("value_type")
+            stored, _zoom = catalog.layout_from_meta(rid, meta)
         except (OSError, ValueError):
-            continue  # no sidecar — caller vouches for the frame
+            continue  # no sidecar or no grid in it — caller vouches for the frame
         if stored != req_layout:
             raise InvalidZoomError(
                 f"layer {rid!r} is stored in grid {stored}, but the request "
                 f"resolves to {req_layout} (zoom {input_data.zoom}); a "
                 "mask/layer frame mismatch would join mismatched pixel keys"
             )
-    return catalog.read_layers_for_aoi(spark, root, raster_ids, polys, layout)
+    return catalog.read_layers_for_aoi(
+        spark, root, raster_ids, polys, layout, value_types=value_types
+    )
 
 
 def run_request(spark: SparkSession, input_data: InputData) -> dict:
@@ -229,6 +236,9 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
 
                 geometry.validate_crs(input_data.shape_crs)
                 labels = [f"shape_{i}" for i in range(len(input_data.shape_geojson))]
+                # clipped to the layer extent like _mask's: candidates
+                # outside the layer grid cannot match any layer tile
+                layout = _with_layer_extent(spark, _layout(input_data))
                 parts = []
                 for label, g in zip(labels, input_data.shape_geojson):
                     polys = geometry.parse_multipolygon(g)
@@ -245,7 +255,7 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
                             spark,
                             polys,
                             input_data.pixel_is_area,
-                            layout=_layout(input_data),
+                            layout=layout,
                         ).withColumn("aoi_id", F.lit(label))
                     )
                 mask_many = parts[0]

@@ -9,6 +9,11 @@ multi-executor cluster at large scale:
 - Arrow on: all pandas UDF / toPandas traffic is Arrow-batched.
 - shuffle partitions default sized for the local fixture scale; on a real
   cluster this should be ~2-3x total cores (AQE coalesces downward).
+- parallel partition discovery only above 1024 paths (Spark's default is
+  32): ``sources.catalog`` hands a read its in-range tile directories,
+  already listed on the driver, and re-listing a few hundred of them on
+  the driver is cheaper than a listing job on the executors, which every
+  catalog request would otherwise launch while its plan is built.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -19,8 +19,8 @@ columns and Catalyst prunes whole tile directories at planning time
 of the reference fetching only Intersects-ing 512x512 tiles.
 
 100 TB design notes:
-- Partition pruning removes the IO, but *partition discovery* still
-  lists the directory tree. ``read_layer`` therefore prunes the
+- Partition pruning removes the IO, but *partition discovery* would
+  still list the directory tree. ``read_layer`` therefore prunes the
   ``layer=``, ``key_col=`` AND ``key_row=`` levels driver-side (cheap
   single-level listings through the Hadoop FileSystem API, so it works
   on ``s3a://``/``hdfs://``/``file:`` roots exactly like the
@@ -33,6 +33,14 @@ of the reference fetching only Intersects-ing 512x512 tiles.
   warning. A metastore-registered external table (partition metadata
   in the catalog) is the next step at real scale and composes with
   this reader unchanged.
+- Planning a read launches no Spark job, as the reference fetches
+  tiles with no schema or listing pass (Utils.scala:22-23, 241-248):
+  the schema is declared from the ``_layout.json`` sidecar's value
+  type instead of inferred from a file footer, and Spark re-lists the
+  handed-over tile directories on the driver (``session.get_spark``
+  raises ``spark.sql.sources.parallelPartitionDiscovery.threshold`` to
+  1024) instead of shipping the listing to executors as a job. Only a
+  layer written without a recorded value type pays an inference job.
 - Tile-interior pixels stay long-form ``(cell_col, cell_row, value)``:
   parquet RLE/dictionary encodes the two cell coordinates to almost
   nothing, the vectorized reader keeps the scan JVM-side, and the pixel
@@ -178,7 +186,8 @@ def write_layer(
     """
     value_type = pixels.schema["value"].dataType.simpleString()
     (
-        pixels.select(PIXEL_COLS)
+        # INT coordinates: the schema read_layer declares for the files
+        pixels.select(*(F.col(c).cast("int").alias(c) for c in PIXEL_KEY), "value")
         .withColumn("layer", F.lit(layer_id))
         .repartition("key_col", "key_row")
         .write.partitionBy("layer", "key_col", "key_row")
@@ -205,14 +214,26 @@ def write_layer(
     )
 
 
+def read_layer_meta(root: str, layer_id: str) -> dict:
+    """The layer's ``_layout.json`` sidecar as written by
+    :func:`write_layer`. Raises OSError when it is missing and
+    ValueError when it is not JSON."""
+    import json
+
+    return json.loads(
+        _read_text(None, os.path.join(root, f"layer={layer_id}", "_layout.json"))
+    )
+
+
 def read_layer_layout(root: str, layer_id: str) -> tuple[GridLayout, int | None]:
     """Recover the grid frame a layer was written with (the reference
     derives the grid FROM the layer, never from the request alone)."""
-    import json
+    return layout_from_meta(layer_id, read_layer_meta(root, layer_id))
 
-    meta = json.loads(
-        _read_text(None, os.path.join(root, f"layer={layer_id}", "_layout.json"))
-    )
+
+def layout_from_meta(layer_id: str, meta: dict) -> tuple[GridLayout, int | None]:
+    """``(layout, zoom)`` from a sidecar dict (:func:`read_layer_meta`);
+    ValueError when the layer was written without grid metadata."""
     if "tile_size" not in meta:
         raise ValueError(f"layer {layer_id!r} sidecar has no grid metadata")
     layout = GridLayout(
@@ -227,12 +248,8 @@ def read_layer_layout(root: str, layer_id: str) -> tuple[GridLayout, int | None]
 def read_layer_value_type(root: str, layer_id: str) -> str | None:
     """The layer's ``value`` column type as recorded at write time
     (``_layout.json`` sidecar), or None when unknowable."""
-    import json
-
     try:
-        return json.loads(
-            _read_text(None, os.path.join(root, f"layer={layer_id}", "_layout.json"))
-        ).get("value_type")
+        return read_layer_meta(root, layer_id).get("value_type")
     except (OSError, ValueError):
         return None
 
@@ -361,23 +378,31 @@ def read_layer(
     and the ``key_col`` level is additionally pruned driver-side before
     discovery (see module notes).
 
-    ``value_type``: the layer's ``value`` column type, used only on the
-    fully-pruned-empty path so an empty read is schema-identical to a
-    non-empty one (a DOUBLE layer like slope must not come back INT and
-    break downstream unions). Default: the write-time type recorded in
-    the ``_layout.json`` sidecar, falling back to INT.
+    ``value_type``: the layer's ``value`` column type. Default: the
+    write-time type recorded in the ``_layout.json`` sidecar. With a
+    type the read declares its schema and plans without a Spark job; a
+    fully-pruned-empty read keeps it too, so a DOUBLE layer like slope
+    does not come back INT and break downstream unions. Without one
+    (a layer written with no recorded type) the schema is inferred, and
+    an empty read falls back to INT.
 
     Output: ``(key_col, key_row, cell_col, cell_row, value)``.
     """
+    if value_type is None:
+        value_type = read_layer_value_type(root, layer_id)
     paths = _pruned_layer_paths(root, layer_id, key_bounds, spark)
     if not paths:
-        vt = value_type or read_layer_value_type(root, layer_id) or "int"
         return spark.range(0).selectExpr(
             *(f"CAST(NULL AS INT) AS {c}" for c in PIXEL_KEY),
-            f"CAST(NULL AS {vt}) AS value",
+            f"CAST(NULL AS {value_type or 'int'}) AS value",
         )
-    df = spark.read.option("basePath", root).parquet(*paths)
-    df = df.where(F.col("layer") == layer_id)
+    reader = spark.read.option("basePath", root)
+    if value_type is not None:
+        reader = reader.schema(
+            f"cell_col INT, cell_row INT, value {value_type}, "
+            "layer STRING, key_col INT, key_row INT"
+        )
+    df = reader.parquet(*paths).where(F.col("layer") == layer_id)
     if key_bounds is not None:
         kc0, kc1, kr0, kr1 = key_bounds
         df = df.where(
@@ -396,16 +421,21 @@ def read_layers_for_aoi(
     layer_ids: list[str],
     polys,
     layout: GridLayout | None = None,
+    value_types: dict[str, str | None] | None = None,
 ) -> list[DataFrame]:
     """The reference's ``cropRastersToAOI`` (Utils.scala:34-41): one
     bbox-pruned scan per requested layer, ready to be LEFT-joined onto
     the AOI mask by ``zonal.mask_join``. Duplicate ids are read once (U3,
-    Geoprocessing.scala:28-29)."""
+    Geoprocessing.scala:28-29).
+
+    ``value_types``: layer value types the caller has already read from
+    the sidecars; ``read_layer`` looks up any layer missing from it."""
     key_bounds = key_bounds_for_polys(polys, layout) if polys else None
+    value_types = value_types or {}
     seen: dict[str, DataFrame] = {}
     for lid in layer_ids:
         if lid not in seen:
-            seen[lid] = read_layer(spark, root, lid, key_bounds)
+            seen[lid] = read_layer(spark, root, lid, key_bounds, value_types.get(lid))
     return [seen[lid] for lid in layer_ids]
 
 

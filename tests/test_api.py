@@ -618,3 +618,43 @@ def test_multi_streamlines_matches_run_lines_join(spark, tables):
     assert via_multi["shape_0"]["nlcd_streams"] == {
         k: float(v) for k, v in via_run.items()
     }
+
+
+def test_count_many_geojson_clips_candidates_to_layer_extent(spark, tables, monkeypatch):
+    """GeoJSON RasterGroupedCountMany rasterizes against the layer grid's
+    extent, as /run's single mask and /multi do: a polygon reaching far
+    outside the grid returns the same counts as its twin cut off just
+    past the grid, and the rasterizer never tests a candidate cell
+    outside the grid."""
+    import json
+
+    from mmw_geoprocessing_spark import geometry
+    from mmw_geoprocessing_spark.sources import fixtures as fx
+
+    def rect(x1, y1):
+        ring = [[2.3, 1.7], [x1, 1.7], [x1, y1], [2.3, y1], [2.3, 1.7]]
+        return json.dumps({"type": "Polygon", "coordinates": [ring]})
+
+    tested = []
+    kernel = geometry._cells_in_polys
+    monkeypatch.setattr(
+        geometry, "_cells_in_polys",
+        lambda cx, *a: tested.append(len(cx)) or kernel(cx, *a),
+    )
+
+    def count_many(shape):
+        return api.run_request(
+            spark,
+            InputData(
+                "RasterGroupedCountMany", rasters=["nlcd", "soil"],
+                shape_geojson=[shape], shape_crs="ConusAlbers", pixel_is_area=True,
+            ),
+        )
+
+    kc0, kr0, kc1, kr1 = fx.grid_key_extent(spark)
+    x_end, y_end = (kc1 + 1) * 8, (kr1 + 1) * 8  # grid edge, fixture frame
+    far = count_many(rect(x_end + 4000.7, y_end + 3000.2))
+    grid_cells = (kc1 - kc0 + 1) * (kr1 - kr0 + 1) * 64
+    assert 0 < sum(tested) <= grid_cells
+    twin = count_many(rect(x_end + 1.9, y_end + 2.9))
+    assert far == twin and far[0]

@@ -415,3 +415,103 @@ def test_metastore_table_preserves_value_type(spark, tables):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _wait_for_listener_bus(spark):
+    """Job start events reach the status tracker through the listener
+    bus; drain it before asking which jobs a group ran."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_geojson_request_plans_without_spark_jobs(spark, tables, monkeypatch):
+    """Building a GeoJSON request against the catalog launches no Spark
+    job: the mask is rasterized on the driver into a local relation, and
+    each layer read declares its schema from the sidecar and re-lists
+    its (here 64, above Spark's default threshold of 32) tile
+    directories on the driver. Only the collect runs jobs, as in the
+    reference, which rasterizes in its service process and fetches the
+    intersecting tiles with no schema or listing pass."""
+    import json
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from mmw_geoprocessing_spark import geometry
+    from mmw_geoprocessing_spark.plans import api
+    from mmw_geoprocessing_spark.plans.model import InputData
+
+    root = "/tmp/spark_graft_jobfree_catalog"
+    shutil.rmtree(root, ignore_errors=True)
+    shape = json.dumps(
+        {"type": "Polygon",
+         "coordinates": [[[0.5, 0.5], [255.5, 0.5], [255.5, 15.5], [0.5, 15.5], [0.5, 0.5]]]}
+    )
+    requests = [
+        InputData("RasterGroupedCount", rasters=["nlcd"],
+                  shape_geojson=[shape], shape_crs="ConusAlbers"),
+        InputData("RasterSummary", rasters=["slope"],
+                  shape_geojson=[shape], shape_crs="ConusAlbers"),
+    ]
+    try:
+        for rid in ("nlcd", "slope"):  # INT and DOUBLE value types
+            catalog.write_layer(fx.raster_df(spark, rid), root, rid, layout=geometry.GridLayout())
+        assert catalog.read_layer_value_type(root, "slope") == "double"
+        assert len(catalog._pruned_layer_paths(root, "slope", (0, 31, 0, 1), spark)) == 64
+        fx.grid_key_extent(spark)  # the fixture extent is cached once per session
+        monkeypatch.setenv("SPARK_GRAFT_CATALOG_ROOT", root)
+
+        planned = []
+        monkeypatch.setattr(DataFrame, "collect", lambda df: planned.append(df) or [])
+        sc = spark.sparkContext
+        group = "test-geojson-plan-without-jobs"
+        sc.setJobGroup(group, "plan GeoJSON requests without collecting")
+        try:
+            for req in requests:
+                api.run_request(spark, req)
+            _wait_for_listener_bus(spark)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            assert len(planned) == 2
+            # the same plans do run jobs once collected: the check can fail
+            monkeypatch.undo()
+            assert planned[0].collect() and planned[1].collect()
+            _wait_for_listener_bus(spark)
+            assert list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_driver_mask_is_a_local_relation(spark):
+    """The rasterizer's output plans as a LocalTableScan: no Python
+    worker (MapInPandas / PythonMapInArrow) and no cross join."""
+    from mmw_geoprocessing_spark import geometry
+
+    polys = [[[(0.5, 0.5), (40.5, 0.5), (40.5, 20.5), (0.5, 20.5), (0.5, 0.5)]]]
+    for pixel_is_area in (False, True):
+        plan = _scan_plan(geometry.rasterize_polygons(spark, polys, pixel_is_area))
+        assert "LocalTableScan" in plan, plan
+        for node in ("MapInPandas", "PythonMapInArrow", "CartesianProduct", "BroadcastNestedLoopJoin"):
+            assert node not in plan, plan
+
+
+def test_layer_without_sidecar_value_type_reads_by_inference(spark, tables):
+    """A layer whose sidecar records no value type (written before the
+    sidecar carried one) still reads, with its real value type, because
+    the reader falls back to schema inference."""
+    root = "/tmp/spark_graft_infer_catalog"
+    shutil.rmtree(root, ignore_errors=True)
+    try:
+        catalog.write_layer(fx.raster_df(spark, "slope"), root, "slope")
+        with open(os.path.join(root, "layer=slope", "_layout.json"), "w") as f:
+            f.write("{}")
+        assert catalog.read_layer_value_type(root, "slope") is None
+        for key_bounds in (None, (0, 31, 0, 1)):
+            got = catalog.read_layer(spark, root, "slope", key_bounds=key_bounds)
+            assert dict(got.dtypes)["value"] == "double"
+            assert got.columns == ["key_col", "key_row", "cell_col", "cell_row", "value"]
+        want = fx.raster_df(spark, "slope")
+        got = catalog.read_layer(spark, root, "slope")
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -3,11 +3,13 @@ PixelIsArea divergence (FIXTURES.md §7.8, reference Utils.scala:109-118)."""
 
 from __future__ import annotations
 
+import pytest
+
 from mmw_geoprocessing_spark import geometry
 
 
-def _mask_set(spark, polys, pixel_is_area):
-    df = geometry.rasterize_polygons(spark, polys, pixel_is_area)
+def _mask_set(spark, polys, pixel_is_area, layout=geometry.DEFAULT_LAYOUT):
+    df = geometry.rasterize_polygons(spark, polys, pixel_is_area, layout)
     return {
         (r.key_col, r.key_row, r.cell_col, r.cell_row) for r in df.collect()
     }
@@ -151,6 +153,61 @@ def test_line_layout_scaled(spark):
     assert len(rows) == 21
 
 
+# An AOI 128 x 18 tiles wide: 147,456 candidate cells, three driver
+# chunks at the default chunk size. Vertices sit off the half-cell
+# lattice, so no cell center lies on an edge.
+_WIDE_SIMPLE = [[[
+    (3.17, 2.29), (611.43, 9.71), (1019.61, 71.13), (702.37, 139.83),
+    (388.91, 88.41), (151.77, 141.57), (40.33, 97.19), (3.17, 2.29),
+]]]
+_WIDE_SELF_CROSSING = [[[  # a bowtie: its two edges cross mid-AOI
+    (3.17, 2.29), (1019.61, 141.57), (1019.61, 2.29), (3.17, 141.57), (3.17, 2.29),
+]]]
+
+
+@pytest.mark.parametrize("chunk", [None, 777])
+@pytest.mark.parametrize("pixel_is_area", [False, True])
+@pytest.mark.parametrize("polys", [_WIDE_SIMPLE, _WIDE_SELF_CROSSING], ids=["simple", "bowtie"])
+def test_mask_independent_of_candidate_chunks(spark, monkeypatch, chunk, pixel_is_area, polys):
+    """The driver-side kernel runs over bounded chunks of candidates; a
+    chunk boundary must not change the mask. The whole AOI's mask equals
+    the union of the masks of its per-tile-row pieces (each one chunk),
+    for a simple and a self-crossing ring, in both pixel modes, at the
+    default chunk size and at one that cuts through tiles."""
+    import dataclasses
+
+    if chunk is not None:
+        monkeypatch.setattr(geometry, "_CANDIDATE_CHUNK", chunk)
+    whole = _mask_set(spark, polys, pixel_is_area)
+    assert not geometry.ring_is_simple(_WIDE_SELF_CROSSING[0][0])
+    pieces = set()
+    for kr in range(18):
+        row = dataclasses.replace(geometry.DEFAULT_LAYOUT, extent_keys=(0, kr, 127, kr))
+        pieces |= _mask_set(spark, polys, pixel_is_area, row)
+    assert whole and whole == pieces
+    assert {k[1] for k in whole} == set(range(18))  # the AOI spans every tile row
+
+
+def test_point_mask_equals_scalar_containment_on_cell_centers(spark):
+    """PixelIsPoint over several chunks equals the vectorized scalar
+    containment helper evaluated on every candidate cell center."""
+    import numpy as np
+
+    whole = _mask_set(spark, _WIDE_SIMPLE, pixel_is_area=False)
+    gx, gy = np.meshgrid(np.arange(128 * 8), np.arange(18 * 8), indexing="ij")
+    gx, gy = gx.ravel(), gy.ravel()
+    inside = geometry._points_in_polys_batch(
+        gx + 0.5, gy + 0.5, _WIDE_SIMPLE, geometry._poly_simple_flags(_WIDE_SIMPLE)
+    )
+    want = {
+        (int(x) // 8, int(y) // 8, int(x) % 8, int(y) % 8)
+        for x, y in zip(gx[inside], gy[inside])
+    }
+    assert geometry.ring_is_simple(_WIDE_SIMPLE[0][0])
+    assert len(gx) > 2 * geometry._CANDIDATE_CHUNK  # three chunks
+    assert whole == want
+
+
 # ---------------------------------------------------------------------------
 # Reprojection (projection.py) — closed-form Albers / Web Mercator
 # ---------------------------------------------------------------------------
@@ -205,7 +262,7 @@ def test_cross_crs_transform_hub(lon, lat):
     assert abs(ax - ax2) < 1e-6 and abs(ay - ay2) < 1e-6
 
 
-def test_latlng_request_matches_native_crs_request(spark):
+def test_latlng_request_matches_native_crs_request(spark, tables):
     """End-to-end reprojection parity (reference Utils.scala:96-98):
     a GeoJSON AOI given in LatLng against an Albers-framed 30 m grid
     produces the SAME mask as the identical AOI given natively in
