@@ -272,7 +272,9 @@ def raster_summary(targets: Sequence[DataFrame], mask: DataFrame) -> DataFrame:
     back into the per-raster shape. The per-branch COUNT(*) equals the
     shared mask row count, so ``sum(coalesce(v,0))/n`` is the identical
     avg; an empty mask yields zero rows via the ``n > 0`` guard (the
-    union shape's empty-aggregate contract).
+    union shape's empty-aggregate contract). ``inline()`` over the one
+    stat row emits the rasters in input order, so no sort (and no
+    range-partitioning Exchange) is needed.
 
     Output: ``(raster_idx INT, min_value, avg_value, max_value DOUBLE)``.
     """
@@ -300,7 +302,6 @@ def raster_summary(targets: Sequence[DataFrame], mask: DataFrame) -> DataFrame:
         joined.agg(*aggs)
         .where(F.col("_n") > 0)
         .selectExpr(f"inline(array({structs}))")
-        .orderBy("raster_idx")
     )
 
 

@@ -39,7 +39,7 @@ Fixture inventory (mirrors FIXTURES.md):
 
 from __future__ import annotations
 
-import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -342,25 +342,55 @@ def set_active_dir(sf_dir: str, spark: SparkSession | None = None) -> None:
 
 
 _BUCKET_DIR = "/tmp/spark_graft_bucketed_fixtures"
-# Layout parameter, env-tunable (optimization r14): bucket count caps
-# the parallelism of every zero-exchange bucketed join stage, so it is
-# a deployment knob (≈ cluster cores at 100 TB), not a constant. The
-# default stays 16 — the bench-comparable local layout; the tag
-# fingerprint below folds the value in, so changing it rebuilds.
-# MEASURED both ways in r15 (plans/r15/bucket_ab_*.json, interleaved
-# in-process): at sf0.1 16 beats 32 on every zonal row (sub-MB tasks —
-# scheduling overhead, not parallelism, is the binding cost), while at
-# the sf1~ replica the trade inverts (32 wins 5 of 7, mapshed
-# 11.6→10.3 s) — i.e. size the bucket count to per-bucket DATA, not to
-# a constant.
-_N_BUCKETS = int(os.environ.get("SPARK_GRAFT_FIXTURE_BUCKETS", "16"))
+# Bucket count of the bucketed fixtures, derived from the fixture
+# world's pixel count (one pixel per lineitem row): the largest power of
+# two <= pixels / 2^17, at least 1. Every zero-exchange join stage runs
+# one task per bucket, so the count sets both the per-task data and the
+# per-request task overhead. It gives 1 bucket at sf0.001, 4 at sf0.1
+# (600,000 pixels), 32 at sf1 and 256 at sf10. 2^17 pixels per bucket
+# is the largest power-of-two target that picks both measured optima:
+# - sf1~ replica, in-process A/B (plans/r15/bucket_ab_*.json): 32
+#   buckets beat 16 on 5 of 7 zonal/mapshed rows (mapshed 11.6 -> 10.3 s);
+# - sf0.1 service, 4 vCPU, 4 closed-loop clients on the run_aoi stream:
+#   16/8/4/2/1 buckets gave 3.57/6.08/6.34/6.65/7.00 req/s, and the
+#   serial huc8 2-layer count 0.63/0.43/0.45/0.48/0.60 s — sub-MB
+#   tasks pay scheduling overhead, not a lack of parallelism.
+# Powers of two change the layout only when the pixel count doubles. The
+# tag fingerprint in _bucketed_fixture folds the count in, so a copy
+# written at another count is rebuilt, never re-attached.
+_PIXELS_PER_BUCKET = 1 << 17
+# Overrides the derived count when set (tests, tools/r15_bucket_ab.py).
+_N_BUCKETS: int | None = None
+# (session id, sf_dir) -> lineitem row count, memoized like _EXTENT_CACHE
+_PIXEL_COUNT_CACHE: dict[tuple[int, str], int] = {}
+_PIXEL_COUNT_LOCK = threading.Lock()
+
+
+def bucket_count_for(pixels: int) -> int:
+    """Bucket count for a fixture world of ``pixels`` pixels: the largest
+    power of two <= ``pixels / _PIXELS_PER_BUCKET``, at least 1."""
+    return 1 << max(0, (pixels // _PIXELS_PER_BUCKET).bit_length() - 1)
+
+
+def fixture_bucket_count(spark: SparkSession, sf_dir: str) -> int:
+    """The bucket count of this session's bucketed fixtures for
+    ``sf_dir``: ``_N_BUCKETS`` when set, else derived from the
+    ``lineitem`` row count (counted once per session and sf_dir)."""
+    if _N_BUCKETS is not None:
+        return _N_BUCKETS
+    key = (id(spark), sf_dir)
+    with _PIXEL_COUNT_LOCK:
+        if key not in _PIXEL_COUNT_CACHE:
+            _PIXEL_COUNT_CACHE[key] = spark.table("lineitem").count()
+        return bucket_count_for(_PIXEL_COUNT_CACHE[key])
 
 
 def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Materialize the fixture as a parquet table bucketed + sorted on
     the full pixel key: layer/mask joins then plan with NO Exchange on
     the bucketed sides (tests/test_bucketing.py pins the planner
-    contract). One-time write per (session, sf); paid during warm-up.
+    contract). ``fixture_bucket_count`` sets the bucket count. One-time
+    write per (session, sf); paid during warm-up.
     Measured at sf0.1: raster_grouped_count 1.34 s -> 0.66 s.
 
     The table name is keyed on a content fingerprint (source parquet
@@ -375,13 +405,14 @@ def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
         fp = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
     except OSError:
         fp = sf_dir
+    n_buckets = fixture_bucket_count(spark, sf_dir)
     # The bucket SPEC and the fixture's DERIVATION SQL are part of the
     # fingerprint: a stale on-disk copy written under a different
-    # _N_BUCKETS / PIXEL_KEY must never be re-attached under the new
+    # bucket count / PIXEL_KEY must never be re-attached under the new
     # CLUSTERED BY metadata (ADVICE r7), and a fixture whose defining
     # CTE changed (e.g. widening AOI_DEFS changes mask_all's content)
     # must rebuild rather than re-attach the old rows
-    fp += f"|b{_N_BUCKETS}|{','.join(PIXEL_KEY)}"
+    fp += f"|b{n_buckets}|{','.join(PIXEL_KEY)}"
     fp += "|" + with_fixtures(f"SELECT * FROM {name}", name)
     tag = hashlib.md5(fp.encode()).hexdigest()[:8]
     tbl = f"sgb_{tag}_{name}"
@@ -401,7 +432,7 @@ def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
         spark.sql(
             f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
+            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
     if not spark.catalog.tableExists(tbl):
         df = spark.sql(with_fixtures(f"SELECT * FROM {name}", name))
@@ -410,8 +441,8 @@ def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
             # -> exactly ONE file per bucket, which is the condition for
             # the scan to report the sortBy order (outputOrdering) and
             # let sort-merge joins elide their per-side Sort entirely
-            df.repartition(_N_BUCKETS, *PIXEL_KEY)
-            .write.bucketBy(_N_BUCKETS, *PIXEL_KEY)
+            df.repartition(n_buckets, *PIXEL_KEY)
+            .write.bucketBy(n_buckets, *PIXEL_KEY)
             .sortBy(*PIXEL_KEY)
             .option("path", f"{_BUCKET_DIR}/{tbl}")
             .mode("overwrite")
@@ -435,7 +466,10 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
       joins re-shuffle.
     - ``SPARK_GRAFT_BUCKETED_FIXTURES=1``: parquet tables bucketed on
       the pixel key — the production layout: layer joins plan with no
-      Exchange (see _bucketed_fixture). bench.py enables this.
+      Exchange (see _bucketed_fixture). bench.py enables this. The
+      bucket count follows the session's pixel count
+      (``fixture_bucket_count``), so every fixture of one sf_dir —
+      masks and layers alike — shares it and joins co-partitioned.
     """
     import os
 
@@ -468,6 +502,7 @@ def clear_fixture_cache() -> None:
     _FIXTURE_CACHE.clear()
     _PYRAMID_CACHE.clear()
     _EXTENT_CACHE.clear()
+    _PIXEL_COUNT_CACHE.clear()
     from mmw_geoprocessing_spark.sources import tpch_layout
 
     tpch_layout.clear_tpch_layout_cache()

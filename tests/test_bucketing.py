@@ -13,7 +13,11 @@ Two planner facts this pins (found by measurement):
 
 from __future__ import annotations
 
+import re
 import shutil
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,11 +106,19 @@ def test_bucketed_aggregation_avoids_exchange_on_bucket_keys(spark, bucketed_tab
     assert agg.count() > 0
 
 
-def test_bucketed_fixture_reattaches_from_disk(spark, tables, monkeypatch):
+# Bucket counts the fixture-layout tests run at: the pixel-count rule's
+# (1 at sf0.001, where any plan is trivially co-partitioned) and a
+# forced 4, so the co-partitioning guards also hold above one bucket.
+BUCKET_COUNTS = pytest.mark.parametrize("n_buckets", [None, 4], ids=["rule", "4"])
+
+
+@BUCKET_COUNTS
+def test_bucketed_fixture_reattaches_from_disk(spark, tables, monkeypatch, n_buckets):
     """A bucketed fixture written by a previous PROCESS (simulated by
     dropping the catalog entry, which keeps the external files) is
     re-attached via CLUSTERED BY DDL instead of re-derived, and the
     re-attached table still joins Exchange-free with identical rows."""
+    monkeypatch.setattr(fx, "_N_BUCKETS", n_buckets)
     monkeypatch.setenv("SPARK_GRAFT_BUCKETED_FIXTURES", "1")
     fx.clear_fixture_cache()
     try:
@@ -166,12 +178,16 @@ def _grouped_plans(spark):
     }
 
 
-def test_mask_first_operators_shuffle_only_into_final_aggregate(spark, tables, monkeypatch):
+@BUCKET_COUNTS
+def test_mask_first_operators_shuffle_only_into_final_aggregate(
+    spark, tables, monkeypatch, n_buckets
+):
     """Over bucketed fixtures the mask-first join chain (mask LEFT JOIN
     each layer, merge-hinted) keeps the mask's bucket partitioning: the
     only Exchange of each grouped plan is the one feeding the final
     HashAggregate. A whole-layer full-outer join re-shuffles its
     coalesced keys before the mask join and fails this."""
+    monkeypatch.setattr(fx, "_N_BUCKETS", n_buckets)
     monkeypatch.setenv("SPARK_GRAFT_BUCKETED_FIXTURES", "1")
     fx.clear_fixture_cache()
     try:
@@ -183,6 +199,73 @@ def test_mask_first_operators_shuffle_only_into_final_aggregate(spark, tables, m
     finally:
         monkeypatch.delenv("SPARK_GRAFT_BUCKETED_FIXTURES", raising=False)
         fx.clear_fixture_cache()
+
+
+@pytest.mark.parametrize(
+    "pixels, want",
+    [(6_000, 1), (60_175, 1), (600_000, 4), (6_001_215, 32), (60_000_000, 256)],
+)
+def test_bucket_count_follows_pixel_count(pixels, want):
+    """The largest power of two <= pixels / 2^17, at least 1: sf0.001,
+    sf0.01, the sf0.1 benchmark world, sf1 and sf10 row counts."""
+    assert fx.bucket_count_for(pixels) == want
+
+
+def _selected_buckets(df) -> set[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return set(re.findall(r"SelectedBucketsCount: (\d+ out of \d+)", plan))
+
+
+def test_bucketed_fixture_scan_uses_rule_bucket_count(spark, tables, monkeypatch):
+    """A bucketed fixture is written with the rule's bucket count for the
+    session's pixel world, and ``_N_BUCKETS`` overrides the rule."""
+    want = fx.bucket_count_for(tables["lineitem"].count())
+    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_FIXTURES", "1")
+    fx.clear_fixture_cache()
+    try:
+        sf_dir = fx._ACTIVE_DIR.get(id(spark)) or fx._ACTIVE_DIR.get(0, "")
+        assert fx.fixture_bucket_count(spark, sf_dir) == want
+        assert _selected_buckets(fx.raster_df(spark, "nlcd")) == {f"{want} out of {want}"}
+        monkeypatch.setattr(fx, "_N_BUCKETS", 4)
+        fx.clear_fixture_cache()
+        assert _selected_buckets(fx.raster_df(spark, "nlcd")) == {"4 out of 4"}
+    finally:
+        monkeypatch.delenv("SPARK_GRAFT_BUCKETED_FIXTURES", raising=False)
+        fx.clear_fixture_cache()
+
+
+def test_pixel_count_is_counted_once_under_concurrent_first_use(monkeypatch):
+    """Server warm-up resolves fixtures from one thread per CPU: the
+    first calls for a session race on the memoized pixel count, which
+    must run its Spark count once and give every caller the same N."""
+    calls = []
+
+    class _Rows:
+        def count(self):
+            calls.append(1)
+            time.sleep(0.01)
+            return 600_000
+
+    class _Session:
+        def table(self, name):
+            assert name == "lineitem"
+            return _Rows()
+
+    monkeypatch.setattr(fx, "_N_BUCKETS", None)
+    session, key = _Session(), "/pixel-world"
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futures = [
+                pool.submit(fx.fixture_bucket_count, session, key) for _ in range(64)
+            ]
+            got = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(prev)
+        fx._PIXEL_COUNT_CACHE.pop((id(session), key), None)
+    assert got == [4] * 64
+    assert len(calls) == 1
 
 
 # ------------------------------------------------ TPC-H bucketed joins

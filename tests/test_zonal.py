@@ -102,6 +102,27 @@ def test_summary_preserves_input_order(spark, tables):
     assert [r["raster_idx"] for r in rows] == [0, 1, 2]
 
 
+def test_summary_plan_has_no_global_sort(spark, tables, monkeypatch):
+    """``inline()`` emits the per-raster rows in input order, so
+    RasterSummary needs no ORDER BY. Over one-bucket fixtures (the
+    pixel-count rule's layout for small worlds) the global aggregate
+    needs no Exchange, and a sort would add a range-partitioning
+    Exchange and its sampling job to every request."""
+    monkeypatch.setattr(fx, "_N_BUCKETS", 1)
+    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_FIXTURES", "1")
+    fx.clear_fixture_cache()
+    try:
+        targets = [fx.raster_df(spark, r) for r in ("kfactor", "slope", "awc")]
+        df = zonal.raster_summary(targets, fx.mask_df(spark, "huc8_01"))
+        assert [r["raster_idx"] for r in df.collect()] == [0, 1, 2]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Bucketed: true" in plan, plan[:3000]
+        assert "rangepartitioning" not in plan, plan[:3000]
+    finally:
+        monkeypatch.delenv("SPARK_GRAFT_BUCKETED_FIXTURES", raising=False)
+        fx.clear_fixture_cache()
+
+
 def test_full_outer_layer_join_fills_nodata(spark, tables):
     """Missing tiles -> NODATA-filled join (Utils.scala:221-232)."""
     joined = zonal.join_layers(

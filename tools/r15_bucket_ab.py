@@ -1,9 +1,10 @@
 """r15 verdict #2: A/B the bucketed-fixture bucket count at sf0.1.
 
-The zonal/mapshed zero-exchange join stages run exactly N_BUCKETS
-tasks; the r14 layout's 16 buckets cap them at 16 tasks on 32 cores —
-the builder's own stated cap on `mapshed_suite`. `_N_BUCKETS` is
-env-tunable (`SPARK_GRAFT_FIXTURE_BUCKETS`); this script measures the
+The zonal/mapshed zero-exchange join stages run exactly one task per
+bucket, so the r14 layout's 16 buckets capped them at 16 tasks on 32
+cores. The fixture bucket count follows the pixel count
+(`fixtures.fixture_bucket_count`); this script sets the module
+attribute `fixtures._N_BUCKETS`, which overrides it, and measures the
 candidate values INSIDE ONE PROCESS (co-tenant bursts invalidate
 cross-process timing on this box): alternating blocks per bucket
 count, each block re-pointing the fixture layer (the tag fingerprints
