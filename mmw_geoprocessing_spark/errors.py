@@ -40,3 +40,19 @@ class InvalidZoomError(GeoprocessingError):
     the grid from the tile layer itself (Geoprocessing.scala:219-221), so
     mask and layer frames can never diverge; serving a zoom whose layer
     frame is unknown would silently join mismatched pixel keys."""
+
+
+class UnknownRasterError(GeoprocessingError):
+    """A raster id (``rasters`` / ``targetRaster``) names no layer. The
+    reference fails the layer fetch for such an id; here it is refused
+    before any Spark work."""
+
+
+class UnknownAoiError(GeoprocessingError):
+    """A pre-rasterized AOI id (``aoiIds``, /multi ``shapes``) names no
+    mask fixture."""
+
+
+class InvalidGeometryError(GeoprocessingError):
+    """A vector coordinate is not a finite number (NaN or +-Infinity,
+    which JSON parsers accept as literals)."""

@@ -52,7 +52,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from mmw_geoprocessing_spark.errors import MissingVectorCRSError, UnknownCRSError
+from mmw_geoprocessing_spark.errors import (
+    InvalidGeometryError,
+    MissingVectorCRSError,
+    UnknownCRSError,
+)
 from mmw_geoprocessing_spark.plans.model import VALID_CRS
 
 TILE = 8  # fixture-layout tile size (DEFAULT_LAYOUT below)
@@ -133,7 +137,8 @@ def parse_multipolygon(geojson: str) -> list[list[list[tuple[float, float]]]]:
     """GeoJSON -> list of polygons, each a list of rings (outer first).
 
     Tolerant like the reference (Utils.scala:129-135): non-(Multi)Polygon
-    geometries yield an empty list rather than an error.
+    geometries yield an empty list rather than an error. A NaN or
+    infinite coordinate is a typed 400.
     """
     g = json.loads(geojson)
     if g.get("type") == "Feature":
@@ -145,9 +150,20 @@ def parse_multipolygon(geojson: str) -> list[list[list[tuple[float, float]]]]:
         polys = g["coordinates"]
     else:
         return []
-    return [
-        [[(float(x), float(y)) for x, y in ring] for ring in poly] for poly in polys
-    ]
+    out = [[[(float(x), float(y)) for x, y in ring] for ring in poly] for poly in polys]
+    require_finite(ring for poly in out for ring in poly)
+    return out
+
+
+def require_finite(paths) -> None:
+    """Raise ``InvalidGeometryError`` unless every coordinate of every
+    ``[(x, y), ...]`` path is finite. JSON parsers accept ``NaN`` and
+    ``Infinity``; such a vertex would otherwise rasterize to nothing (a
+    silent ``{}``) or overflow the grid arithmetic."""
+    for path in paths:
+        for x, y in path:
+            if not (math.isfinite(x) and math.isfinite(y)):
+                raise InvalidGeometryError(f"non-finite coordinate ({x}, {y})")
 
 
 def validate_crs(crs: str | None) -> str:

@@ -185,7 +185,23 @@ class GeoprocessingServer:
                 if self.path not in ("/run", "/multi"):
                     self._reply(404, {"error": "NotFound", "message": self.path})
                     return
-                length = int(self.headers.get("Content-Length", 0))
+                # a negative length would block in rfile.read(-1) until the
+                # client hangs up; a non-integer one would drop the
+                # connection with no reply
+                raw_length = self.headers.get("Content-Length", "0")
+                try:
+                    length = int(raw_length)
+                except ValueError:
+                    length = -1
+                if length < 0:
+                    self._reply(
+                        400,
+                        {
+                            "error": "MalformedRequest",
+                            "message": f"bad Content-Length {raw_length!r}",
+                        },
+                    )
+                    return
                 if length > outer.max_body_bytes:
                     self._reply(
                         413,
@@ -243,7 +259,10 @@ class GeoprocessingServer:
                 except FutureTimeout:
                     fut.cancel()  # covers the not-yet-started case
                     try:
-                        outer.spark.sparkContext.cancelJobGroup(gid)
+                        # the group's later jobs are cancelled too: a request
+                        # between two jobs stops at its next one instead of
+                        # running to the end (and caching a reply) after its 503
+                        outer.spark.sparkContext._jsc.sc().cancelJobGroupAndFutureJobs(gid)
                     except Exception:
                         pass  # session already stopped
                     self._reply(

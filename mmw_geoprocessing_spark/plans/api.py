@@ -5,11 +5,24 @@ The dispatch table, conditional-field validation, result-key format
 (``"List(v1, v2)"``), nested /multi shape, and the typed 400 taxonomy all
 mirror the reference; plug an HTTP layer (FastAPI/Flask) over these for
 wire parity — the engine itself is transport-agnostic.
+
+A reply is a pure function of the request and of immutable layers, so
+replies to requests whose every input is a session fixture (``aoiIds``
+masks, fixture layers, ``useLinePixels``) are kept in ``REPLY_CACHE`` and
+a repeated request runs no Spark job. See ``_memoized`` for the rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import dataclasses
+import json
+import os
+import threading
+from collections import OrderedDict
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from mmw_geoprocessing_spark import geometry, projection
 from mmw_geoprocessing_spark.errors import (
@@ -18,15 +31,136 @@ from mmw_geoprocessing_spark.errors import (
     MissingStreamLinesError,
     MissingTargetRasterError,
     MissingVectorError,
+    UnknownAoiError,
+    UnknownRasterError,
 )
 from mmw_geoprocessing_spark.operators import zonal
 from mmw_geoprocessing_spark.plans.model import VALID_OPERATIONS, InputData, MultiInput
 from mmw_geoprocessing_spark.sources import fixtures as fx
 
+# Upper bound on the reply cache: the JSON text of the keys and replies it
+# holds. Replies over the fixture world are a few kB, so this keeps
+# thousands of them at a fixed, small share of the server's memory.
+REPLY_CACHE_BYTES = 32 << 20
+
+
+class ReplyCache:
+    """Least-recently-used map from a request key to the reply's JSON
+    text, bounded by ``budget_bytes`` of key plus text. Every hit decodes
+    a fresh reply, so a caller that mutates its reply cannot change the
+    next one. One lock guards the map; replies are computed outside it,
+    so concurrent misses of one key each compute (only while cold)."""
+
+    def __init__(self, budget_bytes: int) -> None:
+        self.budget_bytes = budget_bytes
+        self.hits = 0
+        self.misses = 0
+        self._entries: OrderedDict[str, str] = OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, key: str):
+        """The cached reply for ``key``, or None."""
+        with self._lock:
+            text = self._entries.get(key)
+            if text is None:
+                self.misses += 1
+                return None
+            self.hits += 1
+            self._entries.move_to_end(key)
+        return json.loads(text)
+
+    def put(self, key: str, reply) -> None:
+        text = json.dumps(reply)  # ASCII: one byte per character
+        size = len(key) + len(text)
+        if size > self.budget_bytes:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._bytes -= len(key) + len(old)
+            self._entries[key] = text
+            self._bytes += size
+            while self._bytes > self.budget_bytes:
+                k, v = self._entries.popitem(last=False)
+                self._bytes -= len(k) + len(v)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+            self._bytes = 0
+
+
+# Emptied by fixtures.clear_fixture_cache(): replies live exactly as long
+# as the fixtures they were computed from.
+REPLY_CACHE = ReplyCache(REPLY_CACHE_BYTES)
+
+
+def _catalog_root() -> str | None:
+    return os.environ.get("SPARK_GRAFT_CATALOG_ROOT")
+
+
+def _memoized(spark: SparkSession, endpoint: str, model, cacheable: bool, compute):
+    """``compute(spark, model)``, answered from ``REPLY_CACHE`` when the
+    request is ``cacheable`` (reads session fixtures only) and no external
+    catalog serves the layers. The key is the SparkContext, the active
+    fixture directory, the endpoint and every field of the parsed model in
+    order (raster and AOI order change the reply); wire fields the parser
+    drops are not in it. A request that raises stores nothing."""
+    if not cacheable or _catalog_root():
+        return compute(spark, model)
+    key = json.dumps(
+        [spark.sparkContext.applicationId, fx.active_dir(spark), endpoint,
+         dataclasses.asdict(model)]
+    )
+    reply = REPLY_CACHE.get(key)
+    if reply is None:
+        reply = compute(spark, model)
+        REPLY_CACHE.put(key, reply)
+    return reply
+
 
 def ping() -> str:
     """GET /ping (WebServer.scala:70-74)."""
     return "pong"
+
+
+def _check_rasters(raster_ids) -> None:
+    """Typed 400 for raster ids that name no fixture layer."""
+    unknown = [r for r in raster_ids if r not in fx.RASTER_DEFS]
+    if unknown:
+        raise UnknownRasterError(
+            f"unknown raster id(s) {unknown}; known: {sorted(fx.RASTER_DEFS)}"
+        )
+
+
+def _check_aois(aoi_ids) -> None:
+    """Typed 400 for AOI ids that name no pre-rasterized mask."""
+    unknown = [a for a in aoi_ids if a not in fx.AOI_DEFS and a not in fx.SWEEP_ONLY_AOI_DEFS]
+    if unknown:
+        raise UnknownAoiError(f"unknown AOI id(s) {unknown}")
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _id_masks(spark: SparkSession, aoi_ids: list[str], zoom: int, tagged: bool = False):
+    """The masks of pre-rasterized AOIs at ``zoom``, read per id (the
+    sweep-only HUC-12s are not in ``mask_all``). ``tagged``: one row per
+    (aoi_id, pixel). Untagged: the AOIs' union, each pixel once — the
+    reference unions AOIs before rasterizing (Utils.scala:70-73), so
+    overlapping AOIs must not double-count shared pixels."""
+    ids = list(dict.fromkeys(aoi_ids))
+    parts = [fx.mask_df_at_zoom(spark, a, zoom) for a in ids]
+    if tagged:
+        return _union([p.withColumn("aoi_id", F.lit(a)) for p, a in zip(parts, ids)])
+    if len(parts) == 1:
+        return parts[0]
+    return _union(parts).dropDuplicates(zonal.PIXEL_KEY)
 
 
 def _aoi_polys(input_data: InputData):
@@ -62,33 +196,20 @@ def _layout(input_data: InputData):
     return geometry.ZOOM_LAYOUTS[input_data.zoom]
 
 
+def _fixture_zoom(input_data: InputData) -> int:
+    """The pyramid level fixture layers, masks and line pixels are served
+    at: the stored pixels at zoom 0 and the native level, pyramid_down'ed
+    levels below it, so masks and layers join in one pixel keyspace
+    (unpyramided masks against pyramided layers silently join mismatched
+    keys). Unregistered zooms are a typed 400."""
+    if input_data.zoom not in (0, fx.ZOOM_NATIVE):
+        _layout(input_data)
+    return input_data.zoom
+
+
 def _mask(spark: SparkSession, input_data: InputData):
     if input_data.aoi_ids:
-        # pre-rasterized masks are stored at the native frame; at a
-        # coarser registered zoom they are served pyramid_down'ed so the
-        # mask joins the same pixel keyspace as the per-zoom layers
-        # (unpyramided masks against pyramided layers silently join
-        # mismatched keys). Unregistered zooms stay a typed 400.
-        if input_data.zoom not in (0, fx.ZOOM_NATIVE):
-            _layout(input_data)  # typed 400 for unregistered zooms
-            if len(input_data.aoi_ids) == 1:
-                return fx.mask_df_at_zoom(spark, input_data.aoi_ids[0], input_data.zoom)
-            many = fx.mask_all_df_at_zoom(spark, input_data.zoom)
-            return (
-                many.filter(many.aoi_id.isin(input_data.aoi_ids))
-                .drop("aoi_id")
-                .dropDuplicates(zonal.PIXEL_KEY)
-            )
-        if len(input_data.aoi_ids) == 1:
-            return fx.mask_df(spark, input_data.aoi_ids[0])
-        many = fx.mask_all_df(spark)
-        # union-of-AOIs semantics (reference Utils.scala:70-73): overlapping
-        # AOIs must not double-count shared pixels
-        return (
-            many.filter(many.aoi_id.isin(input_data.aoi_ids))
-            .drop("aoi_id")
-            .dropDuplicates(zonal.PIXEL_KEY)
-        )
+        return _id_masks(spark, input_data.aoi_ids, _fixture_zoom(input_data))
     polys = _aoi_polys(input_data)
     if polys is not None:
         return geometry.rasterize_polygons(
@@ -116,9 +237,7 @@ def _with_layer_extent(spark: SparkSession, layout):
 def _parse_lines_geojson(strings: list[str]) -> list[list[tuple[float, float]]]:
     """GeoJSON (Multi)LineString strings -> [[(x, y), ...], ...]. A third
     (elevation) ordinate — the reference's NHD payloads carry
-    [x, y, 0] — is dropped."""
-    import json
-
+    [x, y, 0] — is dropped. A NaN or infinite coordinate is a typed 400."""
     lines: list[list[tuple[float, float]]] = []
     for g in strings:
         geo = json.loads(g)
@@ -128,15 +247,13 @@ def _parse_lines_geojson(strings: list[str]) -> list[list[tuple[float, float]]]:
             lines.extend(
                 [[tuple(p[:2]) for p in line] for line in geo["coordinates"]]
             )
+    geometry.require_finite(lines)
     return lines
 
 
 def _lines(spark: SparkSession, input_data: InputData):
     if input_data.use_line_pixels:
-        if input_data.zoom not in (0, fx.ZOOM_NATIVE):
-            _layout(input_data)  # typed 400 for unregistered zooms
-            return fx.line_pixels_df_at_zoom(spark, input_data.zoom)
-        return fx.line_pixels_df(spark)
+        return fx.line_pixels_df_at_zoom(spark, _fixture_zoom(input_data))
     if input_data.stream_lines_geojson:
         lines = _parse_lines_geojson(input_data.stream_lines_geojson)
         src_crs = input_data.vector_crs or input_data.shape_crs or "LatLng"
@@ -165,19 +282,12 @@ def _layers(spark: SparkSession, input_data: InputData, raster_ids: list[str]):
     down as partition pruning — the reference's ``cropRastersToAOI``
     (Utils.scala:34-41): each layer is read once, only Intersects-ing
     tiles are scanned."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CATALOG_ROOT")
+    root = _catalog_root()
     if not root:
-        if input_data.zoom not in (0, fx.ZOOM_NATIVE):
-            # serve the REAL per-zoom pyramid level (the reference
-            # fetches a different layer per zoom, not a reframed native
-            # one; coarser levels derived via zonal.pyramid_down)
-            _layout(input_data)  # typed 400 for unregistered zooms
-            return [
-                fx.raster_df_at_zoom(spark, r, input_data.zoom) for r in raster_ids
-            ]
-        return [fx.raster_df(spark, r) for r in raster_ids]
+        # the REAL per-zoom pyramid level (the reference fetches a
+        # different layer per zoom, not a reframed native one)
+        zoom = _fixture_zoom(input_data)
+        return [fx.raster_df_at_zoom(spark, r, zoom) for r in raster_ids]
     from mmw_geoprocessing_spark.sources import catalog
 
     polys = _aoi_polys(input_data) if input_data.shape_geojson else None
@@ -212,10 +322,27 @@ def _layers(spark: SparkSession, input_data: InputData, raster_ids: list[str]):
 
 def run_request(spark: SparkSession, input_data: InputData) -> dict:
     """POST /run (WebServer.scala:76-93): dispatch on operationType,
-    return the reference's ``{"List(...)": value}`` JSON shape."""
+    return the reference's ``{"List(...)": value}`` JSON shape. Requests
+    over fixture AOIs (no GeoJSON, no stream lines) are memoized."""
+    cacheable = (
+        bool(input_data.aoi_ids)
+        and not input_data.shape_geojson
+        and not input_data.stream_lines_geojson
+        and input_data.layout is None  # set by in-process callers only
+    )
+    return _memoized(spark, "run", input_data, cacheable, _run)
+
+
+def _run(spark: SparkSession, input_data: InputData) -> dict:
     op = input_data.operation_type
     if op not in VALID_OPERATIONS:
         raise InvalidOperationError(f"invalid operationType {op!r}")
+    # ids are checked before any Spark work
+    _check_aois(input_data.aoi_ids or [])
+    if not _catalog_root():
+        _check_rasters(input_data.rasters)
+        if op in ("RasterGroupedAverage", "RasterGroupedSum") and input_data.target_raster:
+            _check_rasters([input_data.target_raster])
 
     layers = _layers(spark, input_data, input_data.rasters)
 
@@ -232,8 +359,6 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
                 # per input polygon STRING, in input order — ResultManyInt
                 # (Geoprocessing.scala:114-126). Tiles are fetched once
                 # for all polygons (one plan, aoi_id in the grouping key).
-                from pyspark.sql import functions as F
-
                 geometry.validate_crs(input_data.shape_crs)
                 labels = [f"shape_{i}" for i in range(len(input_data.shape_geojson))]
                 # clipped to the layer extent like _mask's: candidates
@@ -258,10 +383,7 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
                             layout=layout,
                         ).withColumn("aoi_id", F.lit(label))
                     )
-                mask_many = parts[0]
-                for p in parts[1:]:
-                    mask_many = mask_many.unionByName(p)
-                rows = zonal.raster_grouped_count_many(layers, mask_many).collect()
+                rows = zonal.raster_grouped_count_many(layers, _union(parts)).collect()
                 return [
                     {r["list_key"]: r["cnt"] for r in rows if r["aoi_id"] == label}
                     for label in labels
@@ -269,12 +391,9 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
             raise MissingVectorError(
                 "RasterGroupedCountMany requires aoi_ids or polygon"
             )
-        if input_data.zoom not in (0, fx.ZOOM_NATIVE):
-            _layout(input_data)  # typed 400 for unregistered zooms
-            mask_many = fx.mask_all_df_at_zoom(spark, input_data.zoom)
-        else:
-            mask_many = fx.mask_all_df(spark)
-        mask_many = mask_many.filter(mask_many.aoi_id.isin(input_data.aoi_ids))
+        mask_many = _id_masks(
+            spark, input_data.aoi_ids, _fixture_zoom(input_data), tagged=True
+        )
         df = zonal.raster_grouped_count_many(layers, mask_many)
         rows = df.collect()
         # input-polygon order preserved (Geoprocessing.scala:124)
@@ -334,6 +453,31 @@ _MULTI_KINDS = {
 
 def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
     """POST /multi (Geoprocessing.scala:21-89): shapes x operations.
+    Requests over fixture AOI ids (no GeoJSON, no stream lines) are
+    memoized; see ``_multi`` for the plan."""
+    cacheable = (
+        bool(multi.shapes)
+        and not _geojson_shapes(multi)
+        and not multi.stream_lines_geojson
+    )
+    return _memoized(spark, "multi", multi, cacheable, _multi)
+
+
+def _geojson_shapes(multi: MultiInput) -> bool:
+    return bool(multi.shapes) and multi.shapes[0].lstrip().startswith("{")
+
+
+def _multi_kind(op) -> str:
+    """The mapshed.template_df kind of one /multi operation."""
+    if op.name == "RasterGroupedAverage":
+        return "average" if not op.rasters else "grouped_average"
+    if op.name in _MULTI_KINDS:
+        return _MULTI_KINDS[op.name]
+    raise InvalidOperationError(f"/multi does not support {op.name!r}")
+
+
+def _multi(spark: SparkSession, multi: MultiInput) -> dict:
+    """POST /multi, uncached.
 
     Single-pass: each operation runs ONCE over all shapes with aoi_id in
     its grouping key (mapshed.template_df); M x K cases cost K plans in
@@ -346,11 +490,17 @@ def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
     are rasterized into per-shape masks keyed ``shape_{i}`` in input
     order; ``multi.shape_crs`` is validated like /run's.
     """
-    from pyspark.sql import functions as F
-
     from mmw_geoprocessing_spark.operators.mapshed import template_df
 
-    if multi.shapes and multi.shapes[0].lstrip().startswith("{"):
+    # operations and ids are checked before any Spark work
+    kinds = [_multi_kind(op) for op in multi.operations]
+    for op, kind in zip(multi.operations, kinds):
+        _check_rasters(op.rasters)
+        if kind in ("average", "grouped_average", "grouped_sum"):
+            if not op.target_raster:
+                raise MissingTargetRasterError(f"{op.name} requires targetRaster")
+            _check_rasters([op.target_raster])
+    if _geojson_shapes(multi):
         geometry.validate_crs(multi.shape_crs)
         # response keys are the reference HUC ids when the wire carried
         # them (WebServer.scala:32-35), positional labels otherwise
@@ -379,16 +529,12 @@ def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
         multi_layout = _with_layer_extent(spark, geometry.ZOOM_LAYOUTS[multi.zoom])
 
         def masks_for(pixel_is_area: bool):
-            parts_masks = [
+            return _union([
                 geometry.rasterize_polygons(
                     spark, polys, pixel_is_area, layout=multi_layout
                 ).withColumn("aoi_id", F.lit(label))
                 for label, polys in zip(shape_labels, polys_per_shape)
-            ]
-            out = parts_masks[0]
-            for p in parts_masks[1:]:
-                out = out.unionByName(p)
-            return out
+            ])
 
         masks_by_mode = {
             mode: masks_for(mode) for mode in {op.pixel_is_area for op in multi.operations}
@@ -400,9 +546,7 @@ def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
         # in the request frame, tag aoi_id — one union consumed by every
         # lines_join template through the same masks semi-join as /run
         multi_line_pixels = None
-        wants_lines = any(
-            _MULTI_KINDS.get(op.name) == "lines_join" for op in multi.operations
-        )
+        wants_lines = "lines_join" in kinds
         if wants_lines and not multi.stream_lines_geojson:
             # reference MissingStreamLinesException
             # (Geoprocessing.scala:70-74) -> typed 400. The fixture
@@ -417,48 +561,36 @@ def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
                 lines = projection.reproject_lines(
                     lines, multi.shape_crs, multi.raster_crs
                 )
-            lp_parts = [
+            multi_line_pixels = _union([
                 geometry.rasterize_lines(
                     spark, geometry.clip_lines(lines, polys), layout=multi_layout
                 ).withColumn("aoi_id", F.lit(label))
                 for label, polys in zip(shape_labels, polys_per_shape)
-            ]
-            multi_line_pixels = lp_parts[0]
-            for p in lp_parts[1:]:
-                multi_line_pixels = multi_line_pixels.unionByName(p)
+            ])
     else:
+        _check_aois(multi.shapes)
         shape_labels = list(multi.shapes)
-        m = fx.mask_all_df(spark)
-        m = m.filter(m.aoi_id.isin(multi.shapes))
         masks_by_mode = None
         multi_line_pixels = None
-        masks = m
-
-    parts = []
-    for op in multi.operations:
-        if op.name == "RasterGroupedAverage":
-            kind = "average" if not op.rasters else "grouped_average"
-        elif op.name in _MULTI_KINDS:
-            kind = _MULTI_KINDS[op.name]
-        else:
-            raise InvalidOperationError(f"/multi does not support {op.name!r}")
-        op_masks = masks_by_mode[op.pixel_is_area] if masks_by_mode is not None else masks
-        parts.append(
-            template_df(
-                spark,
-                op.label,
-                kind,
-                list(op.rasters),
-                op.target_raster,
-                op_masks,
-                line_pixels=multi_line_pixels if kind == "lines_join" else None,
-            )
-        )
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionAll(p)
 
     out: dict[str, dict] = {label: {} for label in shape_labels}
-    for r in union.collect():
+    if not shape_labels or not kinds:
+        return out
+    if masks_by_mode is None:
+        # fixture masks sit at the native frame
+        masks = _id_masks(spark, shape_labels, 0, tagged=True)
+    parts = [
+        template_df(
+            spark,
+            op.label,
+            kind,
+            list(op.rasters),
+            op.target_raster,
+            masks_by_mode[op.pixel_is_area] if masks_by_mode is not None else masks,
+            line_pixels=multi_line_pixels if kind == "lines_join" else None,
+        )
+        for op, kind in zip(multi.operations, kinds)
+    ]
+    for r in _union(parts).collect():
         out[r["aoi_id"]].setdefault(r["op_label"], {})[r["list_key"]] = r["value"]
     return out

@@ -341,6 +341,34 @@ def set_active_dir(sf_dir: str, spark: SparkSession | None = None) -> None:
     _ACTIVE_DIR[id(spark) if spark is not None else 0] = sf_dir
 
 
+def active_dir(spark: SparkSession) -> str:
+    """The sf_dir the session's fixtures are derived from ("" if unset)."""
+    return _ACTIVE_DIR.get(id(spark)) or _ACTIVE_DIR.get(0, "")
+
+
+# One lock per key being built: concurrent cold requests (or the warm-up
+# threads of a server) build each memoized fixture once, instead of each
+# deriving the same relation and racing on its saveAsTable. Builds only
+# wait on builds of other keys further down the derivation (a pyramid
+# level on the level above it, the extent on ``cells``), so no cycle.
+_BUILD_LOCKS: dict[tuple[int, tuple], threading.Lock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def _memo(cache: dict, key: tuple, build):
+    """``cache[key]``, built by ``build()`` once per key across threads."""
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    with _BUILD_LOCKS_GUARD:
+        lock = _BUILD_LOCKS.setdefault((id(cache), key), threading.Lock())
+    with lock:
+        hit = cache.get(key)
+        if hit is None:
+            hit = cache[key] = build()
+        return hit
+
+
 _BUCKET_DIR = "/tmp/spark_graft_bucketed_fixtures"
 # Bucket count of the bucketed fixtures, derived from the fixture
 # world's pixel count (one pixel per lineitem row): the largest power of
@@ -363,7 +391,6 @@ _PIXELS_PER_BUCKET = 1 << 17
 _N_BUCKETS: int | None = None
 # (session id, sf_dir) -> lineitem row count, memoized like _EXTENT_CACHE
 _PIXEL_COUNT_CACHE: dict[tuple[int, str], int] = {}
-_PIXEL_COUNT_LOCK = threading.Lock()
 
 
 def bucket_count_for(pixels: int) -> int:
@@ -378,11 +405,10 @@ def fixture_bucket_count(spark: SparkSession, sf_dir: str) -> int:
     ``lineitem`` row count (counted once per session and sf_dir)."""
     if _N_BUCKETS is not None:
         return _N_BUCKETS
-    key = (id(spark), sf_dir)
-    with _PIXEL_COUNT_LOCK:
-        if key not in _PIXEL_COUNT_CACHE:
-            _PIXEL_COUNT_CACHE[key] = spark.table("lineitem").count()
-        return bucket_count_for(_PIXEL_COUNT_CACHE[key])
+    pixels = _memo(
+        _PIXEL_COUNT_CACHE, (id(spark), sf_dir), lambda: spark.table("lineitem").count()
+    )
+    return bucket_count_for(pixels)
 
 
 def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
@@ -453,7 +479,7 @@ def _bucketed_fixture(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
 
 def fixture_df(spark: SparkSession, name: str) -> DataFrame:
     """Materialize one fixture relation as a DataFrame (cached per
-    session + sf_dir).
+    session + sf_dir, built once however many threads ask for it cold).
 
     Requires the base tables to be registered as temp views
     (see ``sources.tables.register_views``).
@@ -473,9 +499,9 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
     """
     import os
 
-    sf_dir = _ACTIVE_DIR.get(id(spark)) or _ACTIVE_DIR.get(0, "")
-    key = (id(spark), sf_dir, name)
-    if key not in _FIXTURE_CACHE:
+    sf_dir = active_dir(spark)
+
+    def build() -> DataFrame:
         if os.environ.get("SPARK_GRAFT_BUCKETED_FIXTURES", "0") == "1":
             # Bucketed-fixture mode is a SESSION mode (opted into via the
             # env flag, bench.py / conftest set it deliberately): scans of
@@ -486,11 +512,10 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
             # saved (once per session) and restored by
             # clear_fixture_cache() when the mode is exited.
             enter_bucket_mode(spark)
-            df = _bucketed_fixture(spark, name, sf_dir)
-        else:
-            df = spark.sql(with_fixtures(f"SELECT * FROM {name}", name)).localCheckpoint()
-        _FIXTURE_CACHE[key] = df
-    return _FIXTURE_CACHE[key]
+            return _bucketed_fixture(spark, name, sf_dir)
+        return spark.sql(with_fixtures(f"SELECT * FROM {name}", name)).localCheckpoint()
+
+    return _memo(_FIXTURE_CACHE, (id(spark), sf_dir, name), build)
 
 
 def clear_fixture_cache() -> None:
@@ -503,8 +528,13 @@ def clear_fixture_cache() -> None:
     _PYRAMID_CACHE.clear()
     _EXTENT_CACHE.clear()
     _PIXEL_COUNT_CACHE.clear()
+    with _BUILD_LOCKS_GUARD:
+        _BUILD_LOCKS.clear()
+    # replies over fixtures live exactly as long as the fixtures
+    from mmw_geoprocessing_spark.plans import api
     from mmw_geoprocessing_spark.sources import tpch_layout
 
+    api.REPLY_CACHE.clear()
     tpch_layout.clear_tpch_layout_cache()
     while _SAVED_BUCKET_CONFS:
         _, (spark, saved) = _SAVED_BUCKET_CONFS.popitem()
@@ -540,16 +570,15 @@ def raster_df_at_zoom(spark: SparkSession, raster_id: str, zoom: int) -> DataFra
         return raster_df(spark, raster_id)
     if not 0 < zoom < ZOOM_NATIVE:
         raise ValueError(f"no layer pyramid at zoom {zoom}")
-    sf_dir = _ACTIVE_DIR.get(id(spark)) or _ACTIVE_DIR.get(0, "")
-    key = (id(spark), sf_dir, raster_id, zoom)
-    if key not in _PYRAMID_CACHE:
+
+    def build() -> DataFrame:
         from mmw_geoprocessing_spark.operators.zonal import pyramid_down
 
         is_double = RASTER_DEFS[raster_id][2]
         level = raster_df_at_zoom(spark, raster_id, zoom + 1)
-        df = pyramid_down(level, agg="avg" if is_double else "mode")
-        _PYRAMID_CACHE[key] = df.localCheckpoint()
-    return _PYRAMID_CACHE[key]
+        return pyramid_down(level, agg="avg" if is_double else "mode").localCheckpoint()
+
+    return _memo(_PYRAMID_CACHE, (id(spark), active_dir(spark), raster_id, zoom), build)
 
 
 def mask_df(spark: SparkSession, aoi_id: str) -> DataFrame:
@@ -578,14 +607,14 @@ def _pixelset_df_at_zoom(
         return fixture_df(spark, name)
     if not 0 < zoom < ZOOM_NATIVE:
         raise ValueError(f"no pyramid at zoom {zoom}")
-    sf_dir = _ACTIVE_DIR.get(id(spark)) or _ACTIVE_DIR.get(0, "")
-    key = (id(spark), sf_dir, name, zoom)
-    if key not in _PYRAMID_CACHE:
+
+    def build() -> DataFrame:
         from mmw_geoprocessing_spark.operators.zonal import pyramid_down_keys
 
         level = _pixelset_df_at_zoom(spark, name, zoom + 1, extra_cols)
-        _PYRAMID_CACHE[key] = pyramid_down_keys(level, extra_cols).localCheckpoint()
-    return _PYRAMID_CACHE[key]
+        return pyramid_down_keys(level, extra_cols).localCheckpoint()
+
+    return _memo(_PYRAMID_CACHE, (id(spark), active_dir(spark), name, zoom), build)
 
 
 def mask_df_at_zoom(spark: SparkSession, aoi_id: str, zoom: int) -> DataFrame:
@@ -612,16 +641,14 @@ def grid_key_extent(spark: SparkSession) -> tuple[int, int, int, int]:
     enumeration to this range (geometry.GridLayout.extent_keys): a
     request whose AOI lies outside the layer grid then costs O(1)
     instead of O(AOI-bbox cells)."""
-    key = (id(spark), _ACTIVE_DIR.get(id(spark), _ACTIVE_DIR.get(0, "")))
-    cached = _EXTENT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    row = fixture_df(spark, "cells").selectExpr(
-        "min(key_col) AS kc0",
-        "min(key_row) AS kr0",
-        "max(key_col) AS kc1",
-        "max(key_row) AS kr1",
-    ).collect()[0]
-    ext = (int(row["kc0"]), int(row["kr0"]), int(row["kc1"]), int(row["kr1"]))
-    _EXTENT_CACHE[key] = ext
-    return ext
+
+    def build() -> tuple[int, int, int, int]:
+        row = fixture_df(spark, "cells").selectExpr(
+            "min(key_col) AS kc0",
+            "min(key_row) AS kr0",
+            "max(key_col) AS kc1",
+            "max(key_row) AS kr1",
+        ).collect()[0]
+        return (int(row["kc0"]), int(row["kr0"]), int(row["kc1"]), int(row["kr1"]))
+
+    return _memo(_EXTENT_CACHE, (id(spark), active_dir(spark)), build)

@@ -658,3 +658,70 @@ def test_count_many_geojson_clips_candidates_to_layer_extent(spark, tables, monk
     assert 0 < sum(tested) <= grid_cells
     twin = count_many(rect(x_end + 1.9, y_end + 2.9))
     assert far == twin and far[0]
+
+
+def _merged(*replies):
+    out: dict = {}
+    for reply in replies:
+        for k, v in reply.items():
+            out[k] = out.get(k, 0) + v
+    return out
+
+
+def test_multi_aoi_run_serves_the_union_of_sweep_only_masks(spark, tables):
+    """Sweep-only HUC-12s are individual mask fixtures, not rows of
+    mask_all: a multi-AOI /run over them counts the union of the per-id
+    masks. huc12_33 and huc12_34 are disjoint, so the union's counts are
+    the sum of the per-id counts; huc12_33 lies inside huc8_01, so adding
+    it to huc8_01 changes nothing."""
+    def count(*aoi_ids):
+        return api.run_request(
+            spark, InputData("RasterGroupedCount", rasters=["nlcd"], aoi_ids=list(aoi_ids))
+        )
+
+    one, two = count("huc12_33"), count("huc12_34")
+    assert one and two
+    assert count("huc12_33", "huc12_34") == _merged(one, two)
+    assert count("huc8_01", "huc12_33") == count("huc8_01")
+    many = api.run_request(
+        spark,
+        InputData("RasterGroupedCountMany", rasters=["nlcd"],
+                  aoi_ids=["huc12_33", "huc12_34", "huc12_33"]),
+    )
+    assert many == {"huc12_33": one, "huc12_34": two}
+
+
+def test_multi_serves_sweep_only_masks(spark, tables):
+    res = api.multi_request(
+        spark,
+        MultiInput(
+            shapes=["huc12_33", "huc12_34"],
+            operations=[Operation("RasterGroupedCount", "lc", rasters=["nlcd"])],
+        ),
+    )
+    for aoi in ("huc12_33", "huc12_34"):
+        want = api.run_request(
+            spark, InputData("RasterGroupedCount", rasters=["nlcd"], aoi_ids=[aoi])
+        )
+        assert want and res[aoi]["lc"] == {k: float(v) for k, v in want.items()}
+
+
+def test_stream_line_non_finite_coordinate_typed_400(spark, tables):
+    from mmw_geoprocessing_spark.errors import InvalidGeometryError
+
+    square = '{"type": "Polygon", "coordinates": [[[0, 0], [40, 0], [40, 24], [0, 24], [0, 0]]]}'
+    for coord in ("NaN", "Infinity"):
+        line = f'{{"type": "MultiLineString", "coordinates": [[[0, 0], [{coord}, 10]]]}}'
+        with pytest.raises(InvalidGeometryError):
+            api.run_request(
+                spark,
+                InputData("RasterLinesJoin", rasters=["nlcd"], shape_geojson=[square],
+                          shape_crs="ConusAlbers", stream_lines_geojson=[line]),
+            )
+        with pytest.raises(InvalidGeometryError):
+            api.multi_request(
+                spark,
+                MultiInput(shapes=[square], shape_crs="ConusAlbers", raster_crs="ConusAlbers",
+                           stream_lines_geojson=[line],
+                           operations=[Operation("RasterLinesJoin", "s", rasters=["nlcd"])]),
+            )

@@ -268,6 +268,49 @@ def test_pixel_count_is_counted_once_under_concurrent_first_use(monkeypatch):
     assert len(calls) == 1
 
 
+@pytest.mark.parametrize("kind", ["fixture", "pyramid", "extent"])
+def test_cold_fixture_is_built_once_under_concurrent_requests(spark, tables, monkeypatch, kind):
+    """Concurrent cold requests resolve the same fixture: each memoized
+    relation (a fixture table, a pyramid level, the grid extent) must be
+    derived once, and every caller must get the same result."""
+    from mmw_geoprocessing_spark.operators import zonal
+
+    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_FIXTURES", raising=False)
+    fx.clear_fixture_cache()
+    builds = []
+
+    def counted(owner, attr, wanted=lambda *a: True):
+        orig = getattr(owner, attr)
+
+        def wrapper(*args, **kwargs):
+            if wanted(*args):
+                builds.append(1)
+                time.sleep(0.2)  # hold the race window open
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    if kind == "fixture":
+        counted(fx, "with_fixtures", lambda body, *names: names == ("r_soil",))
+        resolve = lambda: fx.raster_df(spark, "soil")  # noqa: E731
+    elif kind == "pyramid":
+        fx.raster_df(spark, "soil")
+        counted(zonal, "pyramid_down")
+        resolve = lambda: fx.raster_df_at_zoom(spark, "soil", 12)  # noqa: E731
+    else:
+        fx.fixture_df(spark, "cells")
+        counted(fx, "fixture_df", lambda spark_, name: name == "cells")
+        resolve = lambda: fx.grid_key_extent(spark)  # noqa: E731
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = [f.result(timeout=120) for f in [pool.submit(resolve) for _ in range(8)]]
+    finally:
+        monkeypatch.undo()
+        fx.clear_fixture_cache()
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)
+
+
 # ------------------------------------------------ TPC-H bucketed joins
 # (round 10 final: the BASELINE.md TPC-H table's recorded follow-up,
 # exercised — bucketing orders/lineitem on orderkey removes the join

@@ -58,6 +58,23 @@ def test_non_polygon_geojson_tolerant(spark):
     assert geometry.parse_multipolygon('{"type":"Point","coordinates":[1,2]}') == []
 
 
+@pytest.mark.parametrize("coord", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_coordinates_rejected(coord):
+    """JSON parsers accept NaN and Infinity literals: such a vertex is a
+    typed 400, not an empty mask or an overflow in the grid arithmetic."""
+    import json
+
+    from mmw_geoprocessing_spark.errors import InvalidGeometryError
+
+    ring = [[0, 0], [4, 0], [4, coord], [0, 4], [0, 0]]
+    for geo in (
+        {"type": "Polygon", "coordinates": [ring]},
+        {"type": "MultiPolygon", "coordinates": [[[[0, 0], [1, 0], [0, 1], [0, 0]]], [ring]]},
+    ):
+        with pytest.raises(InvalidGeometryError):
+            geometry.parse_multipolygon(json.dumps(geo))
+
+
 def test_line_walk_crosses_tiles(spark):
     df = geometry.rasterize_lines(spark, [[(0.5, 0.5), (20.5, 0.5)]])
     rows = df.collect()

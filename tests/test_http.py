@@ -138,6 +138,7 @@ def test_body_limit_413(spark, tables):
 
 
 def test_request_timeout_503(spark, tables):
+    api.REPLY_CACHE.clear()  # a cached reply would beat the timeout
     srv = GeoprocessingServer(spark, port=0, request_timeout_sec=1e-4).start()
     try:
         status, body = _post(
@@ -164,6 +165,7 @@ def test_concurrent_requests(server):
         "rasters": ["nlcd"],
         "aoiIds": ["huc12_01"],
     }
+    api.REPLY_CACHE.clear()  # each of the parallel requests runs Spark
     with ThreadPoolExecutor(max_workers=4) as pool:
         results = list(pool.map(lambda _: _post(server, "/run", doc), range(4)))
     assert all(status == 200 for status, _ in results)
@@ -228,6 +230,7 @@ def test_concurrent_mixed_requests_isolated(server):
         expected.append(body)
 
     jobs = [(path, doc, want) for (path, doc), want in zip(cases, expected)] * 2
+    api.REPLY_CACHE.clear()  # the simultaneous requests run Spark, not the cache
     with ThreadPoolExecutor(max_workers=16) as pool:
         results = list(pool.map(lambda j: _post(server, j[0], j[1]), jobs))
     for (path, doc, want), (status, body) in zip(jobs, results):
@@ -256,6 +259,7 @@ def test_timeout_cancels_job_group_and_frees_worker(spark, tables):
     a burst of slow requests must not 503 the server forever."""
     import time
 
+    api.REPLY_CACHE.clear()  # the timed-out requests must run Spark
     srv = GeoprocessingServer(spark, port=0, request_timeout_sec=0.02).start()
     try:
         doc = {"operationType": "RasterGroupedCount", "rasters": ["nlcd", "soil"],
@@ -280,3 +284,72 @@ def test_timeout_cancels_job_group_and_frees_worker(spark, tables):
         assert status == 200 and body
     finally:
         srv2.stop()
+
+
+@pytest.mark.parametrize(
+    "path, doc, error",
+    [
+        ("/run", {"operationType": "RasterGroupedCount", "rasters": ["bogus"],
+                  "aoiIds": ["huc12_01"]}, "UnknownRasterError"),
+        ("/run", {"operationType": "RasterGroupedSum", "rasters": ["nlcd"],
+                  "targetRaster": "bogus", "aoiIds": ["huc12_01"]}, "UnknownRasterError"),
+        ("/run", {"operationType": "RasterGroupedCount", "rasters": ["nlcd"],
+                  "aoiIds": ["huc12_01", "bogus"]}, "UnknownAoiError"),
+        ("/run", {"operationType": "RasterGroupedCount", "rasters": ["nlcd"],
+                  "aoiIds": ["bogus_1", "bogus_2"]}, "UnknownAoiError"),
+        ("/multi", {"shapes": ["huc99"], "operations": [
+            {"name": "RasterGroupedCount", "label": "lc", "rasters": ["nlcd"]}]},
+         "UnknownAoiError"),
+        ("/multi", {"shapes": ["huc12_01"], "operations": [
+            {"name": "RasterGroupedCount", "label": "lc", "rasters": ["bogus"]}]},
+         "UnknownRasterError"),
+    ],
+    ids=["raster", "target", "one_aoi", "two_aois", "multi_shape", "multi_raster"],
+)
+def test_unknown_ids_typed_400(server, path, doc, error):
+    entries = len(api.REPLY_CACHE)
+    status, body = _post(server, path, doc)
+    assert status == 400 and body["error"] == error, body
+    assert len(api.REPLY_CACHE) == entries
+
+
+@pytest.mark.parametrize("coord", ["NaN", "Infinity", "-Infinity"])
+def test_non_finite_coordinates_typed_400(server, coord):
+    polygon = (
+        '{"type": "Polygon", "coordinates": '
+        f'[[[0, 0], [40, 0], [40, {coord}], [0, 24], [0, 0]]]}}'
+    )
+    line = f'{{"type": "LineString", "coordinates": [[0, 0], [{coord}, 10]]}}'
+    square = '{"type": "Polygon", "coordinates": [[[0, 0], [40, 0], [40, 24], [0, 24], [0, 0]]]}'
+    for doc in (
+        {"operationType": "RasterGroupedCount", "rasters": ["nlcd"],
+         "polygon": [polygon], "polygonCRS": "ConusAlbers"},
+        {"operationType": "RasterLinesJoin", "rasters": ["nlcd"],
+         "polygon": [square], "polygonCRS": "ConusAlbers", "vector": [line]},
+    ):
+        status, body = _post(server, "/run", doc)
+        assert status == 400 and body["error"] == "InvalidGeometryError", body
+
+
+def _raw_post(srv, content_length: str) -> bytes:
+    """POST /run with the given Content-Length header and no body; the
+    bytes the server sends back within 5 s."""
+    import socket
+
+    with socket.create_connection(("127.0.0.1", srv.port), timeout=5) as sock:
+        sock.sendall(
+            b"POST /run HTTP/1.1\r\nHost: localhost\r\n"
+            + f"Content-Length: {content_length}\r\n\r\n".encode()
+        )
+        reply = b""
+        while chunk := sock.recv(65536):
+            reply += chunk
+    return reply
+
+
+@pytest.mark.parametrize("content_length", ["-1", "abc"])
+def test_bad_content_length_400(server, content_length):
+    reply = _raw_post(server, content_length)
+    head, _, body = reply.partition(b"\r\n\r\n")
+    assert head.split(b" ")[1] == b"400", reply
+    assert json.loads(body)["error"] == "MalformedRequest"
