@@ -360,10 +360,21 @@ def _q_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     nlcd, soil = fx.raster_df(spark, "nlcd"), fx.raster_df(spark, "soil")
     slope, awc = fx.raster_df(spark, "slope"), fx.raster_df(spark, "awc")
     mask8 = fx.mask_df(spark, "huc8_01")
-    return zonal.multi_operation(
-        grouped_counts={"nlcd_soil": ([nlcd, soil], fx.mask_all_df(spark))},
-        grouped_averages={"nlcd_slope": ([nlcd], slope, mask8)},
-        averages={"avg_awc": (awc, mask8)},
+    # O7 MultiOperation (Geoprocessing.scala:21-89): one UNION over the
+    # shared layer DataFrames, values as DOUBLE (the /multi result type);
+    # a grouped count over the many-AOI mask labels its rows per AOI
+    counts = zonal.raster_grouped_count_many([nlcd, soil], fx.mask_all_df(spark))
+    grouped = zonal.raster_grouped_average([nlcd], slope, mask8)
+    return (
+        counts.selectExpr(
+            "concat('nlcd_soil:', aoi_id) AS op_label", "list_key", "CAST(cnt AS DOUBLE) AS value"
+        )
+        .unionAll(grouped.selectExpr("'nlcd_slope' AS op_label", "list_key", "avg_value AS value"))
+        .unionAll(
+            zonal.raster_average(awc, mask8).selectExpr(
+                "'avg_awc' AS op_label", "list_key", "avg_value AS value"
+            )
+        )
     )
 
 

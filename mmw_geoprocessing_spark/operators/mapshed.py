@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mmw_geoprocessing_spark.operators.zonal import PIXEL_KEY, mask_join
+from mmw_geoprocessing_spark.operators import zonal
+from mmw_geoprocessing_spark.operators.zonal import PIXEL_KEY
 from mmw_geoprocessing_spark.sources import fixtures as fx
 
 # template -> (kind, group rasters, target)
@@ -76,86 +77,28 @@ def _masks(spark: SparkSession, aoi_ids: list[str]) -> DataFrame:
 
 
 def template_df(
-    spark: SparkSession,
     label: str,
     kind: str,
-    rasters: list[str],
-    target: str | None,
+    layers: list[DataFrame],
+    target: DataFrame | None,
     masks: DataFrame,
     line_pixels: DataFrame | None = None,
 ) -> DataFrame:
     """One template over a many-AOI mask table, aoi_id in the grouping
-    key. kind ∈ {grouped_count, lines_join, average, grouped_average,
-    grouped_sum}. Output: ``(op_label, aoi_id, list_key, value DOUBLE)``.
+    key: the ``zonal`` operator of ``kind`` (grouped_count, lines_join,
+    average, grouped_average or grouped_sum) over resolved layers, with
+    the value cast to DOUBLE (the reference's /multi result type).
+    Output: ``(op_label, aoi_id, list_key, value DOUBLE)``.
 
-    ``line_pixels``: lines_join source override — either pixel rows
-    ``(key_col, key_row, cell_col, cell_row)`` shared by every AOI (the
-    fixture default) or per-AOI rows carrying ``aoi_id`` (the /multi
-    request-streamLines path, where lines were geometrically clipped
-    per shape before rasterizing).
+    ``line_pixels`` (lines_join): pixel rows shared by every AOI, or
+    per-AOI rows carrying ``aoi_id`` (lines clipped per shape).
     """
-    from mmw_geoprocessing_spark.functions.nodata import list_key_sql
-
-    layers = [fx.raster_df(spark, r) for r in rasters]
-    vnames = [f"v{i}" for i in range(1, len(rasters) + 1)]
-    vals = [F.col(n) for n in vnames]
-
-    def _shape(df: DataFrame, key_sql: str | None = None) -> DataFrame:
-        # selectExpr: one parsed projection per template (plan-
-        # construction hot path)
-        return df.selectExpr(
-            f"'{label}' AS op_label",
-            "aoi_id",
-            f"{key_sql if key_sql is not None else list_key_sql(*vnames)} AS list_key",
-            "value",
-        )
-
-    if kind == "grouped_count":
-        return _shape(
-            mask_join(masks, layers)
-            .groupBy("aoi_id", *vals)
-            .agg(F.count(F.lit(1)).cast("double").alias("value"))
-        )
-    if kind == "lines_join":
-        # per-(aoi, pixel) distinctness without any dropDuplicates: mask
-        # rows are unique per (aoi_id, pixel), so a LEFT SEMI against the
-        # (duplicated) line pixels yields exactly the distinct AOI-clipped
-        # line-touched pixels — the semi join's build side dedups for free
-        # (same shape as zonal.raster_lines_join)
-        lp = (
-            line_pixels
-            if line_pixels is not None
-            else fx.line_pixels_df(spark).select(*PIXEL_KEY)
-        )
-        lp_keys = ["aoi_id", *PIXEL_KEY] if "aoi_id" in lp.columns else list(PIXEL_KEY)
-        aoi_line_pixels = masks.join(lp, on=lp_keys, how="left_semi")
-        return _shape(
-            mask_join(aoi_line_pixels, layers)
-            .groupBy("aoi_id", *vals)
-            .agg(F.count(F.lit(1)).cast("double").alias("value"))
-        )
-    tgt = fx.raster_df(spark, target)
-    if kind == "average":
-        # inner join: target-absent tiles are never visited (O3 key set)
-        return _shape(
-            masks.join(tgt.withColumnRenamed("value", "_t"), on=PIXEL_KEY, how="inner")
-            .groupBy("aoi_id")
-            .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value")),
-            key_sql="'List(0)'",
-        )
-    if kind == "grouped_sum":
-        # O8 contract: group-layer key set, target left-joined
-        return _shape(
-            mask_join(masks, layers, tgt)
-            .groupBy("aoi_id", *vals)
-            .agg(F.sum(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value"))
-        )
-    # grouped_average: union key set (the target's presence counts,
-    # zonal.raster_grouped_average / reference joinCollectionLayers)
-    return _shape(
-        mask_join(masks, layers, tgt, target_in_key_set=True)
-        .groupBy("aoi_id", *vals)
-        .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("value"))
+    df = zonal.operator(kind, layers, target, masks, line_pixels)
+    # selectExpr: one parsed projection per template (plan-construction
+    # hot path)
+    return df.selectExpr(
+        f"'{label}' AS op_label", "aoi_id", "list_key",
+        f"CAST({df.columns[-1]} AS DOUBLE) AS value",
     )
 
 

@@ -24,8 +24,8 @@ Scale design (100 TB):
 - Aggregation output is tiny (a few hundred value tuples), so partial
   (map-side) aggregation collapses nearly all rows before the single
   cheap shuffle; AQE coalesces the post-shuffle partitions.
-- No driver-side loops: ``*_many`` and ``multi`` push the per-AOI /
-  per-operation dimension into the grouping key instead of looping
+- No driver-side loops: a mask that carries ``aoi_id`` puts the per-AOI
+  dimension into the grouping key of every operator instead of looping
   (one pass, reference needed a request per polygon: CHANGELOG.md:82-91).
 """
 
@@ -126,18 +126,24 @@ def _value_cols(n: int) -> list[F.Column]:
     return [F.col(f"v{i}") for i in range(1, n + 1)]
 
 
+def _aoi(mask: DataFrame) -> list[str]:
+    """``["aoi_id"]`` when the mask carries one: every operator then
+    answers per AOI, with ``aoi_id`` leading its grouping key."""
+    return ["aoi_id"] if "aoi_id" in mask.columns else []
+
+
 def raster_grouped_count(layers: Sequence[DataFrame], mask: DataFrame) -> DataFrame:
     """O1 RasterGroupedCount (Geoprocessing.scala:338-368): zonal histogram
     of the value tuple across N rasters, NODATA participating as a value.
 
-    Output: ``(list_key STRING, cnt BIGINT)``.
+    Output: ``([aoi_id,] list_key STRING, cnt BIGINT)``.
     """
-    vals = _value_cols(len(layers))
+    aoi, vals = _aoi(mask), _value_cols(len(layers))
     return (
-        mask_join(mask.select(*PIXEL_KEY), layers)
-        .groupBy(*vals)
+        mask_join(mask, layers)
+        .groupBy(*aoi, *vals)
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(list_key(*vals).alias("list_key"), "cnt")
+        .select(*aoi, list_key(*vals).alias("list_key"), "cnt")
     )
 
 
@@ -149,13 +155,7 @@ def raster_grouped_count_many(layers: Sequence[DataFrame], mask_many: DataFrame)
     ``mask_many``: ``(aoi_id, key_col, key_row, cell_col, cell_row)``.
     Output: ``(aoi_id STRING, list_key STRING, cnt BIGINT)``.
     """
-    vals = _value_cols(len(layers))
-    return (
-        mask_join(mask_many.select("aoi_id", *PIXEL_KEY), layers)
-        .groupBy(F.col("aoi_id"), *vals)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("aoi_id", list_key(*vals).alias("list_key"), "cnt")
-    )
+    return raster_grouped_count(layers, mask_many.select("aoi_id", *PIXEL_KEY))
 
 
 def raster_average(target: DataFrame, mask: DataFrame) -> DataFrame:
@@ -166,15 +166,18 @@ def raster_average(target: DataFrame, mask: DataFrame) -> DataFrame:
     the reference iterates the *target layer's* tiles, so mask pixels on
     tiles absent from the target are never visited (NODATA cells on
     present tiles ARE rows with NULL value and are visited). Result key
-    is literally ``"List(0)"`` (:275).
+    is literally ``"List(0)"`` (:275). Without ``aoi_id`` the aggregate
+    is global: an empty mask still answers one NULL row.
 
-    Output: ``(list_key STRING, avg_value DOUBLE)``.
+    Output: ``([aoi_id,] list_key STRING, avg_value DOUBLE)``.
     """
+    aoi = _aoi(mask)
     return (
-        mask.select(*PIXEL_KEY)
+        mask.select(*aoi, *PIXEL_KEY)
         .join(target, on=PIXEL_KEY, how="inner")
+        .groupBy(*aoi)
         .agg(F.avg(F.coalesce(F.col("value"), F.lit(0.0))).alias("avg_value"))
-        .select(F.lit("List(0)").alias("list_key"), "avg_value")
+        .select(*aoi, F.lit("List(0)").alias("list_key"), "avg_value")
     )
 
 
@@ -191,14 +194,14 @@ def raster_grouped_average(
     group layers miss is still counted, under an all-NODATA group tuple.
     Hence the target's presence counts towards the key set.
 
-    Output: ``(list_key STRING, avg_value DOUBLE)``.
+    Output: ``([aoi_id,] list_key STRING, avg_value DOUBLE)``.
     """
-    vals = _value_cols(len(layers))
+    aoi, vals = _aoi(mask), _value_cols(len(layers))
     return (
-        mask_join(mask.select(*PIXEL_KEY), layers, target, target_in_key_set=True)
-        .groupBy(*vals)
+        mask_join(mask, layers, target, target_in_key_set=True)
+        .groupBy(*aoi, *vals)
         .agg(F.avg(F.coalesce(F.col("_t"), F.lit(0.0))).alias("avg_value"))
-        .select(list_key(*vals).alias("list_key"), "avg_value")
+        .select(*aoi, list_key(*vals).alias("list_key"), "avg_value")
     )
 
 
@@ -215,14 +218,14 @@ def raster_grouped_sum(
     layers' tiles are not counted (documented divergence from O4's
     union semantics).
 
-    Output: ``(list_key STRING, sum_value DOUBLE)``.
+    Output: ``([aoi_id,] list_key STRING, sum_value DOUBLE)``.
     """
-    vals = _value_cols(len(layers))
+    aoi, vals = _aoi(mask), _value_cols(len(layers))
     return (
-        mask_join(mask.select(*PIXEL_KEY), layers, target)
-        .groupBy(*vals)
+        mask_join(mask, layers, target)
+        .groupBy(*aoi, *vals)
         .agg(F.sum(F.coalesce(F.col("_t"), F.lit(0.0))).alias("sum_value"))
-        .select(list_key(*vals).alias("list_key"), "sum_value")
+        .select(*aoi, list_key(*vals).alias("list_key"), "sum_value")
     )
 
 
@@ -243,18 +246,17 @@ def raster_lines_join(
     then feeds ``mask_join``; line pixels are bucketed on the pixel key
     like the mask, so the merge-hinted semi join needs no Exchange.
 
-    Output: ``(list_key STRING, cnt BIGINT)``.
+    ``line_pixels`` either serve every AOI or, when both they and the
+    mask carry ``aoi_id`` (lines clipped per shape), only their own AOI.
+
+    Output: ``([aoi_id,] list_key STRING, cnt BIGINT)``.
     """
-    vals = _value_cols(len(layers))
-    on_lines = mask.select(*PIXEL_KEY).join(
-        line_pixels.select(*PIXEL_KEY).hint("merge"), on=PIXEL_KEY, how="left_semi"
+    aoi = _aoi(mask)
+    on = [*(aoi if "aoi_id" in line_pixels.columns else []), *PIXEL_KEY]
+    on_lines = mask.select(*aoi, *PIXEL_KEY).join(
+        line_pixels.select(*on).hint("merge"), on=on, how="left_semi"
     )
-    return (
-        mask_join(on_lines, layers)
-        .groupBy(*vals)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(list_key(*vals).alias("list_key"), "cnt")
-    )
+    return raster_grouped_count(layers, on_lines)
 
 
 def raster_summary(targets: Sequence[DataFrame], mask: DataFrame) -> DataFrame:
@@ -305,46 +307,27 @@ def raster_summary(targets: Sequence[DataFrame], mask: DataFrame) -> DataFrame:
     )
 
 
-def multi_operation(
-    grouped_counts: dict[str, tuple[Sequence[DataFrame], DataFrame]] | None = None,
-    grouped_averages: dict[str, tuple[Sequence[DataFrame], DataFrame, DataFrame]] | None = None,
-    averages: dict[str, tuple[DataFrame, DataFrame]] | None = None,
+def operator(
+    kind: str,
+    layers: Sequence[DataFrame],
+    target: DataFrame | None,
+    mask: DataFrame,
+    line_pixels: DataFrame | None = None,
 ) -> DataFrame:
-    """O7 MultiOperation (Geoprocessing.scala:21-89): M shapes x K ops in a
-    batch. The reference's key optimization — fetch every distinct raster
-    once for the union AOI and share it across (shape, op) pairs
-    (CHANGELOG.md:82-91) — maps to sharing the cached layer DataFrames the
-    caller passes in; the fan-out itself is a UNION of light plans, all
-    values cast to DOUBLE (the reference's /multi result type).
-
-    Output: ``(op_label STRING, list_key STRING, value DOUBLE)`` flattened;
-    the nested ``{hucId: {op: result}}`` shape is a driver-side pivot.
-    """
-    parts: list[DataFrame] = []
-    for label, (layers, mask_many) in (grouped_counts or {}).items():
-        parts.append(
-            raster_grouped_count_many(layers, mask_many).select(
-                F.concat(F.lit(label + ":"), F.col("aoi_id")).alias("op_label"),
-                "list_key",
-                F.col("cnt").cast("double").alias("value"),
-            )
-        )
-    for label, (layers, target, mask) in (grouped_averages or {}).items():
-        parts.append(
-            raster_grouped_average(layers, target, mask).select(
-                F.lit(label).alias("op_label"), "list_key", F.col("avg_value").alias("value")
-            )
-        )
-    for label, (target, mask) in (averages or {}).items():
-        parts.append(
-            raster_average(target, mask).select(
-                F.lit(label).alias("op_label"), "list_key", F.col("avg_value").alias("value")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    """The operator of one request kind over resolved inputs — ``kind`` in
+    {grouped_count, lines_join, average, grouped_average, grouped_sum,
+    summary}. The value is the last column."""
+    if kind == "grouped_count":
+        return raster_grouped_count(layers, mask)
+    if kind == "lines_join":
+        return raster_lines_join(layers, line_pixels, mask)
+    if kind == "average":
+        return raster_average(target, mask)
+    if kind == "grouped_average":
+        return raster_grouped_average(layers, target, mask)
+    if kind == "grouped_sum":
+        return raster_grouped_sum(layers, target, mask)
+    return raster_summary(layers, mask)
 
 
 def _parent_key_cols(tile_size: int, factor: int) -> list[F.Column]:

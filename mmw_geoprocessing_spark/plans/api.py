@@ -34,8 +34,9 @@ from mmw_geoprocessing_spark.errors import (
     UnknownAoiError,
     UnknownRasterError,
 )
-from mmw_geoprocessing_spark.operators import zonal
+from mmw_geoprocessing_spark.operators import mapshed, zonal
 from mmw_geoprocessing_spark.plans.model import VALID_OPERATIONS, InputData, MultiInput
+from mmw_geoprocessing_spark.sources import catalog
 from mmw_geoprocessing_spark.sources import fixtures as fx
 
 # Upper bound on the reply cache: the JSON text of the keys and replies it
@@ -128,13 +129,114 @@ def ping() -> str:
     return "pong"
 
 
-def _check_rasters(raster_ids) -> None:
-    """Typed 400 for raster ids that name no fixture layer."""
-    unknown = [r for r in raster_ids if r not in fx.RASTER_DEFS]
-    if unknown:
-        raise UnknownRasterError(
-            f"unknown raster id(s) {unknown}; known: {sorted(fx.RASTER_DEFS)}"
+# operationType -> zonal operator kind (RasterGroupedAverage: "average"
+# without group rasters, "grouped_average" with them)
+_KINDS = {
+    "RasterGroupedCount": "grouped_count",
+    "RasterGroupedCountMany": "grouped_count",
+    "RasterGroupedSum": "grouped_sum",
+    "RasterLinesJoin": "lines_join",
+    "RasterSummary": "summary",
+}
+_TARGET_KINDS = {"average", "grouped_average", "grouped_sum"}
+_MULTI_OPERATIONS = {"RasterGroupedCount", "RasterGroupedAverage", "RasterGroupedSum", "RasterLinesJoin"}
+
+
+@dataclasses.dataclass
+class _Op:
+    """One operation, resolved to its zonal operator kind."""
+
+    label: str
+    kind: str
+    rasters: list[str]
+    target: str | None
+    pixel_is_area: bool
+
+
+def _op(name: str, label: str, rasters, target, pixel_is_area: bool) -> _Op:
+    """The operation's kind; typed 400s when it misses an input."""
+    if name == "RasterGroupedAverage":
+        kind = "grouped_average" if rasters else "average"
+    else:
+        kind = _KINDS[name]
+    if kind in _TARGET_KINDS and not target:
+        raise MissingTargetRasterError(f"{name} requires targetRaster")
+    if kind not in _TARGET_KINDS and not rasters:
+        raise MissingVectorError(f"{name} requires rasters")
+    return _Op(label, kind, list(rasters), target if kind in _TARGET_KINDS else None, pixel_is_area)
+
+
+@dataclasses.dataclass
+class _Request:
+    """A /run or /multi request in one form: shapes, operations, frames.
+    AOI ids are checked when it is built, before any Spark work."""
+
+    endpoint: str
+    shapes: list[str]  # AOI ids, or GeoJSON strings when ``geojson``
+    geojson: bool
+    # each shape's aoi_id; None: one shape, the union of all of them (the
+    # reference unions AOIs before rasterizing, Utils.scala:70-73)
+    labels: list[str] | None
+    ops: list[_Op]
+    shape_crs: str | None
+    raster_crs: str | None
+    vector_crs: str | None
+    zoom: int
+    layout: object | None
+    stream_lines: list[str] | None
+    fixture_lines: bool  # line pixels from the session fixture
+
+    def __post_init__(self) -> None:
+        if not self.geojson:
+            _check_aois(self.shapes)
+
+
+def _from_run(d: InputData) -> _Request:
+    """POST /run as one operation over its shape — over its N shapes,
+    one per AOI id or GeoJSON string, for RasterGroupedCountMany."""
+    name = d.operation_type
+    if name not in VALID_OPERATIONS:
+        raise InvalidOperationError(f"invalid operationType {name!r}")
+    op = _op(name, name, d.rasters, d.target_raster, d.pixel_is_area)
+    shapes = d.aoi_ids or d.shape_geojson
+    many = name == "RasterGroupedCountMany"
+    if not shapes:
+        raise MissingVectorError(
+            "RasterGroupedCountMany requires aoi_ids or polygon" if many
+            else "operation requires an AOI (aoi_ids or shape GeoJSON)"
         )
+    labels = None
+    if many:
+        labels = list(d.aoi_ids or (f"shape_{i}" for i in range(len(shapes))))
+    return _Request(
+        "run", list(shapes), not d.aoi_ids, labels, [op], d.shape_crs, d.raster_crs,
+        d.vector_crs, d.zoom, d.layout, d.stream_lines_geojson, d.use_line_pixels,
+    )
+
+
+def _geojson_shapes(multi: MultiInput) -> bool:
+    return bool(multi.shapes) and multi.shapes[0].lstrip().startswith("{")
+
+
+def _from_multi(m: MultiInput) -> _Request:
+    """POST /multi: M shapes x K operations. GeoJSON shapes (the
+    reference's wire shape, Geoprocessing.scala:23-24) are keyed by their
+    wire HUC id (WebServer.scala:32-35), else ``shape_{i}`` in input
+    order; AOI-id shapes by their id, with fixture line pixels."""
+    ops = []
+    for o in m.operations:
+        if o.name not in _MULTI_OPERATIONS:
+            raise InvalidOperationError(f"/multi does not support {o.name!r}")
+        ops.append(_op(o.name, o.label, o.rasters, o.target_raster, o.pixel_is_area))
+    geojson = _geojson_shapes(m)
+    labels = list(m.shapes)
+    if geojson:
+        ids = m.shape_ids or [None] * len(m.shapes)
+        labels = [hid if hid is not None else f"shape_{i}" for i, hid in enumerate(ids)]
+    return _Request(
+        "multi", list(m.shapes), geojson, labels, ops, m.shape_crs, m.raster_crs,
+        None, m.zoom, None, m.stream_lines_geojson, not geojson,
+    )
 
 
 def _check_aois(aoi_ids) -> None:
@@ -142,6 +244,18 @@ def _check_aois(aoi_ids) -> None:
     unknown = [a for a in aoi_ids if a not in fx.AOI_DEFS and a not in fx.SWEEP_ONLY_AOI_DEFS]
     if unknown:
         raise UnknownAoiError(f"unknown AOI id(s) {unknown}")
+
+
+def _check_rasters(spark: SparkSession, raster_ids: list[str]) -> None:
+    """Typed 400 for raster ids that name no layer: no fixture layer, or
+    no ``layer=<id>`` directory under ``SPARK_GRAFT_CATALOG_ROOT``."""
+    root = _catalog_root()
+    known = catalog.stored_layers(spark, root) if root else fx.RASTER_DEFS
+    unknown = [r for r in raster_ids if known is not None and r not in known]
+    if unknown:
+        raise UnknownRasterError(
+            f"unknown raster id(s) {unknown}; known: {sorted(known)}"
+        )
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -163,22 +277,29 @@ def _id_masks(spark: SparkSession, aoi_ids: list[str], zoom: int, tagged: bool =
     return _union(parts).dropDuplicates(zonal.PIXEL_KEY)
 
 
-def _aoi_polys(input_data: InputData):
-    """Parse + reproject the request's GeoJSON AOI into the raster
-    frame; None when the request uses pre-rasterized aoi_ids."""
-    if not input_data.shape_geojson:
-        return None
-    geometry.validate_crs(input_data.shape_crs)
-    polys = [p for g in input_data.shape_geojson for p in geometry.parse_multipolygon(g)]
-    if input_data.raster_crs and input_data.raster_crs != input_data.shape_crs:
-        geometry.validate_crs(input_data.raster_crs)
-        polys = projection.reproject_polygons(
-            polys, input_data.shape_crs, input_data.raster_crs
-        )
+def _shape_polys(req: _Request) -> list:
+    """Each GeoJSON shape's polygons, parsed and reprojected into the
+    raster frame (Utils.scala:96-98; /multi's wire default is LatLng
+    shapes against a ConusAlbers grid, Geoprocessing.scala:23-24)."""
+    geometry.validate_crs(req.shape_crs)
+    polys = [geometry.parse_multipolygon(g) for g in req.shapes]
+    if req.raster_crs and req.raster_crs != req.shape_crs:
+        geometry.validate_crs(req.raster_crs)
+        polys = [projection.reproject_polygons(p, req.shape_crs, req.raster_crs) for p in polys]
     return polys
 
 
-def _layout(input_data: InputData):
+def _per_shape(req: _Request, polys: list, build) -> DataFrame:
+    """``build(polygons)`` over the request's one shape (all its
+    polygons), or over each labelled shape, tagged with its ``aoi_id``."""
+    if req.labels is None:
+        return build([p for ps in polys for p in ps])
+    return _union([
+        build(ps).withColumn("aoi_id", F.lit(label)) for label, ps in zip(req.labels, polys)
+    ])
+
+
+def _layout(req: _Request):
     # Explicit layout wins (caller vouches it matches its layers); else
     # the request zoom must resolve to a REGISTERED layer layout. The
     # reference derives the grid from the tile layer itself
@@ -186,37 +307,14 @@ def _layout(input_data: InputData):
     # diverge; rasterizing a mask in the raw pyramid formula's frame
     # while fixture layers are keyed in the zoom-0 frame would join
     # mismatched pixel keys and return silently wrong counts.
-    if input_data.layout:
-        return input_data.layout
-    if input_data.zoom not in geometry.ZOOM_LAYOUTS:
+    if req.layout:
+        return req.layout
+    if req.zoom not in geometry.ZOOM_LAYOUTS:
         raise InvalidZoomError(
-            f"zoom {input_data.zoom} has no registered layer layout; "
+            f"zoom {req.zoom} has no registered layer layout; "
             f"registered zooms: {sorted(geometry.ZOOM_LAYOUTS)}"
         )
-    return geometry.ZOOM_LAYOUTS[input_data.zoom]
-
-
-def _fixture_zoom(input_data: InputData) -> int:
-    """The pyramid level fixture layers, masks and line pixels are served
-    at: the stored pixels at zoom 0 and the native level, pyramid_down'ed
-    levels below it, so masks and layers join in one pixel keyspace
-    (unpyramided masks against pyramided layers silently join mismatched
-    keys). Unregistered zooms are a typed 400."""
-    if input_data.zoom not in (0, fx.ZOOM_NATIVE):
-        _layout(input_data)
-    return input_data.zoom
-
-
-def _mask(spark: SparkSession, input_data: InputData):
-    if input_data.aoi_ids:
-        return _id_masks(spark, input_data.aoi_ids, _fixture_zoom(input_data))
-    polys = _aoi_polys(input_data)
-    if polys is not None:
-        return geometry.rasterize_polygons(
-            spark, polys, input_data.pixel_is_area,
-            layout=_with_layer_extent(spark, _layout(input_data)),
-        )
-    raise MissingVectorError("operation requires an AOI (aoi_ids or shape GeoJSON)")
+    return geometry.ZOOM_LAYOUTS[req.zoom]
 
 
 def _with_layer_extent(spark: SparkSession, layout):
@@ -227,8 +325,6 @@ def _with_layer_extent(spark: SparkSession, layout):
     grid are never enumerated. All fixture layers share the cells grid;
     a catalog deployment passes per-layer extents through
     register_zoom_layouts instead."""
-    import dataclasses
-
     if layout.extent_keys is not None:
         return layout
     return dataclasses.replace(layout, extent_keys=fx.grid_key_extent(spark))
@@ -251,47 +347,49 @@ def _parse_lines_geojson(strings: list[str]) -> list[list[tuple[float, float]]]:
     return lines
 
 
-def _lines(spark: SparkSession, input_data: InputData):
-    if input_data.use_line_pixels:
-        return fx.line_pixels_df_at_zoom(spark, _fixture_zoom(input_data))
-    if input_data.stream_lines_geojson:
-        lines = _parse_lines_geojson(input_data.stream_lines_geojson)
-        src_crs = input_data.vector_crs or input_data.shape_crs or "LatLng"
-        if input_data.raster_crs and input_data.raster_crs != src_crs:
-            # typed 400s for unknown frames (Utils.scala:208-213), not a
-            # KeyError out of the projection kernel
-            geometry.validate_crs(src_crs)
-            geometry.validate_crs(input_data.raster_crs)
-            lines = projection.reproject_lines(lines, src_crs, input_data.raster_crs)
-        # geometric clip to the AOI before rasterizing (reference
+def _line_pixels(spark: SparkSession, req: _Request, polys, layout) -> DataFrame:
+    """The stream-line pixels: the session fixture's at the request zoom,
+    or the request's lines in the raster frame, clipped per shape."""
+    if req.fixture_lines:
+        return fx.line_pixels_df_at_zoom(spark, req.zoom)
+    if not req.stream_lines:
+        where = " in /multi" if req.endpoint == "multi" else ""
+        raise MissingStreamLinesError(f"RasterLinesJoin{where} requires streamLines")
+    lines = _parse_lines_geojson(req.stream_lines)
+    src_crs = req.vector_crs or req.shape_crs or "LatLng"
+    if req.raster_crs and req.raster_crs != src_crs:
+        # typed 400s for unknown frames (Utils.scala:208-213), not a
+        # KeyError out of the projection kernel
+        geometry.validate_crs(src_crs)
+        geometry.validate_crs(req.raster_crs)
+        lines = projection.reproject_lines(lines, src_crs, req.raster_crs)
+
+    def rasterize(shape_polys):
+        # geometric clip to the shape before rasterizing (reference
         # Utils.scala:196-198): a segment that crosses a mask cell only
         # where the AOI does not must contribute nothing to that cell —
-        # the cell-level mask semi-join in raster_lines_join cannot
-        # distinguish that case.
-        polys = _aoi_polys(input_data)
-        if polys is not None:
-            lines = geometry.clip_lines(lines, polys)
-        return geometry.rasterize_lines(spark, lines, layout=_layout(input_data))
-    raise MissingStreamLinesError("RasterLinesJoin requires streamLines")
+        # the cell-level mask semi-join cannot distinguish that case.
+        # AOI-id shapes have no geometry; the semi-join clips them.
+        clipped = lines if shape_polys is None else geometry.clip_lines(lines, shape_polys)
+        return geometry.rasterize_lines(spark, clipped, layout=layout)
+
+    return rasterize(None) if polys is None else _per_shape(req, polys, rasterize)
 
 
-def _layers(spark: SparkSession, input_data: InputData, raster_ids: list[str]):
+def _layers(
+    spark: SparkSession, req: _Request, raster_ids: list[str], polys, layout
+) -> dict[str, DataFrame]:
     """Resolve raster layers for a request. Default: the synthetic
-    session fixtures. With ``SPARK_GRAFT_CATALOG_ROOT`` set, layers come
-    from the external partitioned catalog with the AOI's bbox pushed
-    down as partition pruning — the reference's ``cropRastersToAOI``
-    (Utils.scala:34-41): each layer is read once, only Intersects-ing
-    tiles are scanned."""
+    session fixtures at the request zoom. With ``SPARK_GRAFT_CATALOG_ROOT``
+    set, layers come from the external partitioned catalog with the
+    shapes' bbox pushed down as partition pruning — the reference's
+    ``cropRastersToAOI`` (Utils.scala:34-41): each layer is read once,
+    only Intersects-ing tiles are scanned."""
     root = _catalog_root()
     if not root:
         # the REAL per-zoom pyramid level (the reference fetches a
         # different layer per zoom, not a reframed native one)
-        zoom = _fixture_zoom(input_data)
-        return [fx.raster_df_at_zoom(spark, r, zoom) for r in raster_ids]
-    from mmw_geoprocessing_spark.sources import catalog
-
-    polys = _aoi_polys(input_data) if input_data.shape_geojson else None
-    layout = _layout(input_data) if polys else None
+        return {r: fx.raster_df_at_zoom(spark, r, req.zoom) for r in raster_ids}
     # layout validation (the reference derives the grid FROM the layer,
     # Geoprocessing.scala:219-221, so mask and layer frames cannot
     # diverge): when a layer carries a _layout.json sidecar, its stored
@@ -300,24 +398,88 @@ def _layers(spark: SparkSession, input_data: InputData, raster_ids: list[str]):
     # join mismatched pixel keys and return silently wrong results. The
     # same sidecar read gives the layer's value type, which lets the
     # read declare its schema instead of inferring it in a Spark job.
-    req_layout = layout if layout is not None else _layout(input_data)
     value_types: dict[str, str | None] = {}
-    for rid in dict.fromkeys(raster_ids):
+    for rid in raster_ids:
         try:
             meta = catalog.read_layer_meta(root, rid)
             value_types[rid] = meta.get("value_type")
             stored, _zoom = catalog.layout_from_meta(rid, meta)
         except (OSError, ValueError):
             continue  # no sidecar or no grid in it — caller vouches for the frame
-        if stored != req_layout:
+        if stored != layout:
             raise InvalidZoomError(
                 f"layer {rid!r} is stored in grid {stored}, but the request "
-                f"resolves to {req_layout} (zoom {input_data.zoom}); a "
+                f"resolves to {layout} (zoom {req.zoom}); a "
                 "mask/layer frame mismatch would join mismatched pixel keys"
             )
-    return catalog.read_layers_for_aoi(
-        spark, root, raster_ids, polys, layout, value_types=value_types
+    aoi = [p for ps in polys for p in ps] if polys is not None else None
+    layers = catalog.read_layers_for_aoi(
+        spark, root, raster_ids, aoi, layout if aoi else None, value_types=value_types
     )
+    return dict(zip(raster_ids, layers))
+
+
+@dataclasses.dataclass
+class _Resolved:
+    """A request's inputs: one mask per pixel mode its operations use,
+    ``([aoi_id,] pixel key)``; its layers by raster id; its line pixels."""
+
+    masks: dict[bool, DataFrame]
+    layers: dict[str, DataFrame]
+    line_pixels: DataFrame | None
+
+
+def _resolve(spark: SparkSession, req: _Request) -> _Resolved:
+    """Masks, layers and line pixels for every operation of ``req``.
+    Ids are checked and GeoJSON is parsed, reprojected and rasterized
+    (on the driver) before any Spark job; each layer is resolved once and
+    shared by every (shape, operation) pair — the reference's shared
+    raster fetch (CHANGELOG.md:82-91)."""
+    raster_ids = list(dict.fromkeys(
+        r for op in req.ops for r in (*op.rasters, *([op.target] if op.target else []))
+    ))
+    _check_rasters(spark, raster_ids)
+    layout = _layout(req)
+    polys = _shape_polys(req) if req.geojson else None
+    layers = _layers(spark, req, raster_ids, polys, layout)
+    # one mask per sampling mode requested (each /multi op carries its
+    # own pixelIsArea, Utils.scala:109-118); AOI-id masks have one mode
+    modes = dict.fromkeys(op.pixel_is_area for op in req.ops)
+    if polys is None:
+        masks = dict.fromkeys(
+            modes, _id_masks(spark, req.shapes, req.zoom, tagged=req.labels is not None)
+        )
+    else:
+        grid = _with_layer_extent(spark, layout)
+        masks = {
+            mode: _per_shape(
+                req, polys,
+                lambda ps, mode=mode: geometry.rasterize_polygons(spark, ps, mode, layout=grid),
+            )
+            for mode in modes
+        }
+    line_pixels = None
+    if any(op.kind == "lines_join" for op in req.ops):
+        line_pixels = _line_pixels(spark, req, polys, layout)
+    return _Resolved(masks, layers, line_pixels)
+
+
+def _plan(req: _Request, res: _Resolved) -> DataFrame:
+    """One plan for all of the request's operations: each runs once over
+    all shapes, ``aoi_id`` in its grouping key — /run through its zonal
+    operator, /multi through its MapShed template, every template in one
+    union (M x K cases, K plans, one collect)."""
+    parts = []
+    for op in req.ops:
+        args = (
+            op.kind, [res.layers[r] for r in op.rasters], res.layers.get(op.target),
+            res.masks[op.pixel_is_area], res.line_pixels,
+        )
+        parts.append(
+            mapshed.template_df(op.label, *args) if req.endpoint == "multi"
+            else zonal.operator(*args)
+        )
+    return _union(parts)
 
 
 def run_request(spark: SparkSession, input_data: InputData) -> dict:
@@ -334,100 +496,11 @@ def run_request(spark: SparkSession, input_data: InputData) -> dict:
 
 
 def _run(spark: SparkSession, input_data: InputData) -> dict:
-    op = input_data.operation_type
-    if op not in VALID_OPERATIONS:
-        raise InvalidOperationError(f"invalid operationType {op!r}")
-    # ids are checked before any Spark work
-    _check_aois(input_data.aoi_ids or [])
-    if not _catalog_root():
-        _check_rasters(input_data.rasters)
-        if op in ("RasterGroupedAverage", "RasterGroupedSum") and input_data.target_raster:
-            _check_rasters([input_data.target_raster])
-
-    layers = _layers(spark, input_data, input_data.rasters)
-
-    if op == "RasterGroupedCount":
-        if not layers:
-            raise MissingVectorError("RasterGroupedCount requires rasters")
-        df = zonal.raster_grouped_count(layers, _mask(spark, input_data))
-        return {r["list_key"]: r["cnt"] for r in df.collect()}
-
-    if op == "RasterGroupedCountMany":
-        if not input_data.aoi_ids:
-            if input_data.shape_geojson:
-                # the reference wire path (TR55 example): one histogram
-                # per input polygon STRING, in input order — ResultManyInt
-                # (Geoprocessing.scala:114-126). Tiles are fetched once
-                # for all polygons (one plan, aoi_id in the grouping key).
-                geometry.validate_crs(input_data.shape_crs)
-                labels = [f"shape_{i}" for i in range(len(input_data.shape_geojson))]
-                # clipped to the layer extent like _mask's: candidates
-                # outside the layer grid cannot match any layer tile
-                layout = _with_layer_extent(spark, _layout(input_data))
-                parts = []
-                for label, g in zip(labels, input_data.shape_geojson):
-                    polys = geometry.parse_multipolygon(g)
-                    if (
-                        input_data.raster_crs
-                        and input_data.raster_crs != input_data.shape_crs
-                    ):
-                        geometry.validate_crs(input_data.raster_crs)
-                        polys = projection.reproject_polygons(
-                            polys, input_data.shape_crs, input_data.raster_crs
-                        )
-                    parts.append(
-                        geometry.rasterize_polygons(
-                            spark,
-                            polys,
-                            input_data.pixel_is_area,
-                            layout=layout,
-                        ).withColumn("aoi_id", F.lit(label))
-                    )
-                rows = zonal.raster_grouped_count_many(layers, _union(parts)).collect()
-                return [
-                    {r["list_key"]: r["cnt"] for r in rows if r["aoi_id"] == label}
-                    for label in labels
-                ]
-            raise MissingVectorError(
-                "RasterGroupedCountMany requires aoi_ids or polygon"
-            )
-        mask_many = _id_masks(
-            spark, input_data.aoi_ids, _fixture_zoom(input_data), tagged=True
-        )
-        df = zonal.raster_grouped_count_many(layers, mask_many)
-        rows = df.collect()
-        # input-polygon order preserved (Geoprocessing.scala:124)
-        return {
-            aoi: {r["list_key"]: r["cnt"] for r in rows if r["aoi_id"] == aoi}
-            for aoi in input_data.aoi_ids
-        }
-
-    if op in ("RasterGroupedAverage", "RasterGroupedSum"):
-        if not input_data.target_raster:
-            raise MissingTargetRasterError(f"{op} requires targetRaster")
-        target = _layers(spark, input_data, [input_data.target_raster])[0]
-        mask = _mask(spark, input_data)
-        if op == "RasterGroupedSum":
-            df = zonal.raster_grouped_sum(layers, target, mask)
-            return {r["list_key"]: r["sum_value"] for r in df.collect()}
-        if not layers:  # ungrouped average path (Geoprocessing.scala:61,148)
-            df = zonal.raster_average(target, mask)
-            return {r["list_key"]: r["avg_value"] for r in df.collect()}
-        df = zonal.raster_grouped_average(layers, target, mask)
-        return {r["list_key"]: r["avg_value"] for r in df.collect()}
-
-    if op == "RasterLinesJoin":
-        if not layers:
-            raise MissingVectorError("RasterLinesJoin requires rasters")
-        df = zonal.raster_lines_join(layers, _lines(spark, input_data), _mask(spark, input_data))
-        return {r["list_key"]: r["cnt"] for r in df.collect()}
-
-    if op == "RasterSummary":
-        targets = layers
-        if not targets:
-            raise MissingVectorError("RasterSummary requires rasters")
-        df = zonal.raster_summary(targets, _mask(spark, input_data))
-        by_idx = {r["raster_idx"]: r for r in df.collect()}
+    req = _from_run(input_data)
+    rows = _plan(req, _resolve(spark, req)).collect()
+    op = req.ops[0]
+    if op.kind == "summary":
+        by_idx = {r["raster_idx"]: r for r in rows}
         # input-raster order preserved (Geoprocessing.scala:422-423);
         # a raster with no surviving mask cells (e.g. an AOI outside
         # the layer extent, where the mask is empty by construction)
@@ -438,23 +511,23 @@ def _run(spark: SparkSession, input_data: InputData) -> dict:
                 "avg": r["avg_value"] if r is not None else None,
                 "max": r["max_value"] if r is not None else None,
             }
-            for r in (by_idx.get(i) for i in range(len(targets)))
+            for r in (by_idx.get(i) for i in range(len(op.rasters)))
         ]
-
-    raise InvalidOperationError(op)  # unreachable
-
-
-_MULTI_KINDS = {
-    "RasterGroupedCount": "grouped_count",
-    "RasterLinesJoin": "lines_join",
-    "RasterGroupedSum": "grouped_sum",
-}
+    if req.labels is None:
+        return {r["list_key"]: r[-1] for r in rows}
+    # input-polygon order preserved (Geoprocessing.scala:124): keyed by
+    # AOI id, or one histogram per GeoJSON string — ResultManyInt
+    # (Geoprocessing.scala:114-126)
+    per_shape: dict[str, dict] = {label: {} for label in req.labels}
+    for r in rows:
+        per_shape[r["aoi_id"]][r["list_key"]] = r[-1]
+    return list(per_shape.values()) if req.geojson else per_shape
 
 
 def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
     """POST /multi (Geoprocessing.scala:21-89): shapes x operations.
     Requests over fixture AOI ids (no GeoJSON, no stream lines) are
-    memoized; see ``_multi`` for the plan."""
+    memoized; see ``_plan`` for the plan."""
     cacheable = (
         bool(multi.shapes)
         and not _geojson_shapes(multi)
@@ -463,134 +536,13 @@ def multi_request(spark: SparkSession, multi: MultiInput) -> dict:
     return _memoized(spark, "multi", multi, cacheable, _multi)
 
 
-def _geojson_shapes(multi: MultiInput) -> bool:
-    return bool(multi.shapes) and multi.shapes[0].lstrip().startswith("{")
-
-
-def _multi_kind(op) -> str:
-    """The mapshed.template_df kind of one /multi operation."""
-    if op.name == "RasterGroupedAverage":
-        return "average" if not op.rasters else "grouped_average"
-    if op.name in _MULTI_KINDS:
-        return _MULTI_KINDS[op.name]
-    raise InvalidOperationError(f"/multi does not support {op.name!r}")
-
-
 def _multi(spark: SparkSession, multi: MultiInput) -> dict:
-    """POST /multi, uncached.
-
-    Single-pass: each operation runs ONCE over all shapes with aoi_id in
-    its grouping key (mapshed.template_df); M x K cases cost K plans in
-    one union and one collect — the reference's shared-raster-fetch
-    optimization (CHANGELOG.md:82-91) without its per-pair request loop.
-    Shapes whose op results are empty emit ``{}`` (CHANGELOG.md:66-79).
-
-    Shapes may be pre-rasterized aoi ids OR GeoJSON strings (the
-    reference's wire shape, Geoprocessing.scala:23-24): GeoJSON shapes
-    are rasterized into per-shape masks keyed ``shape_{i}`` in input
-    order; ``multi.shape_crs`` is validated like /run's.
-    """
-    from mmw_geoprocessing_spark.operators.mapshed import template_df
-
-    # operations and ids are checked before any Spark work
-    kinds = [_multi_kind(op) for op in multi.operations]
-    for op, kind in zip(multi.operations, kinds):
-        _check_rasters(op.rasters)
-        if kind in ("average", "grouped_average", "grouped_sum"):
-            if not op.target_raster:
-                raise MissingTargetRasterError(f"{op.name} requires targetRaster")
-            _check_rasters([op.target_raster])
-    if _geojson_shapes(multi):
-        geometry.validate_crs(multi.shape_crs)
-        # response keys are the reference HUC ids when the wire carried
-        # them (WebServer.scala:32-35), positional labels otherwise
-        ids = multi.shape_ids or [None] * len(multi.shapes)
-        shape_labels = [
-            hid if hid is not None else f"shape_{i}" for i, hid in enumerate(ids)
-        ]
-        polys_per_shape = [geometry.parse_multipolygon(g) for g in multi.shapes]
-        # normalize into the raster frame (reference Geoprocessing.scala:
-        # 23-24 normalizeHuc; Utils.scala:96-98): the wire default is
-        # LatLng shapes against a ConusAlbers grid
-        if multi.raster_crs and multi.raster_crs != multi.shape_crs:
-            geometry.validate_crs(multi.raster_crs)
-            polys_per_shape = [
-                projection.reproject_polygons(polys, multi.shape_crs, multi.raster_crs)
-                for polys in polys_per_shape
-            ]
-
-        # rasterize once per sampling mode actually requested (each op
-        # carries its own pixelIsArea, Utils.scala:109-118)
-        if multi.zoom not in geometry.ZOOM_LAYOUTS:
-            raise InvalidZoomError(
-                f"zoom {multi.zoom} has no registered layer layout; "
-                f"registered zooms: {sorted(geometry.ZOOM_LAYOUTS)}"
-            )
-        multi_layout = _with_layer_extent(spark, geometry.ZOOM_LAYOUTS[multi.zoom])
-
-        def masks_for(pixel_is_area: bool):
-            return _union([
-                geometry.rasterize_polygons(
-                    spark, polys, pixel_is_area, layout=multi_layout
-                ).withColumn("aoi_id", F.lit(label))
-                for label, polys in zip(shape_labels, polys_per_shape)
-            ])
-
-        masks_by_mode = {
-            mode: masks_for(mode) for mode in {op.pixel_is_area for op in multi.operations}
-        }
-
-        # request streamLines (reference MultiInput.streamLines,
-        # WebServer.scala:47): clip geometrically PER SHAPE
-        # (Utils.scala:196-198 via Geoprocessing.scala:64-66), rasterize
-        # in the request frame, tag aoi_id — one union consumed by every
-        # lines_join template through the same masks semi-join as /run
-        multi_line_pixels = None
-        wants_lines = "lines_join" in kinds
-        if wants_lines and not multi.stream_lines_geojson:
-            # reference MissingStreamLinesException
-            # (Geoprocessing.scala:70-74) -> typed 400. The fixture
-            # line-pixel fallback belongs only to the pre-rasterized
-            # aoi-id path below.
-            raise MissingStreamLinesError(
-                "RasterLinesJoin in /multi requires streamLines"
-            )
-        if multi.stream_lines_geojson and wants_lines:
-            lines = _parse_lines_geojson(multi.stream_lines_geojson)
-            if multi.raster_crs and multi.raster_crs != multi.shape_crs:
-                lines = projection.reproject_lines(
-                    lines, multi.shape_crs, multi.raster_crs
-                )
-            multi_line_pixels = _union([
-                geometry.rasterize_lines(
-                    spark, geometry.clip_lines(lines, polys), layout=multi_layout
-                ).withColumn("aoi_id", F.lit(label))
-                for label, polys in zip(shape_labels, polys_per_shape)
-            ])
-    else:
-        _check_aois(multi.shapes)
-        shape_labels = list(multi.shapes)
-        masks_by_mode = None
-        multi_line_pixels = None
-
-    out: dict[str, dict] = {label: {} for label in shape_labels}
-    if not shape_labels or not kinds:
+    """POST /multi, uncached. Shapes whose op results are empty emit
+    ``{}`` (CHANGELOG.md:66-79)."""
+    req = _from_multi(multi)
+    out: dict[str, dict] = {label: {} for label in req.labels}
+    if not req.shapes or not req.ops:
         return out
-    if masks_by_mode is None:
-        # fixture masks sit at the native frame
-        masks = _id_masks(spark, shape_labels, 0, tagged=True)
-    parts = [
-        template_df(
-            spark,
-            op.label,
-            kind,
-            list(op.rasters),
-            op.target_raster,
-            masks_by_mode[op.pixel_is_area] if masks_by_mode is not None else masks,
-            line_pixels=multi_line_pixels if kind == "lines_join" else None,
-        )
-        for op, kind in zip(multi.operations, kinds)
-    ]
-    for r in _union(parts).collect():
+    for r in _plan(req, _resolve(spark, req)).collect():
         out[r["aoi_id"]].setdefault(r["op_label"], {})[r["list_key"]] = r["value"]
     return out

@@ -30,9 +30,7 @@ of the reference fetching only Intersects-ing 512x512 tiles.
   wider than ``_ROW_PRUNE_MAX_COLS`` key columns skip the row-level
   listings (PartitionFilters still prunes declaratively). A root that
   no filesystem can list degrades to full-tree discovery WITH a
-  warning. A metastore-registered external table (partition metadata
-  in the catalog) is the next step at real scale and composes with
-  this reader unchanged.
+  warning.
 - Planning a read launches no Spark job, as the reference fetches
   tiles with no schema or listing pass (Utils.scala:22-23, 241-248):
   the schema is declared from the ``_layout.json`` sidecar's value
@@ -108,6 +106,15 @@ def _list_dir(spark: SparkSession | None, path: str) -> list[str] | None:
         return [st.getPath().getName() for st in fs.listStatus(jpath)]
     except Exception:
         return None
+
+
+def stored_layers(spark: SparkSession | None, root: str) -> set[str] | None:
+    """The ids of the layers stored under ``root`` (its ``layer=<id>``
+    directories); None when the root cannot be listed."""
+    entries = _list_dir(spark, root)
+    if entries is None:
+        return None
+    return {e[len("layer="):] for e in entries if e.startswith("layer=")}
 
 
 def _read_text(spark: SparkSession | None, path: str) -> str:
@@ -404,15 +411,12 @@ def read_layer(
         )
     df = reader.parquet(*paths).where(F.col("layer") == layer_id)
     if key_bounds is not None:
-        kc0, kc1, kr0, kr1 = key_bounds
+        # SQL text: one parsed predicate and one projection instead of a
+        # py4j call per Column, which made up most of a read's planning time
         df = df.where(
-            (F.col("key_col") >= kc0)
-            & (F.col("key_col") <= kc1)
-            & (F.col("key_row") >= kr0)
-            & (F.col("key_row") <= kr1)
+            "key_col BETWEEN {} AND {} AND key_row BETWEEN {} AND {}".format(*map(int, key_bounds))
         )
-    casts = [F.col(c).cast("int").alias(c) for c in PIXEL_KEY]
-    return df.select(*casts, "value")
+    return df.selectExpr(*(f"CAST({c} AS INT) AS {c}" for c in PIXEL_KEY), "value")
 
 
 def read_layers_for_aoi(
@@ -437,89 +441,3 @@ def read_layers_for_aoi(
         if lid not in seen:
             seen[lid] = read_layer(spark, root, lid, key_bounds, value_types.get(lid))
     return [seen[lid] for lid in layer_ids]
-
-
-# ---------------------------------------------------------------------------
-# Metastore-registered external tables: partition metadata IN the catalog.
-#
-# The path-based reader above still pays one-to-two driver-side listings
-# per query (cheap, but a listing). At real scale the standard fix is to
-# register each layer as an EXTERNAL PARTITIONED TABLE whose partition
-# list lives in the metastore (session catalog locally; Hive/Glue on a
-# cluster): ingest recovers partitions ONCE, and every subsequent query
-# prunes via the catalog's partition metadata — zero filesystem listings
-# at planning time, the scan touches only in-range tile directories.
-# This is the "metastore-registered external table" step the module
-# notes promise, and it composes with the path reader unchanged: same
-# layout on disk, same pixel schema out.
-# ---------------------------------------------------------------------------
-
-
-def layer_table_name(layer_id: str, prefix: str = "layer") -> str:
-    """Catalog-safe table name for a layer id."""
-    import re
-
-    return f"{prefix}_{re.sub(r'[^A-Za-z0-9_]', '_', layer_id)}"
-
-
-def register_layer_table(
-    spark: SparkSession,
-    root: str,
-    layer_id: str,
-    prefix: str = "layer",
-) -> str:
-    """Register one layer directory as an external partitioned table and
-    recover its partitions into the metastore. Run at INGEST time (or
-    after ``write_layer``); returns the table name.
-
-    The one-time ``RECOVER PARTITIONS`` walk replaces the per-query
-    discovery listing: afterwards Catalyst's PruneFileSourcePartitions
-    consults the catalog's partition metadata (``PartitionFilters`` +
-    ``PartitionCount`` in the scan) and execution lists only the
-    selected tile directories. With the default in-memory session
-    catalog the registration lives for the session; a deployment points
-    ``spark.sql.catalogImplementation`` at a persistent metastore and
-    ingest registers once for all readers — the catalog analogue of the
-    reference's attribute-store-backed layer metadata (Utils.scala:22-23).
-    """
-    vt = read_layer_value_type(root, layer_id) or "int"
-    tbl = layer_table_name(layer_id, prefix)
-    loc = os.path.join(root, f"layer={layer_id}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(
-        f"CREATE TABLE {tbl} "
-        f"(cell_col INT, cell_row INT, value {vt}, key_col INT, key_row INT) "
-        f"USING PARQUET PARTITIONED BY (key_col, key_row) "
-        f"LOCATION '{loc}'"
-    )
-    spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
-    return tbl
-
-
-def read_layer_table(
-    spark: SparkSession,
-    layer_id_or_table: str,
-    key_bounds: tuple[int, int, int, int] | None = None,
-    prefix: str = "layer",
-) -> DataFrame:
-    """Read a registered layer table as a zonal-compatible pixel table.
-
-    ``key_bounds`` becomes partition predicates resolved against the
-    METASTORE partition list — no filesystem listing on the query path
-    (contrast ``read_layer``'s driver-side directory pruning). Output
-    schema matches ``read_layer`` exactly.
-    """
-    name = layer_id_or_table
-    if not spark.catalog.tableExists(name):
-        name = layer_table_name(layer_id_or_table, prefix)
-    df = spark.table(name)
-    if key_bounds is not None:
-        kc0, kc1, kr0, kr1 = key_bounds
-        df = df.where(
-            (F.col("key_col") >= kc0)
-            & (F.col("key_col") <= kc1)
-            & (F.col("key_row") >= kr0)
-            & (F.col("key_row") <= kr1)
-        )
-    casts = [F.col(c).cast("int").alias(c) for c in PIXEL_KEY]
-    return df.select(*casts, "value")

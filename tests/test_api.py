@@ -331,16 +331,14 @@ def _zoom_shape(scale: float) -> str:
 
 
 def _mask_at(spark, zoom, shape):
-    from mmw_geoprocessing_spark.plans.api import _mask
-
-    return _mask(
-        spark,
+    req = api._from_run(
         InputData(
             "RasterGroupedCount", rasters=["nlcd"],
             shape_geojson=[shape], shape_crs="ConusAlbers",
             raster_crs=None, zoom=zoom,
         ),
     )
+    return api._resolve(spark, req).masks[False]
 
 
 def test_run_zoom_selects_grid_layout(spark, tables):
@@ -725,3 +723,26 @@ def test_stream_line_non_finite_coordinate_typed_400(spark, tables):
                            stream_lines_geojson=[line],
                            operations=[Operation("RasterLinesJoin", "s", rasters=["nlcd"])]),
             )
+
+
+def test_multi_serves_the_request_zoom_like_run(spark, tables):
+    """/multi resolves masks and layers through the same step as /run, so
+    at zoom 12 both read the zoom-12 pyramid level: a GeoJSON square and
+    an AOI id give equal answers on both endpoints."""
+    shapes = [
+        (_zoom_shape(60.0), {"shape_geojson": [_zoom_shape(60.0)], "shape_crs": "ConusAlbers"}),
+        ("huc12_01", {"aoi_ids": ["huc12_01"]}),
+    ]
+    for shape, run_fields in shapes:
+        want = api.run_request(
+            spark, InputData("RasterGroupedCount", rasters=["nlcd", "soil"], zoom=12, **run_fields)
+        )
+        got = api.multi_request(
+            spark,
+            MultiInput(
+                shapes=[shape], shape_crs="ConusAlbers", zoom=12,
+                operations=[Operation("RasterGroupedCount", "c", rasters=["nlcd", "soil"])],
+            ),
+        )
+        label = next(iter(got))
+        assert want and got[label]["c"] == {k: float(v) for k, v in want.items()}

@@ -173,7 +173,7 @@ def _grouped_plans(spark):
             [nlcd, soil], fx.line_pixels_df(spark), mask
         ),
         "template_grouped_count": mapshed.template_df(
-            spark, "nlcd_soil", "grouped_count", ["nlcd", "soil"], None, masks
+            "nlcd_soil", "grouped_count", [nlcd, soil], None, masks
         ),
     }
 

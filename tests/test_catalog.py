@@ -367,52 +367,41 @@ def test_key_row_pruning_skipped_for_wide_windows(spark, tables, monkeypatch):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_metastore_table_pruning_matches_path_reader(spark, layer_catalog):
-    """Metastore-registered external table: partitions recovered ONCE at
-    ingest, per-query pruning served from catalog partition metadata
-    (PartitionFilters in the scan, no driver-side listing call on the
-    query path), results identical to the path-based reader."""
-    tbl = catalog.register_layer_table(spark, layer_catalog, "nlcd")
-    try:
-        n_parts = spark.sql(f"SHOW PARTITIONS {tbl}").count()
-        assert n_parts > 4  # the fixture grid spans many tiles
-        bounds = (2, 5, 0, 1)
-        got = catalog.read_layer_table(spark, "nlcd", key_bounds=bounds)
-        plan = _scan_plan(got)
-        assert "PartitionFilters" in plan
-        pf = plan[plan.index("PartitionFilters") :].splitlines()[0]
-        assert "key_col" in pf and "key_row" in pf
-        want = catalog.read_layer(spark, layer_catalog, "nlcd", key_bounds=bounds)
-        assert got.columns == want.columns
-        assert got.count() == want.count() > 0
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-        # the query path never lists directories: read_layer_table goes
-        # through spark.table() only
-        import unittest.mock as mock
+def test_multi_reads_catalog_layers_like_run(spark, tables, monkeypatch):
+    """Under a catalog root /multi reads its layers from the catalog, as
+    /run does: a catalog-only layer gives equal answers on both
+    endpoints, and a fixture-only id is an unknown raster, not a layer
+    silently served from the session fixtures."""
+    import json
 
-        with mock.patch.object(catalog, "_list_dir", side_effect=AssertionError):
-            df = catalog.read_layer_table(spark, "nlcd", key_bounds=bounds)
-            assert df.count() == want.count()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    from mmw_geoprocessing_spark.errors import UnknownRasterError
+    from mmw_geoprocessing_spark.plans import api
+    from mmw_geoprocessing_spark.plans.model import InputData, MultiInput, Operation
 
-
-def test_metastore_table_preserves_value_type(spark, tables):
-    """A DOUBLE layer registers with a DOUBLE value column (the sidecar
-    value_type flows into the table schema)."""
-    root = "/tmp/spark_graft_meta_catalog"
+    root = "/tmp/spark_graft_multi_catalog"
     shutil.rmtree(root, ignore_errors=True)
+    shape = json.dumps(
+        {"type": "Polygon", "coordinates": [[[0, 0], [40, 0], [40, 24], [0, 24], [0, 0]]]}
+    )
+
+    def multi(rasters):
+        return api.multi_request(spark, MultiInput(
+            shapes=[shape], shape_crs="ConusAlbers",
+            operations=[Operation("RasterGroupedCount", "c", rasters=rasters)],
+        ))
+
     try:
-        px = fx.raster_df(spark, "nlcd").withColumn(
-            "value", F.col("value").cast("double") / 2.0
-        )
-        catalog.write_layer(px, root, "slope")
-        tbl = catalog.register_layer_table(spark, root, "slope")
-        got = catalog.read_layer_table(spark, "slope")
-        assert dict(got.dtypes)["value"] == "double"
-        assert got.count() == px.count()
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        shifted = fx.raster_df(spark, "nlcd").withColumn("value", F.col("value") + 100)
+        catalog.write_layer(shifted, root, "nlcdx")
+        monkeypatch.setenv("SPARK_GRAFT_CATALOG_ROOT", root)
+        run = api.run_request(spark, InputData(
+            "RasterGroupedCount", rasters=["nlcdx"], shape_geojson=[shape],
+            shape_crs="ConusAlbers",
+        ))
+        assert run and all(int(k[5:-1]) >= 100 for k in run if "-" not in k)
+        assert multi(["nlcdx"])["shape_0"]["c"] == {k: float(v) for k, v in run.items()}
+        with pytest.raises(UnknownRasterError):
+            multi(["gwn"])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -286,8 +286,11 @@ def test_latlng_request_matches_native_crs_request(spark, tables):
     ConusAlbers."""
     import json as _json
 
-    from mmw_geoprocessing_spark.plans.api import _mask
+    from mmw_geoprocessing_spark.plans import api
     from mmw_geoprocessing_spark.plans.model import InputData
+
+    def _mask(spark, d):
+        return api._resolve(spark, api._from_run(d)).masks[d.pixel_is_area]
 
     # a 30 m grid anchored near Philadelphia in EPSG:5070
     ox, oy = projection.latlng_to_conus_albers(-75.2, 39.9)
@@ -306,11 +309,11 @@ def test_latlng_request_matches_native_crs_request(spark, tables):
         )
 
     native = InputData(
-        operation_type="RasterGroupedCount",
+        operation_type="RasterGroupedCount", rasters=["nlcd"],
         shape_geojson=[gj(albers_ring)], shape_crs="ConusAlbers", layout=layout,
     )
     reproj = InputData(
-        operation_type="RasterGroupedCount",
+        operation_type="RasterGroupedCount", rasters=["nlcd"],
         shape_geojson=[gj(latlng_ring)], shape_crs="LatLng",
         raster_crs="ConusAlbers", layout=layout,
     )

@@ -353,3 +353,22 @@ def test_bad_content_length_400(server, content_length):
     head, _, body = reply.partition(b"\r\n\r\n")
     assert head.split(b" ")[1] == b"400", reply
     assert json.loads(body)["error"] == "MalformedRequest"
+
+
+def test_missing_catalog_layer_is_typed_400(server, tmp_path, monkeypatch):
+    """Under a catalog root, a raster id with no ``layer=<id>`` directory
+    is an UnknownRasterError on both endpoints, not a Spark
+    PATH_NOT_FOUND 500."""
+    (tmp_path / "layer=nlcd").mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_CATALOG_ROOT", str(tmp_path))
+    shape = '{"type":"Polygon","coordinates":[[[0,0],[16,0],[16,16],[0,16],[0,0]]]}'
+    status, body = _post(server, "/run", {
+        "operationType": "RasterGroupedCount", "rasters": ["nope"],
+        "polygon": [shape], "polygonCRS": "ConusAlbers",
+    })
+    assert status == 400 and body["error"] == "UnknownRasterError", body
+    status, body = _post(server, "/multi", {
+        "shapes": [shape], "shapeCRS": "ConusAlbers",
+        "operations": [{"name": "RasterGroupedCount", "label": "c", "rasters": ["nlcd", "nope"]}],
+    })
+    assert status == 400 and body["error"] == "UnknownRasterError", body

@@ -403,7 +403,7 @@ def _operator_pair(spark, kind, rasters, target_id, aoi):
     # mapshed.template_df kinds, aoi_id in the grouping key
     tmpl_kind = kind.removeprefix("template_")
     got = mapshed.template_df(
-        spark, "t", tmpl_kind, list(rasters), target_id, masks
+        "t", tmpl_kind, layers, target, masks, lines
     ).drop("op_label")
     if tmpl_kind == "grouped_count":
         ref = _grouped(_ref_masked(layers, masks), n, _CNT, ["aoi_id"])

@@ -50,7 +50,10 @@ def subbasin_case(spark, aoi_id: str, template: str):
     # path yields identical rows for the AOIs that ARE in mask_all
     # (same pixel set), so pre-existing frozen goldens stay valid.
     m = fx.mask_df(spark, aoi_id).withColumn("aoi_id", F.lit(aoi_id))
-    return mapshed.template_df(spark, template, kind, rasters, target, m)
+    return mapshed.template_df(
+        template, kind, [fx.raster_df(spark, r) for r in rasters],
+        fx.raster_df(spark, target) if target else None, m, fx.line_pixels_df(spark),
+    )
 
 
 def subbasin_cases() -> list[tuple[str, str, str]]:
