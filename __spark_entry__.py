@@ -1,105 +1,16 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry: every operator as a Spark plan with a DuckDB twin.
 
-``entry(spark)`` — flagship query smoke check at sf0.001.
-``queries()`` — one callable per implemented query/operator (SURVEY.md §2).
-``oracle_sql()`` — DuckDB-equivalent SQL per query key.
+``entry(spark)`` — flagship zonal histogram (RasterGroupedCount) at sf0.001.
+``queries()`` — one ``(spark, sf_dir) -> DataFrame`` builder per
+implemented query/operator (SURVEY.md §2).
+``oracle_sql()`` — the DuckDB-equivalent SQL under the same key.
+``lib_queries()`` / ``lib_oracle_sql()`` — the library-operator group,
+merged into both.
 
-137 queries are registered: round 13 adds the STREAMING ingest faces
-for the other two durable index families —
-``stream_ivf_index_append`` (embedding drops against the frozen
-quantizer into the cell-partitioned inverted file, exactly-once
-under checkpoint loss) and ``stream_minhash_index_append`` (two
-journaled commits per drop into the band + array indexes,
-crash-window-safe) — plus the perceptual image-dedup family
-``image_phash_fingerprints`` / ``dedup_image_phash`` /
-``dedup_image_phash_append`` (real PNG encode->decode in Arrow
-batches, dHash/aHash 16-bit chunk packing, Hamming-banded near-dup,
-band-bucketed durable index with exactly-once drop appends) and its
-audio sibling ``audio_energy_fingerprints`` / ``dedup_audio_energy``
-(real stdlib WAV codec round trip, frame-energy fingerprints,
-shared-frame matching). Round
-12 added the index LIFECYCLE faces
-— ``search_bm25_index_compact`` (appended fragments rewritten to one
-file per bucket; generation pointer swap, markers/pruning survive),
-``similarity_ann_ivf_append`` (exactly-once drop append into the
-cell-partitioned inverted file, frozen quantizer),
-``dedup_incremental_append`` (band + doc-array drop append, two
-markers), ``sampling_decontaminated_mix_disk`` (bench grams + dirty
-ids as ingest-time artifacts; survivor-side-only mix) — and the
-tokenizer-fidelity family ``text_bpe_token_counts`` /
-``sampling_corpus_mix_bpe`` (corpus-trained piece vocab, greedy
-longest-match JVM fold, budgets denominated in model tokens) and the
-URL-dedup crawl pre-stage ``curation_url_canonicalize`` /
-``dedup_url_canonical`` (canonicalization, eTLD+1 registered domains,
-canonical-form dedup over deterministically injected raw URLs).
-Round 11 added the durable-index family
-— ``search_bm25_disk_topk`` (term-bucketed on-disk postings, probe
-bucket-prunes), ``similarity_ann_ivf_disk_topk`` (cell-partitioned
-inverted file, dynamic-partition-pruned probe),
-``dedup_incremental_disk`` (batch-vs-reference probe against on-disk
-band/array indexes), ``search_bm25_index_append`` (exactly-once drop
-append + delta-merged siblings), ``stream_index_append`` (streaming
-ingest into the same index, idempotent under checkpoint loss) — plus
-``sampling_nucleus_topp`` (grouped top-p support-set selection),
-``sampling_decontaminated_mix`` (the fused decontaminate-then-budget
-curation pass, hashed-gram matching), and ``maintenance_time_travel``
-(snapshot v0 readable after the CoW delete commits v1) and
-``tpch_q6_clustered`` (Q6 through the shipdate-clustered layout's
-zone-map prune — the honest-negative row, BASELINE.md), on top of
-the round-10 112
-(the round-9 81 plus round 10's
-``graph_pagerank`` — fixed-point bigint PageRank over the
-customer↔supplier trade graph, the iterative-algorithm family —
-``sampling_epoch_shuffle`` — deterministic epoch-seeded training
-order with dense global positions and no single-partition sort —
-``table_profile`` — the one-pass per-column profiler — and
-``stream_cdc_merge_bucketed`` — per-batch state I/O ∝ touched buckets
-— and ``search_hybrid_rrf_ivf_topk`` — the IVF-probed dense leg that
-replaces the exact variant's full-corpus crossJoin — and
-``similarity_cosine_topk_pandas``, the Arrow matmul kernel's
-rank-only face with a full oracle — and ``search_bm25_indexed_topk``,
-bm25 served from persisted ingest-time postings — and
-``stream_interval_join``, the watermarked stream-stream attribution
-join over a time-ordered exactly-once replay — and the five
-late-round curation/CDC/skew additions: ``curation_domain_rate_cap``
-(per-domain top-N via WindowGroupLimit), ``dedup_bloom_probe``
-(fixed-size broadcast Bloom membership, deterministic FPs),
-``cdc_scd2_history`` (type-2 ranges, one key shuffle, no join),
-``skew_join_salted`` (hot-key salting, bit-identical to the plain
-join), ``stream_sessionize`` (streaming session_window drained
-to its gaps-and-islands batch twin), and ``stream_stateful_counts``
-(the applyInPandasWithState custom-stateful face, drained update-mode
-with a monotone-count closed-form twin), and
-``source_python_ledger`` / ``source_python_stream`` (a Spark-4
-custom Python DataSource, batch reader and DataSourceStreamReader
-drain, md5-content so the connector has a value-hash oracle), and
-``maintenance_compact`` (fragment → range-clustered compaction →
-read-back, oracle = the original table), and
-``cdc_incremental_rollup`` (incremental view maintenance by delta
-algebra — negate-old + add-new, O(|changelog|) — oracled by the full
-recompute), and the layout-service pair ``maintenance_zorder``
-(Morton-interleave Z-order rewrite answered through the zone-map
-index) / ``source_zonemap_prune`` (per-file min/max statistics index
-→ planning-time file skipping, Delta/Iceberg data-skipping rebuilt on
-plain parquet) and ``maintenance_delete_rows`` (copy-on-write
-row-level delete: zone-map-located files rewritten with an
-anti-filter, manifest swap for the rest — cost ∝ keys-hit-files) and
-``maintenance_delete_mor`` (the merge-on-read twin: O(1) delete-file
-commit, broadcast anti-join at read — same oracle, because readers
-must not be able to tell the strategies apart)), all
-with full
-oracle twins. ROUND-14 GATE ROTATION (r13 verdict #1): the driver's
-correctness gate reads the FIRST 50 entries of ``queries()``.
-``_GATE_WINDOW`` below leads with the 8 never-driver-verified
-round-13 entries, the 4 entries new in round 14, the rewritten
-dedup_url_canonical, then the 37 entries last driver-checked in
-round 11 (the staleness frontier, computed from the union of
-CORRECTNESS_r01..r13). Displaced entries keep full selfcheck
-coverage (SELFCHECK_SF1/SF10 run ALL entries), and
-tests/test_claims.py machine-checks the staleness budget.
-
-Column names are aliased identically on both sides (the driver's
-compare sorts columns by name before hashing).
+Column names are aliased identically on both sides (the compare sorts
+columns by name before hashing). ``tools/selfcheck.py`` runs each pair;
+``tests/test_golden.py`` and ``tools/make_goldens.py`` build from the
+registry.
 """
 
 from __future__ import annotations
@@ -145,8 +56,7 @@ def _t(spark: SparkSession, sf_dir: str):
 
 # ---------------------------------------------------------------------------
 # LLM-data-pipeline operators (dedup / similarity / text analysis /
-# multimodal) over the documents and embeddings tables. FIRST in dict
-# order so the driver's 50-query gate always covers them.
+# multimodal) over the documents and embeddings tables.
 # ---------------------------------------------------------------------------
 
 _LLM_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -479,7 +389,7 @@ _RELATIONAL_ORACLES: dict[str, str] = {
 
 def _tf(s: SparkSession, d: str):
     """TPC-H fact-table loader: bucketed-on-orderkey layout when the
-    session runs in bucketed-fixture mode (bench/sf10 gates — the
+    session runs in bucketed-fixture mode (the sf10 gates — the
     production serving layout, r10 verdict #1), raw parquet otherwise
     (the driver gate). Same rows either way; the oracles hash-gate it."""
     from mmw_geoprocessing_spark.sources.tpch_layout import fact_tables
@@ -635,122 +545,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_grouped_count(spark, "/root/testdata/sf0.001")
 
 
-def _prepared(name: str, fn: Callable[[SparkSession, str], DataFrame]):
-    """Prepared-query cache: memoize the built DataFrame handle per
-    (session, sf_dir).
-
-    Skips py4j expression construction + Catalyst analysis/optimization
-    + codegen compile on repeat calls (~0.3-0.8 s/plan). Note the
-    re-execution caveat: Spark keeps a live handle's shuffle map outputs
-    alive (ShuffleExchangeExec caches its ShuffledRowRDD), so
-    re-invoking re-runs only the stages downstream of existing shuffle
-    files — fast steady-state serving for repeated identical requests,
-    but NOT a full re-execution. bench.py therefore times fresh
-    ``prepared=False`` builders for its headline and reports the
-    memoized-handle number separately (``queries_prepared_exec``). The
-    correctness gate calls each query once, so it always covers the
-    full build+execute path.
-    """
-    cache: dict[tuple[int, str], DataFrame] = {}
-
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (id(spark), sf_dir)
-        if key not in cache:
-            cache[key] = fn(spark, sf_dir)
-        return cache[key]
-
-    wrapper.__name__ = f"prepared_{name}"
-    return wrapper
-
-
-# The driver's correctness gate reads the FIRST 50 entries of
-# queries(). Round-16 rotation (same rule as r14/r15; tests/test_claims.py
-# fails if any registered entry's latest driver CORRECTNESS row falls
-# more than 2 rounds behind without a window slot): lead with the 41
-# entries last driver-checked in round 13 — the full staleness
-# frontier — then the 6 zonal rows whose plans the mask-first layer
-# join rewrote, then 3 entries of the round-14 frontier. Displaced
-# entries (all r14/r15-driver-green) keep SF1/SF10 selfcheck coverage.
-_GATE_WINDOW: list[str] = [
-    # -- the 41 entries last driver-checked in round 13
-    "raster_average",
-    "raster_grouped_sum",
-    "udtf_word_positions",
-    "graph_pagerank",
-    "lib_contamination_check",
-    "lib_cosine_neardup_wide",
-    "lib_repetition_scores",
-    "lib_semantic_dedup_pairs",
-    "text_unigram_surprisal",
-    "text_bigram_surprisal",
-    "embedding_quantize_int8",
-    "similarity_cosine_topk_pandas",
-    "sampling_corpus_mix",
-    "text_quality_percentile_filter",
-    "text_chunk_documents",
-    "semantic_dedup_components",
-    "pipeline_curate_corpus",
-    "dedup_neardup_components",
-    "sampling_deterministic_split",
-    "sampling_stratified_sample",
-    "sampling_pack_token_batches",
-    "sampling_epoch_shuffle",
-    "table_profile",
-    "text_pii_redact",
-    "text_normalize",
-    "search_bm25_topk",
-    "search_bm25_indexed_topk",
-    "cdc_changelog_merge",
-    "sessionize_events",
-    "dedup_incremental_batch",
-    "text_duplicate_spans",
-    "text_classifier_score",
-    "retention_cohorts",
-    "funnel_conversion",
-    "basket_pair_affinities",
-    "curation_domain_rate_cap",
-    "dedup_bloom_probe",
-    "cdc_scd2_history",
-    "skew_join_salted",
-    "maintenance_zorder",
-    "source_zonemap_prune",
-    # -- zonal rows rebuilt on the mask-first layer join
-    "raster_grouped_count",
-    "raster_grouped_count_nodata",
-    "raster_grouped_count_many",
-    "raster_grouped_average",
-    "raster_lines_join",
-    "multi_operation",
-    # -- round-14 frontier
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-]
-
-
-def queries(prepared: bool = True) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    all_q = {
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {
         **_LLM_QUERIES,
         **_STREAM_QUERIES,
         **_ZONAL_QUERIES,
         **_RELATIONAL_QUERIES,
         **_REL_EXT_QUERIES,
-        # round 8: the lib operators promoted into the driver registry —
         # every claimed-done operator carries BOTH a queries() entry and
-        # an oracle_sql() twin. The lib_ prefix is kept so
-        # SELFCHECK_SF1/SF10 artifact rows stay name-aligned.
+        # an oracle_sql() twin; the library group keeps its lib_ prefix
         **lib_queries(),
     }
-    assert len(_GATE_WINDOW) == 50, len(_GATE_WINDOW)
-    missing = [n for n in _GATE_WINDOW if n not in all_q]
-    assert not missing, f"gate window names unknown: {missing}"
-    out = {n: all_q[n] for n in _GATE_WINDOW}
-    out.update({n: f for n, f in all_q.items() if n not in out})
-    if not prepared:
-        # raw builders — for tools that re-plan under changed session
-        # modes (tools/plan_audit.py flips the fixture layout mid-run)
-        return out
-    return {name: _prepared(name, fn) for name, fn in out.items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -765,10 +570,7 @@ def oracle_sql() -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# Library operators, merged into queries()/oracle_sql() above since
-# round 8 (kept as a separate group: tools/selfcheck.py's
-# SELFCHECK_INCLUDE_LIB=1 flag predates the promotion and still reads
-# them from here; the ** merge collapses the duplicates). Note
+# Library operators, merged into queries()/oracle_sql() above. Note
 # lib_cosine_neardup_wide returns 0 rows on corpora without planted
 # near-copies (threshold 0.9 is its 100 TB design point) — the oracle
 # replays the full band-key plan either way, and the operator's
@@ -1040,9 +842,6 @@ def lib_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the custom-stateful-operator face: applyInPandasWithState
         # running counts drained in update mode; final per-user value
         # has the closed-form batch twin (counts are monotone).
-        # Outside the 50-slot gate window this round (it is full with
-        # first-verification entries); SF1/SF10 selfcheck rows + pytest
-        # carry it until the next rotation.
         "stream_stateful_counts": sw.stream_stateful_counts_batch,
         # round 11: streaming ingest into the durable search index —
         # exactly-once by chunk-id marker commit (idempotent sink)

@@ -454,8 +454,8 @@ def incremental_rollup_orders(orders: DataFrame) -> DataFrame:
     # re-summed (associative+commutative integer addition: identical
     # totals, identical output). Removes the generator's per-row
     # struct/array allocation (the r14 fold measured FLAT vs the r13
-    # 3-scan form at the sf1~ replica, 1.55 vs 1.66 s; this form wins —
-    # see OPTIMIZATION_r15.md) and keeps ONE scan + ONE partial+final
+    # 3-scan form at the sf1~ replica, 1.55 vs 1.66 s; this form wins
+    # in the r15 A/B) and keeps ONE scan + ONE partial+final
     # aggregate. The delta algebra is unchanged, just constant-folded
     # per row.
     zero = F.lit(0).cast("bigint")

@@ -127,7 +127,7 @@ def bloom_probe_dedup(documents: DataFrame) -> DataFrame:
     are UNSORTED ARRAYS, so each lookup is a linear scan over m/60
     entries (measured 9.6× — 5× WORSE than the explode). The hash
     relation of a broadcast join is the only O(1) lookup Spark offers;
-    k small joins buy it per probe (BASELINE.md round-10 bloom row).
+    k small joins buy it per probe (round-10 bloom measurement).
     """
     ref = documents.filter(F.col("doc_id") % REF_MOD < REF_KEEP)
     bloom = bloom_build(ref)

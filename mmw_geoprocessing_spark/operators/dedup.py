@@ -183,7 +183,7 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFra
     verification is a JVM-side ``array_intersect`` on the two joined
     rows with no shuffle of shingle-level data at all. Per-row cost is
     bounded by document length — the same bound the pairwise verify
-    always had. Exchanges: ~14 vs the previous 56 (PLANS.md).
+    always had. Exchanges: ~14 vs the previous 56 (tools/plan_audit.py).
     Output: ``(d1, d2, jaccard)``.
     """
     sh = _shingles_persisted(documents)

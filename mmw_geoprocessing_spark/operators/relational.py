@@ -176,7 +176,7 @@ def top_customers_by_revenue(
     """Join + aggregate + top-k. orderBy().limit(k) plans
     TakeOrderedAndProject — per-partition k-row heaps, no global sort.
 
-    Plan shape (round-5 crossover measurement, BASELINE.md): project
+    Plan shape (round-5 measurement against DuckDB): project
     lineitem to (orderkey, revenue-cents) and orders to (orderkey,
     custkey) BEFORE the join — both sides narrow, so Catalyst
     auto-broadcasts the orders projection under the threshold (and
@@ -778,7 +778,7 @@ def pivot_event_counts(events: DataFrame) -> DataFrame:
 def pivot_event_counts_sql() -> str:
     # CAST ... AS BIGINT: DuckDB types SUM(int) as HUGEINT, which pandas
     # materializes as float/object and the driver's hasher canonicalizes
-    # differently than Spark's int64 (CORRECTNESS_r01 hash fails).
+    # differently than Spark's int64 (the round-1 hash compare failed).
     cols = ", ".join(
         f'CAST(COALESCE(SUM(CASE WHEN event_type = \'{t}\' THEN 1 END), 0) AS BIGINT) AS "{t}"'
         for t in EVENT_TYPES

@@ -529,8 +529,8 @@ def _rrf_fuse(sparse: DataFrame, dense: DataFrame, rrf_k: int, k: int) -> DataFr
     rank window with no further exchange — and because both legs
     already end hash(query_id)-partitioned by their own rank windows,
     Spark 4's co-partitioned-union propagation elides even that
-    repartition in the executed plan (plans/r14/search_hybrid_rrf_
-    topk_after.txt: Union -> partial+final HashAggregate -> Sort ->
+    repartition in the executed plan (measured in round 14: Union ->
+    partial+final HashAggregate -> Sort ->
     WindowGroupLimit with no Exchange; the repartition materializes
     only when the legs' partitionings diverge, e.g. under AQE
     coalescing, keeping the plan correct in every config). Safe at any

@@ -377,7 +377,7 @@ _BUCKET_DIR = "/tmp/spark_graft_bucketed_fixtures"
 # per-request task overhead. It gives 1 bucket at sf0.001, 4 at sf0.1
 # (600,000 pixels), 32 at sf1 and 256 at sf10. 2^17 pixels per bucket
 # is the largest power-of-two target that picks both measured optima:
-# - sf1~ replica, in-process A/B (plans/r15/bucket_ab_*.json): 32
+# - sf1~ replica, in-process A/B: 32
 #   buckets beat 16 on 5 of 7 zonal/mapshed rows (mapshed 11.6 -> 10.3 s);
 # - sf0.1 service, 4 vCPU, 4 closed-loop clients on the run_aoi stream:
 #   16/8/4/2/1 buckets gave 3.57/6.08/6.34/6.65/7.00 req/s, and the
@@ -387,7 +387,7 @@ _BUCKET_DIR = "/tmp/spark_graft_bucketed_fixtures"
 # tag fingerprint in _bucketed_fixture folds the count in, so a copy
 # written at another count is rebuilt, never re-attached.
 _PIXELS_PER_BUCKET = 1 << 17
-# Overrides the derived count when set (tests, tools/r15_bucket_ab.py).
+# Overrides the derived count when set (tests only).
 _N_BUCKETS: int | None = None
 # (session id, sf_dir) -> lineitem row count, memoized like _EXTENT_CACHE
 _PIXEL_COUNT_CACHE: dict[tuple[int, str], int] = {}
@@ -492,7 +492,7 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
       joins re-shuffle.
     - ``SPARK_GRAFT_BUCKETED_FIXTURES=1``: parquet tables bucketed on
       the pixel key — the production layout: layer joins plan with no
-      Exchange (see _bucketed_fixture). bench.py enables this. The
+      Exchange (see _bucketed_fixture). perfbench/run.py enables this. The
       bucket count follows the session's pixel count
       (``fixture_bucket_count``), so every fixture of one sf_dir —
       masks and layers alike — shares it and joins co-partitioned.
@@ -504,7 +504,7 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
     def build() -> DataFrame:
         if os.environ.get("SPARK_GRAFT_BUCKETED_FIXTURES", "0") == "1":
             # Bucketed-fixture mode is a SESSION mode (opted into via the
-            # env flag, bench.py / conftest set it deliberately): scans of
+            # env flag, perfbench/run.py / the tests set it deliberately): scans of
             # the bucketed tables only stay Exchange-free while
             # autoBucketedScan is off, so the conf is part of the mode's
             # contract — set visibly when the mode is entered, not as a

@@ -199,8 +199,8 @@ def _refresh_attached_if_stale(spark: SparkSession, tbl: str, marker: str) -> No
     made every
     re-entrant serving run pay catalog re-resolution + a fresh file
     listing per probe (optimization r14: measured 11-23 ms per no-op
-    per index at sf0.1's 17-file layout — interleaved A/B in
-    OPTIMIZATION_r14.md; at a production index's file count the
+    per index at sf0.1's 17-file layout, interleaved A/B; at a
+    production index's file count the
     re-list is the driver-side listing cost guide §6 warns about,
     paid per serving request). A missing memo
     needs no refresh either: the next ``get_or_build_index`` attach

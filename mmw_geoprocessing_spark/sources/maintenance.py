@@ -249,7 +249,7 @@ def zorder_parquet_dir(
 
 
 # ---------------------------------------------------------------------------
-# Registered layout-service queries (gate window entries)
+# Registered layout-service queries
 # ---------------------------------------------------------------------------
 
 def _keyed_base(sf_dir: str, prefix: str) -> str:

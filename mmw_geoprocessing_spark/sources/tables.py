@@ -43,7 +43,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # nanosecond timestamp type, so read it as int64 nanos and truncate
         # to micros — the same truncation DuckDB applies when casting
         # TIMESTAMP_NS to its native microsecond TIMESTAMP. Re-written
-        # copies (e.g. tools/crossover.py replicas) already carry
+        # copies (e.g. scaled-up replicas) already carry
         # microsecond timestamps and skip the conversion.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))

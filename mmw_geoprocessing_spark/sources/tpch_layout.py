@@ -1,6 +1,6 @@
 """Bucketed fact-table layout for the TPC-H family.
 
-The r10 sf10 crossover showed tpch_q3/q5/q10/q18 all sitting on the
+The r10 sf10 DuckDB comparison showed tpch_q3/q5/q10/q18 all sitting on the
 same ~2.4 s lineitem-wide shuffle: every one of those plans has exactly
 one unavoidable exchange pair — the orderkey join (or, for q18, the
 orderkey HAVING-aggregation feeding it). The broadcast rewrites already
@@ -11,7 +11,7 @@ with NO exchange (and q18's groupBy(l_orderkey) aggregates with no
 exchange), exactly like the pixel tables in bucketed-fixture mode
 (sources/fixtures.py). tests/test_bucketing.py proved the planner
 contract in round 10; this module makes it the registered SERVING
-layout: when ``SPARK_GRAFT_BUCKETED_FIXTURES=1`` (bench.py and the
+layout: when ``SPARK_GRAFT_BUCKETED_FIXTURES=1`` (perfbench and the
 sf10 gates set it — the same flag that switches the pixel tables), the
 TPC-H builders read these tables instead of the raw parquet.
 

@@ -312,7 +312,7 @@ def test_cold_fixture_is_built_once_under_concurrent_requests(spark, tables, mon
 
 
 # ------------------------------------------------ TPC-H bucketed joins
-# (round 10 final: the BASELINE.md TPC-H table's recorded follow-up,
+# (round 10 final: the sf10 TPC-H comparison's recorded follow-up,
 # exercised — bucketing orders/lineitem on orderkey removes the join
 # exchanges that are the q3/q10/q18 scan+shuffle floor at sf10)
 

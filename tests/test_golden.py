@@ -73,7 +73,7 @@ def _assert_matches_golden(df, name):
 
 @pytest.mark.parametrize("name", _SNAPSHOT_NAMES)
 def test_query_matches_golden(spark, tables, name):
-    """One frozen snapshot per REGISTRY query (all 50) — regenerated
+    """One frozen snapshot per REGISTRY query — regenerated
     only via tools/make_goldens.py, diffed at 1e-8."""
     import __spark_entry__ as m
 
@@ -101,8 +101,8 @@ _LIB_NAMES = [n for n in _ALL_SNAPSHOTS if n.startswith("lib_")]
 
 @pytest.mark.parametrize("name", _LIB_NAMES)
 def test_lib_operator_matches_golden(spark, tables, name):
-    """Frozen snapshots for library operators OUTSIDE the 50-entry
-    registry (curation pipeline, PII, near-dup components, sampling) —
+    """Frozen snapshots for library cases that are not registry entries
+    (curation pipeline, PII, near-dup components, sampling) —
     built from the same tools.make_goldens.lib_cases registry that
     generated them."""
     from tools.make_goldens import lib_cases

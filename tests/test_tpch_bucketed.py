@@ -45,7 +45,7 @@ def bucket_mode(spark, tables, monkeypatch):
 def test_bucketed_serving_plan_has_no_orderkey_exchange(
     spark, tables, entry, bucket_mode, name
 ):
-    qs = entry.queries(prepared=False)
+    qs = entry.queries()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -62,7 +62,7 @@ def test_bucketed_serving_results_match_plain(
 ):
     from mmw_geoprocessing_spark.sources import fixtures as fx
 
-    qs = entry.queries(prepared=False)
+    qs = entry.queries()
     bucketed = qs[name](spark, SF_DIR).collect()
     # leave bucket mode: same builder now reads the raw parquet
     fx.clear_fixture_cache()
@@ -83,7 +83,7 @@ def test_preagg_serving_skips_lineitem_and_rides_buckets(
     the pre-aggregated MV, joins it to orders on the co-bucketed
     orderkey without an exchange, and tops-k. Results equal the direct
     plan's (same oracle hash-gates both)."""
-    qs = entry.queries(prepared=False)
+    qs = entry.queries()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

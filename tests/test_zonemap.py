@@ -504,8 +504,8 @@ def test_q6_clustered_prunes_files_and_matches_raw(spark, tables):
     """Q6 through the shipdate-clustered layout: the zone map must
     prune to the files overlapping the Q6 year (files_read <<
     files_total — the 100 TB evidence line; at hot-cache local scale
-    the extra planning job can exceed the saved I/O, recorded honestly
-    in BASELINE.md), and the result must equal the raw-scan plan."""
+    the extra planning job can exceed the saved I/O), and the result
+    must equal the raw-scan plan."""
     from datetime import datetime
 
     from mmw_geoprocessing_spark.operators import tpch

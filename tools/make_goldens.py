@@ -3,8 +3,8 @@ sf0.001, the engine's analogue of the reference's 434 checked-in golden
 JSONs (scripts/benchmark-mapshed:146, SURVEY.md §5).
 
 Round 6 completes the discipline:
-- EVERY registry query (one frozen snapshot per `queries()` entry,
-  50 files) — a second, oracle-independent line of defense;
+- EVERY registry query (one frozen snapshot per `queries()` entry)
+  — a second, oracle-independent line of defense;
 - the FULL subbasin sweep: every MapShed AOI (huc8_01 + 8 HUC-12
   subbasins) x every one of the 7 reference templates as an individual
   golden (63 files) — the analogue of the reference's 427 per-HUC-12
@@ -81,7 +81,7 @@ def pii_injected_docs(spark):
 
 
 def lib_cases() -> dict:
-    """Library operators OUTSIDE the 50-entry registry (pipelines, PII,
+    """Library cases that are not registry entries (pipelines, PII,
     components, sampling): goldens give them the same frozen regression
     line the registry queries have. k-means is excluded deliberately —
     its centroid means are partitioning-sensitive at ~1e-12, which can

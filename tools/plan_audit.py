@@ -212,20 +212,19 @@ def main() -> int:
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # raw builders: the bucketed-layout section below re-plans the same
-    # queries under a different fixture mode, which the prepared-plan
-    # cache would (correctly, for serving) hide
-    qs = {**entrymod.queries(prepared=False), **entrymod.lib_queries()}
+    # fresh builders on every call, so the bucketed-layout section below
+    # can re-plan the same queries under a different fixture mode
+    qs = entrymod.queries()
     # Audit the PRODUCTION fixture layout (bucketed pixel tables) — the
-    # same mode bench.py runs under, so the headline table describes the
-    # plans that are actually benched/served. The checkpoint-vs-bucketed
+    # same mode perfbench's server runs under, so the headline table
+    # describes the plans that are actually served. The checkpoint-vs-bucketed
     # comparison table below re-plans the zonal ops in both modes.
     os.environ["SPARK_GRAFT_BUCKETED_FIXTURES"] = "1"
     lines = [
         "# PLANS — physical-plan audit\n",
         f"Generated by `tools/plan_audit.py` at `{sf_dir}` with\n"
-        "`SPARK_GRAFT_BUCKETED_FIXTURES=1` (the bench/production fixture\n"
-        "layout; bench.py sets the same).\n",
+        "`SPARK_GRAFT_BUCKETED_FIXTURES=1` (the production fixture\n"
+        "layout; perfbench's server sets the same).\n",
         "Exchange counts are EXECUTED-plan shuffle exchanges by JVM tree\n"
         "walk (`count_shuffle_exchanges`): AQE-final, stopping at cache\n"
         "reads (`InMemoryTableScan` — the prior string metric re-counted a\n"
@@ -258,7 +257,7 @@ def main() -> int:
             f"{'✓' if topk else '✗'} | {n_exchange} |"
         )
         details.append(f"\n## {name}\n\n```\n{plan[:4000]}\n```\n")
-    # Bucketed fixture layout (the bench/production path): the zonal
+    # Bucketed fixture layout (the production path): the zonal
     # layer joins must plan with strictly fewer exchanges than the
     # checkpointed layout — the SCALE.md contract, asserted here.
     from mmw_geoprocessing_spark.sources import fixtures as fx

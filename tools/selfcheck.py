@@ -1,4 +1,4 @@
-"""Local replica of the driver's correctness gate.
+"""Registry correctness check: every query against its DuckDB twin.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf directory, compares row count, sorted-column
@@ -128,7 +128,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefix = sys.argv[2] if len(sys.argv) > 2 else ""
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from mmw_geoprocessing_spark.session import get_spark
     from mmw_geoprocessing_spark.sources.tables import TABLE_NAMES
@@ -156,12 +156,6 @@ def main() -> int:
         )
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    if os.environ.get("SELFCHECK_INCLUDE_LIB") == "1":
-        # library operators outside the 50-entry driver registry that
-        # still get big-replica oracle verdicts (contamination_check,
-        # cosine_neardup_wide — VERDICT r7 #2)
-        qs = {**qs, **entrymod.lib_queries()}
-        oracles = {**oracles, **entrymod.lib_oracle_sql()}
     prefixes = [p for p in prefix.split(",") if p]
     # SELFCHECK_SKIP: comma-separated query names to exclude, recorded
     # as skipped in the JSON artifact. Since round 7 the sf1~ run needs
@@ -339,8 +333,7 @@ def main() -> int:
         artifact = {
             # schema v2 (r9 verdict #7): every row carries machine-
             # readable {verdict, reason, rows}; verdict in
-            # {pass, fail, rows_only, skipped}. tools/claims_check.py
-            # validates this shape.
+            # {pass, fail, rows_only, skipped}.
             "schema_version": 2,
             "sf_dir": sf_dir,
             "n_queries": len(results),

@@ -13,8 +13,8 @@ table is sum(|component|^2) rows — >75 GB spill, measured). Records:
 
 - ``semantic_dedup_components_scaled``: full hash-matched verdict.
 - ``semantic_dedup_components``: skipped-with-reason row for the
-  registered 16-cell config, citing the (existing) SELFCHECK_SF1 row
-  and the scaled row here.
+  registered 16-cell config, citing the sf1~ selfcheck row and the
+  scaled row here.
 
 Usage: python tools/sf10_semdedup_components.py [sf_dir] [out.json]
 Env: SF10_DUCK_MEM (default 70GB), SF10_DUCK_THREADS (default 4).
@@ -30,8 +30,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TOOLS))
+sys.path.insert(0, _TOOLS)
 
 from selfcheck import _hash  # noqa: E402
 
@@ -150,7 +151,7 @@ def main() -> int:
                     "cell-population envelope at this SF (same analysis as "
                     "lib_semantic_dedup_pairs: ~12.5k vectors/cell -> ~1.2B "
                     "within-cell pairs). At-scale verdicts: the sf1~ row "
-                    "(SELFCHECK_SF1.json, hash-matched) and the "
+                    "(tools/selfcheck.py, hash-matched) and the "
                     "semantic_dedup_components_scaled row in this artifact "
                     "(n_cells=256 per SCALE.md)."
                 ),

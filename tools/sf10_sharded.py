@@ -33,8 +33,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TOOLS))
+sys.path.insert(0, _TOOLS)
 
 from selfcheck import _hash  # noqa: E402  (shared canonical hasher)
 

@@ -16,9 +16,8 @@ against a DuckDB batch-twin oracle over the same replay files:
   compared on the content columns only (the surviving surrogate id is
   which-arrival-dependent; the content payload is not).
 
-Rows are written as a selfcheck-shaped JSON for
-tools/merge_selfchecks.py with method
-``availablenow_replay_vs_duckdb_batch_twin``.
+Rows are written as a selfcheck-shaped JSON (``SELFCHECK_JSON``'s
+format) with method ``availablenow_replay_vs_duckdb_batch_twin``.
 
 Usage: python tools/stream_dedup_gate.py [sf_dir] [out.json]
 """
