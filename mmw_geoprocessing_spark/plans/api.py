@@ -381,10 +381,10 @@ def _layers(
 ) -> dict[str, DataFrame]:
     """Resolve raster layers for a request. Default: the synthetic
     session fixtures at the request zoom. With ``SPARK_GRAFT_CATALOG_ROOT``
-    set, layers come from the external partitioned catalog with the
-    shapes' bbox pushed down as partition pruning — the reference's
+    set, layers come from the external tile-block catalog with the
+    shapes' bbox pushed down as block pruning — the reference's
     ``cropRastersToAOI`` (Utils.scala:34-41): each layer is read once,
-    only Intersects-ing tiles are scanned."""
+    only the blocks of Intersects-ing tiles are scanned."""
     root = _catalog_root()
     if not root:
         # the REAL per-zoom pyramid level (the reference fetches a
@@ -396,13 +396,11 @@ def _layers(
     # grid must equal the request's resolved layout — the mask is
     # rasterized in the request frame, and a zoom/layer mismatch would
     # join mismatched pixel keys and return silently wrong results. The
-    # same sidecar read gives the layer's value type, which lets the
-    # read declare its schema instead of inferring it in a Spark job.
-    value_types: dict[str, str | None] = {}
+    # read reuses the same sidecar for its value type and block files.
+    metas: dict[str, dict] = {}
     for rid in raster_ids:
         try:
-            meta = catalog.read_layer_meta(root, rid)
-            value_types[rid] = meta.get("value_type")
+            meta = metas[rid] = catalog.read_layer_meta(root, rid)
             stored, _zoom = catalog.layout_from_meta(rid, meta)
         except (OSError, ValueError):
             continue  # no sidecar or no grid in it — caller vouches for the frame
@@ -414,7 +412,7 @@ def _layers(
             )
     aoi = [p for ps in polys for p in ps] if polys is not None else None
     layers = catalog.read_layers_for_aoi(
-        spark, root, raster_ids, aoi, layout if aoi else None, value_types=value_types
+        spark, root, raster_ids, aoi, layout if aoi else None, metas=metas
     )
     return dict(zip(raster_ids, layers))
 

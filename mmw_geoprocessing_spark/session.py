@@ -10,10 +10,11 @@ multi-executor cluster at large scale:
 - shuffle partitions default sized for the local fixture scale; on a real
   cluster this should be ~2-3x total cores (AQE coalesces downward).
 - parallel partition discovery only above 1024 paths (Spark's default is
-  32): ``sources.catalog`` hands a read its in-range tile directories,
-  already listed on the driver, and re-listing a few hundred of them on
-  the driver is cheaper than a listing job on the executors, which every
-  catalog request would otherwise launch while its plan is built.
+  32): ``sources.catalog`` hands a read the in-range block files named
+  in its sidecar manifest, and fetching the status of a few hundred of
+  them on the driver is cheaper than a listing job on the executors,
+  which a large-AOI catalog request would otherwise launch while its
+  plan is built.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""External partitioned raster-layer catalog: the production source.
+"""External raster-layer catalog: the production source.
 
 The synthetic fixtures (``sources.fixtures``) derive pixel tables in
 session; a real deployment reads them from an on-disk/object-store
@@ -7,47 +7,57 @@ counterpart of the reference's S3 GeoTrellis layer store
 (``S3CollectionLayerReader`` at Utils.scala:22-23) and its spatial
 pushdown (``.where(Intersects(shape))``, Utils.scala:241-248).
 
-Layout (hive-partitioned parquet):
+Layout (tile-block parquet):
 
-    root/layer=<layer_id>/key_col=<c>/key_row=<r>/part-*.parquet
+    root/layer=<layer_id>/_layout.json
+    root/layer=<layer_id>/block_col=<bc>/block_row=<br>/part-*.parquet
 
-One directory per tile ``SpatialKey`` per layer; file rows carry
-``(cell_col, cell_row, value)``. The partition columns ARE the spatial
-key, so an AOI's bounding box becomes min/max predicates on partition
-columns and Catalyst prunes whole tile directories at planning time
-(visible as ``PartitionFilters`` in the scan node) — the exact analogue
-of the reference fetching only Intersects-ing 512x512 tiles.
+A block is a square of B x B tile ``SpatialKey``s,
+``bc = floor(key_col / B)``, ``br = floor(key_row / B)``, written as one
+file whose rows ``(key_col, key_row, cell_col, cell_row, value)`` are
+sorted by tile key. B follows from the tile size (:func:`block_tiles`):
+the largest B with B² x tile_size² <= 2^16 pixels, at least 1 — 32 at
+8x8 tiles, 1 at the reference's 512x512 tiles, whose one-tile objects
+(about 262k pixels, Utils.scala:22-23, 241-248) are already coarse. With
+one directory per 64-pixel tile a GeoJSON request opened a median of 42
+files, and planning and scanning them went into per-file overhead:
+block files took perfbench's ``catalog_geojson`` from a median 1.69 to
+2.26 requests/s (10 alternating 20 s pairs, 4 vCPU), its median layer
+read from 0.11 to 0.03 s and its catalog ingest from 7.7 to 1.1 s (one
+traced pair). A block is bounded by its pixel count, so blocks stay
+even in size, unlike locality clusters that follow the data (REPOSE,
+ICDE 2021).
+
+The ``_layout.json`` sidecar is the layer's manifest: value type, grid
+frame, ``block_tiles`` (B) and every block's files. A read turns the
+AOI's tile-key window into a block window by floor division (negative
+keys included), hands Spark the in-range block files with the declared
+schema, and keeps the key window as a data filter Spark pushes into the
+parquet scan (``PushedFilters``), as the reference fetches only the
+tiles that intersect the AOI (Utils.scala:241-248).
 
 100 TB design notes:
-- Partition pruning removes the IO, but *partition discovery* would
-  still list the directory tree. ``read_layer`` therefore prunes the
-  ``layer=``, ``key_col=`` AND ``key_row=`` levels driver-side (cheap
-  single-level listings through the Hadoop FileSystem API, so it works
-  on ``s3a://``/``hdfs://``/``file:`` roots exactly like the
-  reference's direct S3 reads) and hands Spark only the in-range tile
-  directories with ``basePath`` set — a continent-wide catalog never
-  gets a full recursive listing for a watershed-sized query. Windows
-  wider than ``_ROW_PRUNE_MAX_COLS`` key columns skip the row-level
-  listings (PartitionFilters still prunes declaratively). A root that
-  no filesystem can list degrades to full-tree discovery WITH a
-  warning.
-- Planning a read launches no Spark job, as the reference fetches
-  tiles with no schema or listing pass (Utils.scala:22-23, 241-248):
-  the schema is declared from the ``_layout.json`` sidecar's value
-  type instead of inferred from a file footer, and Spark re-lists the
-  handed-over tile directories on the driver (``session.get_spark``
-  raises ``spark.sql.sources.parallelPartitionDiscovery.threshold`` to
-  1024) instead of shipping the listing to executors as a job. Only a
+- A read lists no directory: the file paths come from the sidecar, so a
+  continent-wide catalog costs a watershed query one small sidecar read
+  per layer and one file open per in-range block, on ``s3a://``/
+  ``hdfs://``/``file:`` roots alike (the reference reads S3 directly,
+  Utils.scala:22-23). Listing happens once per ingest, when
+  :func:`write_layer` records the layer's files through the Hadoop
+  FileSystem API.
+- Planning a read launches no Spark job, as the reference fetches tiles
+  with no schema or listing pass: the schema is declared from the
+  sidecar's value type instead of inferred from a file footer. Only a
   layer written without a recorded value type pays an inference job.
 - Tile-interior pixels stay long-form ``(cell_col, cell_row, value)``:
-  parquet RLE/dictionary encodes the two cell coordinates to almost
-  nothing, the vectorized reader keeps the scan JVM-side, and the pixel
-  schema matches ``operators.zonal`` with zero reshaping.
+  parquet RLE/dictionary encodes the coordinates to almost nothing, the
+  vectorized reader keeps the scan JVM-side, and the pixel schema
+  matches ``operators.zonal`` with zero reshaping.
 """
 
 from __future__ import annotations
 
-import logging
+import json
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,16 +65,17 @@ from pyspark.sql import functions as F
 
 from mmw_geoprocessing_spark.geometry import GridLayout, bbox
 
-logger = logging.getLogger(__name__)
-
 PIXEL_KEY = ["key_col", "key_row", "cell_col", "cell_row"]
 PIXEL_COLS = [*PIXEL_KEY, "value"]
 
-# above this many in-range key_col directories, skip the second
-# (key_row) listing level: one listStatus per key_col dir is cheap for
-# watershed-sized windows but needless for continent-sized ones, where
-# Catalyst's PartitionFilters already prune the row level declaratively
-_ROW_PRUNE_MAX_COLS = 256
+# pixels per block file at most (see block_tiles)
+BLOCK_PIXELS = 1 << 16
+
+
+def block_tiles(tile_size: int) -> int:
+    """B, the side of a block in tiles: the largest B with
+    B² x tile_size² <= ``BLOCK_PIXELS``, at least 1."""
+    return max(1, math.isqrt(BLOCK_PIXELS) // tile_size)
 
 
 def _has_scheme(path: str) -> bool:
@@ -88,8 +99,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 def _list_dir(spark: SparkSession | None, path: str) -> list[str] | None:
     """Child entry NAMES of a directory. Local fast path first; else the
-    Hadoop FileSystem API. None = could not list (caller falls back to
-    full-tree discovery and LOGS it — the r5 silent-degrade fix)."""
+    Hadoop FileSystem API. None = could not list."""
     if not _has_scheme(path):
         try:
             return os.listdir(path)
@@ -169,40 +179,50 @@ def write_layer(
     layout: GridLayout | None = None,
     zoom: int | None = None,
 ) -> None:
-    """Materialize one pixel table into the catalog layout.
+    """Materialize one pixel table into the catalog's tile-block layout.
 
-    ``pixels``: ``(key_col, key_row, cell_col, cell_row, value)``.
-    Rows are repartitioned by tile key before the write so each tile
-    directory receives one file from one task (no small-file spray when
-    the input partitioning doesn't align with the key grid).
+    ``pixels``: ``(key_col, key_row, cell_col, cell_row, value)``. Rows
+    are repartitioned by block and sorted by tile key, so each block
+    receives one file from one task. B comes from ``layout``'s tile size
+    (the fixture grid's when None; :func:`block_tiles`).
 
-    ``layout``/``zoom``: optional grid metadata persisted as a
+    ``layout``/``zoom``: optional grid metadata persisted in the
     ``_layout.json`` sidecar in the layer directory — the catalog
     equivalent of the reference deriving ``TileLayerMetadata`` from the
     stored layer (Geoprocessing.scala:219-221); readers recover it with
     :func:`read_layer_layout` / :func:`register_zoom_layouts`. The
-    sidecar also records the layer's value type so empty pruned reads
-    stay schema-identical to non-empty ones.
+    sidecar also records the layer's value type, from which reads
+    declare their schema (so empty pruned reads stay schema-identical
+    to non-empty ones), and the manifest of block files that reads take
+    their paths from.
 
-    Idempotent re-ingest: the write uses DYNAMIC partition overwrite —
-    only the ``(layer, key_col, key_row)`` partitions present in
-    ``pixels`` are replaced, other layers in the same root are
-    untouched, and re-running an ingest replaces the layer's tiles
-    instead of silently appending duplicate pixel rows (which would
-    corrupt every downstream count/average).
+    Idempotent re-ingest: a block is the unit a write replaces. The write
+    uses DYNAMIC partition overwrite — only the ``(layer, block_col,
+    block_row)`` blocks present in ``pixels`` are replaced, other blocks
+    and other layers in the same root are untouched, and re-running an
+    ingest replaces the layer's blocks instead of appending duplicate
+    pixel rows (which would corrupt every downstream count/average).
+    The manifest is then rebuilt from a listing of the layer's blocks,
+    so it names the files on disk, old blocks included.
     """
+    spark = pixels.sparkSession
+    B = block_tiles((layout or GridLayout()).tile_size)
     value_type = pixels.schema["value"].dataType.simpleString()
     (
         # INT coordinates: the schema read_layer declares for the files
         pixels.select(*(F.col(c).cast("int").alias(c) for c in PIXEL_KEY), "value")
         .withColumn("layer", F.lit(layer_id))
-        .repartition("key_col", "key_row")
-        .write.partitionBy("layer", "key_col", "key_row")
+        # floor, not integer division: blocks of negative keys match the
+        # reader's Python // (a key of -1 is in block -1, not 0)
+        .withColumn("block_col", F.floor(F.col("key_col") / B).cast("int"))
+        .withColumn("block_row", F.floor(F.col("key_row") / B).cast("int"))
+        .repartition("block_col", "block_row")
+        .sortWithinPartitions("layer", "block_col", "block_row", *PIXEL_KEY)
+        .write.partitionBy("layer", "block_col", "block_row")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .parquet(root)
     )
-    import json
 
     meta: dict = {"value_type": value_type}
     if layout is not None:
@@ -214,22 +234,52 @@ def write_layer(
         )
         if zoom is not None:
             meta["zoom"] = zoom
-    _write_text(
-        pixels.sparkSession,
-        os.path.join(root, f"layer={layer_id}", "_layout.json"),
-        json.dumps(meta),
-    )
+    meta["block_tiles"] = B
+    meta["blocks"] = _list_blocks(spark, root, layer_id)
+    _write_text(spark, os.path.join(_layer_dir(root, layer_id), "_layout.json"), json.dumps(meta))
+
+
+def _layer_dir(root: str, layer_id: str) -> str:
+    return os.path.join(root, f"layer={layer_id}")
+
+
+def _list_blocks(spark: SparkSession, root: str, layer_id: str) -> list[list]:
+    """``[block_col, block_row, [file, ...]]`` for every block of the
+    layer, files relative to its directory; OSError when a level cannot
+    be listed (a manifest missing blocks would silently drop pixels)."""
+    layer_dir = _layer_dir(root, layer_id)
+
+    def listed(path: str) -> list[str]:
+        entries = _list_dir(spark, path)
+        if entries is None:
+            raise OSError(f"cannot list {path} to record the layer's block files")
+        return entries
+
+    def children(rel: str, prefix: str) -> list[tuple[int, str]]:
+        return sorted(
+            (int(e[len(prefix):]), os.path.join(rel, e))
+            for e in listed(os.path.join(layer_dir, rel))
+            if e.startswith(prefix)
+        )
+
+    # a write of no pixels creates no layer directory
+    if f"layer={layer_id}" not in listed(root):
+        return []
+    blocks = []
+    for bc, col_dir in children("", "block_col="):
+        for br, block_dir in children(col_dir, "block_row="):
+            # Spark's own rule for data files: no _ or . prefix
+            entries = listed(os.path.join(layer_dir, block_dir))
+            files = sorted(e for e in entries if not e.startswith(("_", ".")))
+            blocks.append([bc, br, [f"{block_dir}/{f}" for f in files]])
+    return blocks
 
 
 def read_layer_meta(root: str, layer_id: str) -> dict:
     """The layer's ``_layout.json`` sidecar as written by
     :func:`write_layer`. Raises OSError when it is missing and
     ValueError when it is not JSON."""
-    import json
-
-    return json.loads(
-        _read_text(None, os.path.join(root, f"layer={layer_id}", "_layout.json"))
-    )
+    return json.loads(_read_text(None, os.path.join(_layer_dir(root, layer_id), "_layout.json")))
 
 
 def read_layer_layout(root: str, layer_id: str) -> tuple[GridLayout, int | None]:
@@ -250,15 +300,6 @@ def layout_from_meta(layer_id: str, meta: dict) -> tuple[GridLayout, int | None]
         cellsize=float(meta["cellsize"]),
     )
     return layout, meta.get("zoom")
-
-
-def read_layer_value_type(root: str, layer_id: str) -> str | None:
-    """The layer's ``value`` column type as recorded at write time
-    (``_layout.json`` sidecar), or None when unknowable."""
-    try:
-        return read_layer_meta(root, layer_id).get("value_type")
-    except (OSError, ValueError):
-        return None
 
 
 def register_zoom_layouts(root: str, layer_ids: list[str]) -> dict[int, GridLayout]:
@@ -292,8 +333,6 @@ def key_bounds_for_polys(
     The driver-side derivation of the reference's ``Intersects(aoi)``
     tile filter: the polygon bbox in grid units, floored to tile keys.
     """
-    import math
-
     layout = layout or GridLayout()
     T = layout.tile_size
     rings = [[layout.to_grid(x, y) for x, y in ring] for poly in polys for ring in poly]
@@ -306,67 +345,36 @@ def key_bounds_for_polys(
     )
 
 
-def _prune_children(
-    entries: list[str], prefix: str, lo: int, hi: int
-) -> list[str]:
-    """Partition-directory names ``prefix<int>`` with lo <= int <= hi."""
-    out = []
-    for e in entries:
-        if e.startswith(prefix):
-            try:
-                v = int(e[len(prefix) :])
-            except ValueError:
-                continue
-            if lo <= v <= hi:
-                out.append(e)
-    return sorted(out)
-
-
 def _pruned_layer_paths(
     root: str,
     layer_id: str,
     key_bounds: tuple[int, int, int, int] | None,
-    spark: SparkSession | None = None,
+    meta: dict,
 ) -> list[str]:
-    """Driver-side partition-discovery pruning: list ONLY the ``layer=``
-    level, its in-range ``key_col=`` children, and (for windows up to
-    ``_ROW_PRUNE_MAX_COLS`` columns wide) their in-range ``key_row=``
-    children. Listings go through the Hadoop FileSystem API when
-    ``os.listdir`` can't serve the root (``s3a://``/``hdfs://``/
-    ``file:`` URIs) — the reference reads S3 directly (Utils.scala:
-    22-23). Returns the sub-directory paths Spark should discover
-    under; empty list means the layer has no in-range tile directory.
-    A root no filesystem can list falls back to full-tree discovery
-    with declarative PartitionFilters only — and WARNS (the r5 silent
-    degrade)."""
-    layer_dir = os.path.join(root, f"layer={layer_id}")
+    """The files of the layer's blocks that intersect the inclusive tile-key
+    window ``key_bounds`` (every block when None), taken from the sidecar
+    manifest ``meta`` without listing a directory. Empty list: no block
+    is in range."""
+    if "blocks" not in meta:
+        raise ValueError(
+            f"layer {layer_id!r} under {root} has no block manifest in its "
+            "_layout.json; re-ingest it with write_layer"
+        )
+    B = int(meta["block_tiles"])
     if key_bounds is None:
-        return [layer_dir]
-    kc0, kc1, kr0, kr1 = key_bounds
-    entries = _list_dir(spark, layer_dir)
-    if entries is None:
-        logger.warning(
-            "catalog: cannot list %s driver-side; falling back to full-tree "
-            "partition discovery (declarative pruning only). At object-store "
-            "scale this lists the whole layer tree per query.",
-            layer_dir,
-        )
-        return [layer_dir]
-    col_dirs = _prune_children(entries, "key_col=", kc0, kc1)
-    if len(col_dirs) > _ROW_PRUNE_MAX_COLS:
-        return [os.path.join(layer_dir, c) for c in col_dirs]
-    out = []
-    for c in col_dirs:
-        col_path = os.path.join(layer_dir, c)
-        children = _list_dir(spark, col_path)
-        if children is None:
-            out.append(col_path)
-            continue
-        out.extend(
-            os.path.join(col_path, r)
-            for r in _prune_children(children, "key_row=", kr0, kr1)
-        )
-    return out
+        bc0 = br0 = -math.inf
+        bc1 = br1 = math.inf
+    else:
+        kc0, kc1, kr0, kr1 = key_bounds
+        # floor division, as the writer's F.floor: correct for negative keys
+        bc0, bc1, br0, br1 = kc0 // B, kc1 // B, kr0 // B, kr1 // B
+    layer_dir = _layer_dir(root, layer_id)
+    return [
+        f"{layer_dir}/{f}"
+        for bc, br, files in meta["blocks"]
+        if bc0 <= bc <= bc1 and br0 <= br <= br1
+        for f in files
+    ]
 
 
 def read_layer(
@@ -375,48 +383,50 @@ def read_layer(
     layer_id: str,
     key_bounds: tuple[int, int, int, int] | None = None,
     value_type: str | None = None,
+    meta: dict | None = None,
 ) -> DataFrame:
     """Read one layer from the catalog as a zonal-compatible pixel table.
 
     ``key_bounds``: inclusive ``(kc0, kc1, kr0, kr1)`` tile-key window
-    (from ``key_bounds_for_polys``). When given, the window is applied
-    as partition-column predicates — Catalyst shows them under
-    ``PartitionFilters`` and never reads out-of-range tile directories —
-    and the ``key_col`` level is additionally pruned driver-side before
-    discovery (see module notes).
+    (from ``key_bounds_for_polys``). When given, only the files of the
+    blocks it touches are handed to Spark, and the window is a data
+    filter Spark pushes into the parquet scan (``PushedFilters``), which
+    drops the blocks' out-of-window tiles.
 
     ``value_type``: the layer's ``value`` column type. Default: the
-    write-time type recorded in the ``_layout.json`` sidecar. With a
-    type the read declares its schema and plans without a Spark job; a
-    fully-pruned-empty read keeps it too, so a DOUBLE layer like slope
-    does not come back INT and break downstream unions. Without one
-    (a layer written with no recorded type) the schema is inferred, and
-    an empty read falls back to INT.
+    write-time type recorded in the sidecar. With a type the read
+    declares its schema and plans without a Spark job; a fully-pruned
+    empty read keeps it too, so a DOUBLE layer like slope does not come
+    back INT and break downstream unions. Without one (a sidecar with no
+    recorded type) the schema is inferred, and an empty read falls back
+    to INT.
+
+    ``meta``: the layer's sidecar, when the caller has already read it.
 
     Output: ``(key_col, key_row, cell_col, cell_row, value)``.
     """
-    if value_type is None:
-        value_type = read_layer_value_type(root, layer_id)
-    paths = _pruned_layer_paths(root, layer_id, key_bounds, spark)
+    if meta is None:
+        meta = read_layer_meta(root, layer_id)
+    value_type = value_type or meta.get("value_type")
+    paths = _pruned_layer_paths(root, layer_id, key_bounds, meta)
     if not paths:
         return spark.range(0).selectExpr(
             *(f"CAST(NULL AS INT) AS {c}" for c in PIXEL_KEY),
             f"CAST(NULL AS {value_type or 'int'}) AS value",
         )
-    reader = spark.read.option("basePath", root)
+    reader = spark.read
     if value_type is not None:
         reader = reader.schema(
-            f"cell_col INT, cell_row INT, value {value_type}, "
-            "layer STRING, key_col INT, key_row INT"
+            ", ".join(f"{c} INT" for c in PIXEL_KEY) + f", value {value_type}"
         )
-    df = reader.parquet(*paths).where(F.col("layer") == layer_id)
+    df = reader.parquet(*paths)
     if key_bounds is not None:
-        # SQL text: one parsed predicate and one projection instead of a
-        # py4j call per Column, which made up most of a read's planning time
+        # SQL text: one parsed predicate instead of a py4j call per
+        # Column, which made up most of a read's planning time
         df = df.where(
             "key_col BETWEEN {} AND {} AND key_row BETWEEN {} AND {}".format(*map(int, key_bounds))
         )
-    return df.selectExpr(*(f"CAST({c} AS INT) AS {c}" for c in PIXEL_KEY), "value")
+    return df
 
 
 def read_layers_for_aoi(
@@ -425,19 +435,19 @@ def read_layers_for_aoi(
     layer_ids: list[str],
     polys,
     layout: GridLayout | None = None,
-    value_types: dict[str, str | None] | None = None,
+    metas: dict[str, dict] | None = None,
 ) -> list[DataFrame]:
     """The reference's ``cropRastersToAOI`` (Utils.scala:34-41): one
     bbox-pruned scan per requested layer, ready to be LEFT-joined onto
     the AOI mask by ``zonal.mask_join``. Duplicate ids are read once (U3,
     Geoprocessing.scala:28-29).
 
-    ``value_types``: layer value types the caller has already read from
-    the sidecars; ``read_layer`` looks up any layer missing from it."""
+    ``metas``: layer sidecars the caller has already read;
+    ``read_layer`` reads any layer missing from it."""
     key_bounds = key_bounds_for_polys(polys, layout) if polys else None
-    value_types = value_types or {}
+    metas = metas or {}
     seen: dict[str, DataFrame] = {}
     for lid in layer_ids:
         if lid not in seen:
-            seen[lid] = read_layer(spark, root, lid, key_bounds, value_types.get(lid))
+            seen[lid] = read_layer(spark, root, lid, key_bounds, meta=metas.get(lid))
     return [seen[lid] for lid in layer_ids]

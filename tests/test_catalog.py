@@ -1,21 +1,24 @@
-"""External partitioned layer-catalog reader (sources/catalog.py).
+"""External tile-block layer catalog (sources/catalog.py).
 
-Pins the production-source contract: a ``layer=/key_col=/key_row=``
-parquet directory reads back into zonal-compatible pixel tables, an
-AOI bbox becomes PARTITION pruning (PartitionFilters in the scan, the
-Spark analogue of the reference's Intersects() pushdown,
-Utils.scala:241-248), and catalog-fed zonal queries agree exactly with
-the fixture-fed ones.
+Pins the production-source contract: a ``layer=/block_col=/block_row=``
+store of tile-block parquet files, listed in the layer's ``_layout.json``
+manifest, reads back into zonal-compatible pixel tables; an AOI bbox
+selects the in-range block files without listing a directory and stays a
+key-window filter in the scan's ``PushedFilters`` (the Spark analogue of
+the reference's Intersects() pushdown, Utils.scala:241-248); and
+catalog-fed zonal queries agree exactly with the fixture-fed ones.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from mmw_geoprocessing_spark.geometry import GridLayout
 from mmw_geoprocessing_spark.operators import zonal
 from mmw_geoprocessing_spark.sources import catalog, fixtures as fx
 
@@ -24,7 +27,7 @@ CATALOG_ROOT = "/tmp/spark_graft_layer_catalog"
 
 @pytest.fixture(scope="module")
 def layer_catalog(spark, tables):
-    """Write the nlcd + soil fixture pixel tables into a real partitioned
+    """Write the nlcd + soil fixture pixel tables into a real tile-block
     catalog directory, as a deployment's ingest job would."""
     shutil.rmtree(CATALOG_ROOT, ignore_errors=True)
     for rid in ("nlcd", "soil"):
@@ -37,6 +40,44 @@ def _scan_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _pushed_filters(df) -> str:
+    """The parquet scan's PushedFilters, not abbreviated as in the plan
+    string."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.length())]
+    return "".join(
+        n.metadata().apply("PushedFilters") for n in scans if n.nodeName().startswith("Scan parquet")
+    )
+
+
+def _layer_files(root: str, layer_id: str) -> set[str]:
+    """The data files under a local layer directory, relative to it."""
+    layer_dir = os.path.join(root, f"layer={layer_id}")
+    return {
+        os.path.relpath(os.path.join(d, f), layer_dir)
+        for d, _, fs in os.walk(layer_dir)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith(".")
+    }
+
+
+def _manifest_files(root: str, layer_id: str) -> set[str]:
+    return {f for _, _, fs in catalog.read_layer_meta(root, layer_id)["blocks"] for f in fs}
+
+
+def _grid_layer(spark, cols, rows, value_offset=0):
+    """Two pixels in every tile of the key ranges ``cols`` x ``rows``;
+    the value encodes the tile key."""
+    return spark.createDataFrame(
+        [(c, r, cc, 0, c * 1000 + r + value_offset) for c in cols for r in rows for cc in (0, 1)],
+        "key_col INT, key_row INT, cell_col INT, cell_row INT, value INT",
+    )
+
+
+# 64x64 tiles: B = 4, so a small synthetic layer spans several blocks
+BLOCKY = GridLayout(tile_size=64)
+
+
 def test_catalog_roundtrip_matches_fixture(spark, layer_catalog):
     """Unpruned read returns exactly the written pixel set."""
     got = catalog.read_layer(spark, layer_catalog, "nlcd")
@@ -47,17 +88,15 @@ def test_catalog_roundtrip_matches_fixture(spark, layer_catalog):
     assert want.exceptAll(got).count() == 0
 
 
-def test_bbox_read_has_partition_filters(spark, layer_catalog):
-    """The key-window predicates must land in PartitionFilters (directory
-    pruning), NOT as data filters evaluated per row."""
+def test_bbox_read_has_pushed_filters(spark, layer_catalog):
+    """The key-window predicates must be pushed into the parquet scan
+    (PushedFilters), where row-group statistics of the key-sorted block
+    files drop out-of-window rows, and the read returns only them."""
     df = catalog.read_layer(spark, layer_catalog, "nlcd", key_bounds=(2, 5, 0, 1))
-    plan = _scan_plan(df)
-    assert "PartitionFilters" in plan
-    pf = plan[plan.index("PartitionFilters") :].splitlines()[0]
-    for frag in ("key_col", "key_row"):
+    pf = _pushed_filters(df)
+    for frag in ("GreaterThanOrEqual(key_col,2)", "LessThanOrEqual(key_col,5)",
+                 "GreaterThanOrEqual(key_row,0)", "LessThanOrEqual(key_row,1)"):
         assert frag in pf, pf
-    # the window predicates are partition-level: no key_col/key_row in
-    # the post-scan Filter over data columns
     assert df.count() > 0
     vals = df.select(
         F.min("key_col"), F.max("key_col"), F.min("key_row"), F.max("key_row")
@@ -65,16 +104,39 @@ def test_bbox_read_has_partition_filters(spark, layer_catalog):
     assert vals[0] >= 2 and vals[1] <= 5 and vals[2] >= 0 and vals[3] <= 1
 
 
-def test_bbox_read_prunes_discovery_paths(spark, layer_catalog):
-    """Driver-side key_col pruning: out-of-range key_col subtrees are not
-    even handed to partition discovery."""
-    paths = catalog._pruned_layer_paths(layer_catalog, "nlcd", (2, 5, 0, 0))
-    assert len(paths) == 4
-    assert all(f"key_col={c}" in p for c, p in zip((2, 3, 4, 5), paths))
-    # fully out-of-range window -> no paths -> empty, schema-stable DF
-    empty = catalog.read_layer(spark, layer_catalog, "nlcd", key_bounds=(999, 1000, 0, 0))
-    assert empty.count() == 0
-    assert empty.columns == ["key_col", "key_row", "cell_col", "cell_row", "value"]
+def test_bbox_read_prunes_discovery_paths(spark, tables):
+    """Only the files of in-range blocks are handed to Spark: the
+    manifest selects them by block window, and each block is one file."""
+    root = "/tmp/spark_graft_blocks_catalog"
+    shutil.rmtree(root, ignore_errors=True)
+    try:
+        catalog.write_layer(_grid_layer(spark, range(12), range(6)), root, "g", layout=BLOCKY)
+        meta = catalog.read_layer_meta(root, "g")
+        # B x B tiles of at most 2^16 pixels: 32 at 8x8, 4 at 64x64, 1 at 512x512
+        assert [catalog.block_tiles(t) for t in (8, 64, 512)] == [32, 4, 1]
+        assert meta["block_tiles"] == 4
+        assert sorted((bc, br) for bc, br, _ in meta["blocks"]) == [
+            (bc, br) for bc in range(3) for br in range(2)
+        ]
+        assert all(len(files) == 1 for _, _, files in meta["blocks"])
+        # key cols 2..5 -> blocks 0..1; key row 0 -> block 0
+        paths = catalog._pruned_layer_paths(root, "g", (2, 5, 0, 0), meta)
+        assert len(paths) == 2
+        assert [p.split("/")[-3:-1] for p in paths] == [
+            ["block_col=0", "block_row=0"], ["block_col=1", "block_row=0"]
+        ]
+        assert len(catalog._pruned_layer_paths(root, "g", None, meta)) == 6
+        got = catalog.read_layer(spark, root, "g", key_bounds=(2, 5, 0, 0))
+        assert sorted(r.value for r in got.collect()) == sorted(
+            c * 1000 for c in range(2, 6) for _ in (0, 1)
+        )
+        # fully out-of-range window -> no paths -> empty, schema-stable DF
+        assert catalog._pruned_layer_paths(root, "g", (999, 1000, 0, 0), meta) == []
+        empty = catalog.read_layer(spark, root, "g", key_bounds=(999, 1000, 0, 0))
+        assert empty.count() == 0
+        assert empty.columns == ["key_col", "key_row", "cell_col", "cell_row", "value"]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_key_bounds_for_polys_matches_rasterize_window(spark):
@@ -175,17 +237,17 @@ def test_read_layers_for_aoi_dedups_and_prunes(spark, layer_catalog):
     )
     assert len(layers) == 3
     assert layers[0] is layers[2]  # memoized, fetched once
-    plan = _scan_plan(layers[0])
-    assert "PartitionFilters" in plan
+    assert "LessThanOrEqual(key_col,1)" in _pushed_filters(layers[0])
     ext = layers[0].select(F.max("key_col"), F.max("key_row")).first()
     assert ext[0] <= 1 and ext[1] <= 1
 
 
 def test_write_layer_reingest_is_idempotent(spark, tables):
-    """ADVICE r5: re-running an ingest must REPLACE the layer's
-    partitions (dynamic partition overwrite), not append duplicate
-    pixel rows — duplicates silently corrupt every downstream
-    count/average. Other layers in the same root stay untouched."""
+    """ADVICE r5: re-running an ingest must REPLACE the layer's blocks
+    (dynamic partition overwrite), not append duplicate pixel rows —
+    duplicates silently corrupt every downstream count/average. Other
+    blocks and layers in the same root stay untouched, and the sidecar
+    manifest names exactly the files on disk."""
     root = "/tmp/spark_graft_reingest_catalog"
     shutil.rmtree(root, ignore_errors=True)
     try:
@@ -196,6 +258,25 @@ def test_write_layer_reingest_is_idempotent(spark, tables):
         assert catalog.read_layer(spark, root, "nlcd").count() == fx.raster_df(
             spark, "nlcd"
         ).count()
+        assert catalog.read_layer(spark, root, "soil").count() == n_soil
+
+        # re-ingest ONE block of a multi-block layer: that block's pixels
+        # are replaced, the other blocks keep their files and pixels
+        catalog.write_layer(_grid_layer(spark, range(8), range(4)), root, "g", layout=BLOCKY)
+        before = _layer_files(root, "g")
+        assert before == _manifest_files(root, "g") and len(before) == 2
+        kept = {f for f in before if f.startswith("block_col=1/")}
+        catalog.write_layer(
+            _grid_layer(spark, range(4), range(4), value_offset=7), root, "g", layout=BLOCKY
+        )
+        after = _layer_files(root, "g")
+        assert after == _manifest_files(root, "g") and len(after) == 2
+        assert kept <= after and (after - kept).isdisjoint(before)
+        got = [r.value for r in catalog.read_layer(spark, root, "g").collect()]
+        assert sorted(got) == sorted(
+            c * 1000 + r + (7 if c < 4 else 0) for c in range(8) for r in range(4) for _ in (0, 1)
+        )
+        assert _layer_files(root, "soil") == _manifest_files(root, "soil")
         assert catalog.read_layer(spark, root, "soil").count() == n_soil
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -221,6 +302,12 @@ def test_empty_pruned_read_preserves_value_type(spark, tables):
         assert dict(forced.dtypes)["value"] == "bigint"
         # unions of empty + non-empty now typecheck
         assert nonempty.unionByName(empty).count() == nonempty.count()
+        # a layer ingested from no pixels has no blocks and reads empty
+        catalog.write_layer(fx.raster_df(spark, "slope").limit(0), root, "none")
+        assert catalog.read_layer_meta(root, "none")["blocks"] == []
+        for key_bounds in (None, (0, 1, 0, 1)):
+            none = catalog.read_layer(spark, root, "none", key_bounds=key_bounds)
+            assert none.count() == 0 and none.schema == nonempty.schema
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -266,39 +353,34 @@ def test_catalog_serving_rejects_layout_mismatch(spark, tables, monkeypatch):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_catalog_on_uri_root_prunes_without_os_listdir(spark, tables, caplog):
+def test_catalog_on_uri_root_prunes_without_os_listdir(spark, tables):
     """Object-store hardening (reference reads S3 directly, Utils.scala:
     22-23): with a ``file:`` URI root — which os.listdir cannot serve —
-    driver-side discovery pruning must still work through the Hadoop
-    FileSystem API: in-range (key_col, key_row) leaf dirs only, bbox
-    predicates in PartitionFilters, and results identical to the plain
-    local-path read. No silent full-tree fallback."""
-    import pytest as _pytest
-
+    the write must still record the layer's block files through the
+    Hadoop FileSystem API, and a read must hand Spark only in-range
+    block files on that root, with the window in PushedFilters and
+    results identical to the plain local-path read."""
     local_root = "/tmp/spark_graft_uri_catalog"
     shutil.rmtree(local_root, ignore_errors=True)
     uri_root = f"file:{local_root}"
     try:
-        catalog.write_layer(fx.raster_df(spark, "nlcd"), uri_root, "nlcd")
+        catalog.write_layer(_grid_layer(spark, range(12), range(6)), uri_root, "g", layout=BLOCKY)
         # os.listdir genuinely cannot list this root
-        with _pytest.raises(OSError):
-            __import__("os").listdir(f"{uri_root}/layer=nlcd")
+        with pytest.raises(OSError):
+            os.listdir(f"{uri_root}/layer=g")
+        assert _manifest_files(uri_root, "g") == _layer_files(local_root, "g")
         bounds = (2, 5, 0, 1)
-        paths = catalog._pruned_layer_paths(uri_root, "nlcd", bounds, spark)
-        # both levels pruned: 4 cols x <=2 rows, every leaf in-window
-        assert paths and all("key_col=" in p and "key_row=" in p for p in paths)
-        cols = {int(p.split("key_col=")[1].split("/")[0]) for p in paths}
-        rows = {int(p.split("key_row=")[1]) for p in paths}
-        assert cols <= {2, 3, 4, 5} and rows <= {0, 1}
-        got = catalog.read_layer(spark, uri_root, "nlcd", key_bounds=bounds)
-        assert "PartitionFilters" in _scan_plan(got)
-        want = catalog.read_layer(spark, local_root, "nlcd", key_bounds=bounds)
-        assert got.count() == want.count() > 0
+        meta = catalog.read_layer_meta(uri_root, "g")
+        paths = catalog._pruned_layer_paths(uri_root, "g", bounds, meta)
+        assert len(paths) == 2 and all(p.startswith(f"{uri_root}/layer=g/block_col=") for p in paths)
+        got = catalog.read_layer(spark, uri_root, "g", key_bounds=bounds)
+        assert "LessThanOrEqual(key_col,5)" in _pushed_filters(got)
+        want = catalog.read_layer(spark, local_root, "g", key_bounds=bounds)
+        assert got.count() == want.count() == 16
         assert got.exceptAll(want).count() == 0
-        # sidecar readers work through the FS API too (value_type was
-        # written via the Hadoop path on the URI root)
-        assert catalog.read_layer_value_type(uri_root, "nlcd") == "int"
-        empty = catalog.read_layer(spark, uri_root, "nlcd", key_bounds=(900, 901, 0, 0))
+        # the sidecar was written and is read through the FS API
+        assert meta["value_type"] == "int"
+        empty = catalog.read_layer(spark, uri_root, "g", key_bounds=(900, 901, 0, 0))
         assert empty.count() == 0 and dict(empty.dtypes)["value"] == "int"
     finally:
         shutil.rmtree(local_root, ignore_errors=True)
@@ -311,7 +393,7 @@ def test_catalog_on_viewfs_root_prunes_and_reads(spark, tables):
     exist here — recorded in SCALE.md. Instead: a ``viewfs://`` mount
     table, a REAL non-local Hadoop FileSystem scheme resolved purely
     through ``fs.viewfs.*`` config, driving the exact
-    ``FileSystem.get(URI, conf)`` discovery/pruning path an s3a root
+    ``FileSystem.get(URI, conf)`` listing and read path an s3a root
     would take (reference reads S3 directly, Utils.scala:22-23)."""
     local_root = "/tmp/spark_graft_viewfs_catalog"
     shutil.rmtree(local_root, ignore_errors=True)
@@ -320,51 +402,113 @@ def test_catalog_on_viewfs_root_prunes_and_reads(spark, tables):
     hconf.set("fs.viewfs.mounttable.sandbox.link./cat", f"file:{local_root}")
     root = "viewfs://sandbox/cat"
     try:
-        catalog.write_layer(fx.raster_df(spark, "nlcd"), root, "nlcd")
+        catalog.write_layer(_grid_layer(spark, range(12), range(6)), root, "g", layout=BLOCKY)
+        assert _manifest_files(root, "g") == _layer_files(local_root, "g")
         bounds = (2, 5, 0, 1)
-        paths = catalog._pruned_layer_paths(root, "nlcd", bounds, spark)
-        assert paths and all(p.startswith("viewfs://sandbox/") for p in paths)
-        assert all("key_col=" in p and "key_row=" in p for p in paths)
-        got = catalog.read_layer(spark, root, "nlcd", key_bounds=bounds)
-        assert "PartitionFilters" in _scan_plan(got)
-        want = catalog.read_layer(spark, local_root, "nlcd", key_bounds=bounds)
-        assert got.count() == want.count() > 0
+        meta = catalog.read_layer_meta(root, "g")
+        paths = catalog._pruned_layer_paths(root, "g", bounds, meta)
+        assert len(paths) == 2 and all(p.startswith("viewfs://sandbox/cat/layer=g/") for p in paths)
+        got = catalog.read_layer(spark, root, "g", key_bounds=bounds)
+        assert "LessThanOrEqual(key_col,5)" in _pushed_filters(got)
+        want = catalog.read_layer(spark, local_root, "g", key_bounds=bounds)
+        assert got.count() == want.count() == 16
         assert got.exceptAll(want).count() == 0
-        assert catalog.read_layer_value_type(root, "nlcd") == "int"
+        assert meta["value_type"] == "int"
     finally:
         hconf.unset("fs.viewfs.mounttable.sandbox.link./cat")
         shutil.rmtree(local_root, ignore_errors=True)
 
 
-def test_unlistable_root_warns_and_degrades_declaratively(spark, caplog):
-    """A root NO filesystem can list must fall back to full-tree
-    discovery loudly (logged warning), not silently."""
-    import logging
-
-    with caplog.at_level(logging.WARNING, logger="mmw_geoprocessing_spark.sources.catalog"):
-        paths = catalog._pruned_layer_paths(
-            "unknownscheme://bucket/cat", "nlcd", (0, 1, 0, 1), spark
-        )
-    assert paths == ["unknownscheme://bucket/cat/layer=nlcd"]
-    assert any("full-tree" in r.message for r in caplog.records)
+def test_layer_without_block_manifest_fails_loudly(spark, layer_catalog):
+    """A layer whose sidecar lists no blocks (a store written in the old
+    one-directory-per-tile layout) is an error that says to re-ingest,
+    not a silent full-tree listing or an empty read."""
+    meta = catalog.read_layer_meta(layer_catalog, "nlcd")
+    del meta["blocks"]
+    with pytest.raises(ValueError, match="re-ingest"):
+        catalog.read_layer(spark, layer_catalog, "nlcd", key_bounds=(0, 1, 0, 1), meta=meta)
 
 
-def test_key_row_pruning_skipped_for_wide_windows(spark, tables, monkeypatch):
-    """When more than _ROW_PRUNE_MAX_COLS key_col dirs are in range,
-    the second (key_row) listing level is skipped — one listing total,
-    row pruning stays declarative via PartitionFilters."""
+def test_wide_window_reads_only_in_range_blocks(spark, tables):
+    """A window wider and taller than a block still hands Spark only the
+    files of the blocks it touches, and returns exactly its pixels."""
     root = "/tmp/spark_graft_wide_catalog"
     shutil.rmtree(root, ignore_errors=True)
     try:
-        catalog.write_layer(fx.raster_df(spark, "soil"), root, "soil")
-        monkeypatch.setattr(catalog, "_ROW_PRUNE_MAX_COLS", 4)
-        wide = (0, 31, 0, 0)  # fixture grid has 32 key_col dirs > cap
-        paths = catalog._pruned_layer_paths(root, "soil", wide, spark)
-        assert paths and all("key_row=" not in p for p in paths)
-        narrow = catalog._pruned_layer_paths(root, "soil", (0, 3, 0, 0), spark)
-        assert narrow and all("key_row=0" in p for p in narrow)
+        catalog.write_layer(_grid_layer(spark, range(16), range(12)), root, "g", layout=BLOCKY)
+        meta = catalog.read_layer_meta(root, "g")
+        assert len(meta["blocks"]) == 12
+        window = (3, 13, 1, 8)  # block cols 0..3, block rows 0..2
+        assert len(catalog._pruned_layer_paths(root, "g", window, meta)) == 12
+        narrow = (4, 7, 4, 7)  # one block
+        assert len(catalog._pruned_layer_paths(root, "g", narrow, meta)) == 1
+        got = catalog.read_layer(spark, root, "g", key_bounds=window)
+        assert sorted(r.value for r in got.collect()) == sorted(
+            c * 1000 + r for c in range(3, 14) for r in range(1, 9) for _ in (0, 1)
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_negative_tile_keys_read_exact_window(spark, tables):
+    """Catalog layers below/left of the layout origin have negative tile
+    keys (``zonal._parent_key_cols``). The writer's Spark ``floor`` and
+    the reader's Python ``//`` must put key -1 in block -1: a window
+    straddling 0 returns exactly its pixels."""
+    root = "/tmp/spark_graft_negative_catalog"
+    shutil.rmtree(root, ignore_errors=True)
+    try:
+        catalog.write_layer(_grid_layer(spark, range(-9, 9), range(-6, 6)), root, "g", layout=BLOCKY)
+        meta = catalog.read_layer_meta(root, "g")
+        assert sorted({bc for bc, _, _ in meta["blocks"]}) == [-3, -2, -1, 0, 1, 2]
+        assert sorted({br for _, br, _ in meta["blocks"]}) == [-2, -1, 0, 1]
+        for window in [(-5, 2, -1, 0), (-1, -1, -4, 3), (-9, -9, -6, -6), (0, 8, 0, 5)]:
+            kc0, kc1, kr0, kr1 = window
+            got = catalog.read_layer(spark, root, "g", key_bounds=window)
+            assert sorted(r.value for r in got.collect()) == sorted(
+                c * 1000 + r for c in range(kc0, kc1 + 1) for r in range(kr0, kr1 + 1) for _ in (0, 1)
+            ), window
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_read_lists_no_directory(spark, layer_catalog, monkeypatch):
+    """A read takes its file paths from the sidecar manifest: with every
+    directory listing failing, a bounded read still returns the
+    window's pixels."""
+    want = catalog.read_layer(spark, layer_catalog, "soil", key_bounds=(2, 5, 0, 1)).collect()
+
+    def no_listing(spark, path):
+        raise AssertionError(f"read listed {path}")
+
+    monkeypatch.setattr(catalog, "_list_dir", no_listing)
+    polys = [[[(16.0, 0.0), (47.0, 0.0), (47.0, 15.0), (16.0, 15.0), (16.0, 0.0)]]]
+    soil, nlcd = catalog.read_layers_for_aoi(spark, layer_catalog, ["soil", "nlcd"], polys)
+    assert sorted(soil.collect()) == sorted(want) and want
+    assert nlcd.count() > 0
+
+
+def test_two_layer_catalog_plan_scans_each_layer_once(spark, layer_catalog):
+    """Block files carry the tile key as data, not partition columns, so
+    a 2-layer catalog RasterGroupedCount plans no dynamic partition
+    pruning subquery (which re-planned ``mask LEFT JOIN <first layer>``
+    for the second layer's scan) and scans each layer exactly once."""
+    polys = [[[(0.0, 0.0), (40.0, 0.0), (40.0, 24.0), (0.0, 24.0), (0.0, 0.0)]]]
+    layers = catalog.read_layers_for_aoi(spark, layer_catalog, ["nlcd", "soil"], polys)
+    mask = fx.mask_df(spark, "huc8_01")
+    df = zonal.raster_grouped_count(layers, mask)
+    assert df.collect()
+    plan = _scan_plan(df)
+    assert "dynamicpruning" not in plan, plan
+    # an adaptive plan prints the plan that ran and the initial plan,
+    # whose subqueries held the pruning scans: check both
+    sections = plan.split("== Initial Plan ==")
+    assert len(sections) == 2, plan
+    for section in sections:
+        scans = [ln for ln in section.splitlines() if "FileScan parquet" in ln]
+        assert len(scans) == 2, section
+        assert sum("layer=nlcd/" in ln for ln in scans) == 1
+        assert sum("layer=soil/" in ln for ln in scans) == 1
 
 
 def test_multi_reads_catalog_layers_like_run(spark, tables, monkeypatch):
@@ -415,9 +559,9 @@ def _wait_for_listener_bus(spark):
 def test_geojson_request_plans_without_spark_jobs(spark, tables, monkeypatch):
     """Building a GeoJSON request against the catalog launches no Spark
     job: the mask is rasterized on the driver into a local relation, and
-    each layer read declares its schema from the sidecar and re-lists
-    its (here 64, above Spark's default threshold of 32) tile
-    directories on the driver. Only the collect runs jobs, as in the
+    each layer read declares its schema from the sidecar and hands Spark
+    the one block file its manifest names for the window, listing no
+    directory. Only the collect runs jobs, as in the
     reference, which rasterizes in its service process and fetches the
     intersecting tiles with no schema or listing pass."""
     import json
@@ -443,8 +587,9 @@ def test_geojson_request_plans_without_spark_jobs(spark, tables, monkeypatch):
     try:
         for rid in ("nlcd", "slope"):  # INT and DOUBLE value types
             catalog.write_layer(fx.raster_df(spark, rid), root, rid, layout=geometry.GridLayout())
-        assert catalog.read_layer_value_type(root, "slope") == "double"
-        assert len(catalog._pruned_layer_paths(root, "slope", (0, 31, 0, 1), spark)) == 64
+        meta = catalog.read_layer_meta(root, "slope")
+        assert meta["value_type"] == "double"
+        assert len(catalog._pruned_layer_paths(root, "slope", (0, 31, 0, 1), meta)) == 1
         fx.grid_key_extent(spark)  # the fixture extent is cached once per session
         monkeypatch.setenv("SPARK_GRAFT_CATALOG_ROOT", root)
 
@@ -485,16 +630,18 @@ def test_driver_mask_is_a_local_relation(spark):
 
 
 def test_layer_without_sidecar_value_type_reads_by_inference(spark, tables):
-    """A layer whose sidecar records no value type (written before the
-    sidecar carried one) still reads, with its real value type, because
-    the reader falls back to schema inference."""
+    """A layer whose sidecar records no value type still reads, with its
+    real value type, because the reader falls back to schema inference
+    over the block files its manifest names."""
     root = "/tmp/spark_graft_infer_catalog"
     shutil.rmtree(root, ignore_errors=True)
     try:
         catalog.write_layer(fx.raster_df(spark, "slope"), root, "slope")
+        meta = catalog.read_layer_meta(root, "slope")
+        del meta["value_type"]
         with open(os.path.join(root, "layer=slope", "_layout.json"), "w") as f:
-            f.write("{}")
-        assert catalog.read_layer_value_type(root, "slope") is None
+            f.write(json.dumps(meta))
+        assert "value_type" not in catalog.read_layer_meta(root, "slope")
         for key_bounds in (None, (0, 31, 0, 1)):
             got = catalog.read_layer(spark, root, "slope", key_bounds=key_bounds)
             assert dict(got.dtypes)["value"] == "double"
